@@ -1166,9 +1166,9 @@ def main() -> None:
     # full S1 -> U1 -> A1 NEAR topology through availableNow
     # MULTI-micro-batch replay -- maxFilesPerTrigger=1 over 4 files
     # per topic exercises genuine cross-batch streaming state (dedup
-    # stores, stream-stream join buffers, the running balance
-    # aggregate and the keyed upsert store), where wire_pipeline
-    # drains the bridge in one balance batch.  Staging (generate +
+    # stores, stream-stream join buffers and the per-batch balance
+    # fold into the keyed store), where wire_pipeline runs one
+    # batch per replay.  Staging (generate +
     # JSON encode) is untimed producer work; same untimed-first-run +
     # min-of-2 policy as the other streaming legs.
     try:
@@ -1198,25 +1198,15 @@ def main() -> None:
                     "overwrite"
                 ).json(f"{stream_root}/fx/{sub}")
             stream_sp = max(4, min(32, n_stream // 2500))
-            # bridge_batches=4 sizes the balance replay to half 1's
-            # trigger count: per-FILE bridge replay runs one
-            # state-commit-weight micro-batch per transfer parquet file
-            # (~18 at this scale -- measured 18 balance batches for 4
-            # half-1 triggers), all fixed overhead with an identical
-            # final store.  4x4 batches is the genuine cross-batch
-            # state exercise this entry exists to time; per-file
-            # granularity remains the version-retention default.
             with _shuffle_override(spark, stream_sp):
                 run_fixture_pipeline(
                     spark, f"{stream_root}/fx", f"{stream_root}/out_warm",
-                    bridge_batches=4,
                 ).write.format("noop").mode("overwrite").save()
                 best = None
                 for rep in range(2):
                     t0 = time.perf_counter()
                     run_fixture_pipeline(
                         spark, f"{stream_root}/fx", f"{stream_root}/out{rep}",
-                        bridge_batches=4,
                     ).write.format("noop").mode("overwrite").save()
                     elapsed = time.perf_counter() - t0
                     if best is None or elapsed < best:
@@ -1250,7 +1240,6 @@ def main() -> None:
                                 spark,
                                 f"{stream_root}/fx",
                                 f"{stream_root}/out_floor{rep}",
-                                bridge_batches=4,
                             ).write.format("noop").mode(
                                 "overwrite"
                             ).save()
@@ -1285,7 +1274,6 @@ def main() -> None:
                         spark,
                         f"{stream_root}/fx_{leg}",
                         f"{stream_root}/out_{leg}",
-                        bridge_batches=4,
                     ).write.format("noop").mode("overwrite").save()
                     st_pair[leg] = round(time.perf_counter() - t0, 3)
             stress["near_topology_stream"] = {

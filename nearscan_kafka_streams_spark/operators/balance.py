@@ -16,9 +16,11 @@ order-free; it agrees with the arrival-order adder whenever
 is pinned to deterministic max_by semantics (SURVEY (S)7.4.2).
 
 Scale notes: a single hash aggregation with map-side partial
-aggregation; state (streaming) or shuffle (batch) is partitioned by
-account.  No skew concern beyond AQE's handling (one hot account still
-fits: the partial aggregate collapses per-partition rows first).
+aggregation; the shuffle is partitioned by account.  The streaming
+topology keeps no balance state: it folds each micro-batch's partial
+into the keyed store with the same merge.  No skew concern beyond
+AQE's handling (one hot account still fits: the partial aggregate
+collapses per-partition rows first).
 """
 
 from __future__ import annotations
@@ -38,28 +40,32 @@ _META_MAP = [
 ]
 
 
-def token_balances(transfers: DataFrame) -> DataFrame:
-    """token_transfer rows -> one token_balance row per account.
-
-    Works unchanged on a streaming DataFrame (update output mode keeps
-    the running state per key, the Spark analog of the KTable).
+def merge_balances(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Fold token_balance-shaped rows into one row per ``keys``:
+    ``balance`` sums, the metadata comes from the row with the max
+    (block_timestamp, index_in_chunk).  Both are associative, so folding
+    per-batch partials (the streaming store, one batch at a time) lands
+    on the same rows as one pass over every transfer (``token_balances``).
     """
-    meta = F.struct(
-        *[F.col(src).alias(dst) for src, dst in _META_MAP]
+    meta = [dst for _, dst in _META_MAP]
+    latest = F.max_by(
+        F.struct(*meta), F.struct("block_timestamp", "index_in_chunk")
     )
-    order = F.struct(
-        F.col("included_in_block_timestamp").alias("ts"),
-        F.col("index_in_chunk").alias("idx"),
-    )
-    agg = transfers.groupBy(
-        F.col("affected_account").alias("account")
-    ).agg(
-        F.sum("affected_amount").alias("balance"),
-        F.max_by(meta, order).alias("_latest"),
+    agg = rows.groupBy(*keys).agg(
+        # sum() widens decimal(38,0) -> (38,0) stays within cap; keep type
+        F.sum("balance").cast("decimal(38,0)").alias("balance"),
+        latest.alias("_latest"),
     )
     return agg.select(
-        "account",
-        # sum() widens decimal(38,0) -> (38,0) stays within cap; keep type
-        F.col("balance").cast("decimal(38,0)").alias("balance"),
-        *[F.col(f"_latest.{dst}").alias(dst) for _, dst in _META_MAP],
+        *keys, "balance", *[F.col(f"_latest.{c}").alias(c) for c in meta]
     )
+
+
+def token_balances(transfers: DataFrame) -> DataFrame:
+    """token_transfer rows -> one token_balance row per account."""
+    rows = transfers.select(
+        F.col("affected_account").alias("account"),
+        F.col("affected_amount").alias("balance"),
+        *[F.col(src).alias(dst) for src, dst in _META_MAP],
+    )
+    return merge_balances(rows, ["account"])

@@ -20,10 +20,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else cores
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -274,24 +274,27 @@ def _commit_generation(
 def foreach_batch_additive(
     key_col: str,
     target_path: str,
-    sum_cols: list[str],
+    fold: Callable[[DataFrame, list[str]], DataFrame],
     num_buckets: int = 64,
     retain_versions: int = 0,
 ) -> Callable[[DataFrame, int], None]:
-    """Incremental aggregate maintenance (additive IVM): maintain
-    per-key SUMS in the bucketed store by merging each batch's partial
-    aggregates into only the touched buckets -- history is never
-    recomputed, cost per batch is O(touched buckets), and the stored
-    table always equals `groupBy(key).sum(...)` over everything ever
-    applied.
+    """Incremental aggregate maintenance (additive IVM): fold each
+    batch into only the touched buckets of the store -- history is
+    never recomputed, cost per batch is O(touched buckets), and the
+    stored table always equals ``fold`` over everything ever applied.
+
+    ``fold(df, keys)`` groups ``df`` by ``keys`` and merges each group
+    into one row of the store's shape; it must be associative, because
+    it is applied to the batch rows together with the stored rows of
+    their keys (e.g. per-key sums, or ``operators.balance.merge_balances``).
 
     This is the other merge discipline next to ``foreach_batch_upsert``
-    (last-event-wins): upsert state REPLACES, additive state ADDS.
-    Because addition is not idempotent under foreachBatch re-delivery,
-    the manifest's committed version gates replays: a batch_id at or
-    below the committed version is a duplicate delivery and is skipped
-    (exactly-once effect for monotonically increasing batch ids --
-    Structured Streaming's contract).
+    (last-event-wins): upsert state REPLACES, additive state FOLDS.
+    Because a fold is not idempotent under foreachBatch re-delivery,
+    the manifest's committed batch id gates replays: a batch_id at or
+    below it is a duplicate delivery and is skipped (exactly-once
+    effect for monotonically increasing batch ids -- Structured
+    Streaming's contract).
     """
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -305,12 +308,9 @@ def foreach_batch_additive(
             "last_batch_id", -1
         ):
             return  # duplicate delivery: already folded in
-        batch = batch_df.groupBy(key_col).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
 
         buckets = manifest["num_buckets"] if manifest else num_buckets
-        batch = batch.withColumn(_BUCKET, _bucket_expr(key_col, buckets))
+        batch = batch_df.withColumn(_BUCKET, _bucket_expr(key_col, buckets))
         affected = sorted(
             r[0] for r in batch.select(_BUCKET).distinct().collect()
         )
@@ -325,17 +325,10 @@ def foreach_batch_additive(
             current = spark.read.parquet(*old_paths).withColumn(
                 _BUCKET, _bucket_expr(key_col, buckets)
             )
-            merged = (
-                current.unionByName(batch)
-                .groupBy(key_col, _BUCKET)
-                .agg(*[F.sum(c).alias(c) for c in sum_cols])
-            )
-        else:
-            merged = batch
-
+            batch = current.unionByName(batch)
         _commit_generation(
-            target_path, merged, affected, manifest, buckets,
-            key_col, batch_id, retain_versions,
+            target_path, fold(batch, [key_col, _BUCKET]), affected, manifest,
+            buckets, key_col, batch_id, retain_versions,
             extra={"last_batch_id": batch_id},
         )
 

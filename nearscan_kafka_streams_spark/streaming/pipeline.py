@@ -1,29 +1,42 @@
 """Streaming shell over the shared operator functions.
 
-Topology parity (TokenBalance.buildKafkaStreams, TokenBalance.java:74-336):
+Topology parity (TokenBalance.buildKafkaStreams, TokenBalance.java:74-336),
+one streaming query with one checkpoint:
 
-  stream x3 --dedup--> join --join--> filter+flatMap --> transfers (append)
-  transfers --groupBy(account).agg--> balances (update-mode changelog)
+  stream x3 --dedup--> join --join--> filter+flatMap --> foreachBatch:
+    1. overwrite ``token_transfer/batch=<id>`` with the batch's transfers
+    2. fold that batch's ``token_balances`` partial into the keyed store
 
-Like the reference -- whose two halves are bridged by the
-``token_transfer`` topic (S3 at :274-276, re-consumed for the aggregate
-via the groupBy repartition topic :279-280) -- the streaming pipeline
-runs as two queries bridged by the transfer sink.  That sidesteps the
-update-mode-after-stream-stream-join restriction with the exact
-structure the reference itself uses (SURVEY (S)7.4.5).
+The reference writes the ``token_transfer`` topic (S3 at :274-276) and
+re-consumes it for the balance aggregate (:279-280); here the same
+batch function that writes the topic's rows folds the balances.  The
+balance needs no streaming state: it is a sum plus a composite
+``max_by`` (``operators.balance.merge_balances``), so per-batch partials
+merge into the store.  Both writes are idempotent per batch id -- the
+transfer partition is overwritten, and the store's replay guard skips a
+batch it already folded -- so a restart at any point replays to the
+same store (Structured Streaming's replayable-source + idempotent-sink
+contract).
 
 State bounds at scale: dedup state expires at the watermark (30 min,
 mirroring the reference's windowed store), join buffers at watermark +
-join tolerance, balance aggregate state is one row per account
-(unbounded by design -- the KTable equivalent).
+join tolerance; the balance store holds one row per account (unbounded
+by design -- the KTable equivalent) outside the query's state.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from contextlib import contextmanager
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 
 from nearscan_kafka_streams_spark.config import DEFAULT_CONFIG, PipelineConfig
-from nearscan_kafka_streams_spark.operators.balance import token_balances
+from nearscan_kafka_streams_spark.operators.balance import (
+    merge_balances,
+    token_balances,
+)
 from nearscan_kafka_streams_spark.operators.dedup import dedup_stream
 from nearscan_kafka_streams_spark.operators.joins import (
     join_receipts_outcomes_actions_stream,
@@ -33,7 +46,13 @@ from nearscan_kafka_streams_spark.schemas import (
     ACTION_RECEIPT_ACTIONS_SCHEMA,
     EXECUTION_OUTCOMES_SCHEMA,
     RECEIPTS_SCHEMA,
+    TOKEN_TRANSFER_SCHEMA,
     TOPIC_SCHEMAS,
+)
+from nearscan_kafka_streams_spark.sinks.upsert import (
+    _load_manifest,
+    foreach_batch_additive,
+    read_store,
 )
 from nearscan_kafka_streams_spark.sources.files import read_fixture_stream
 
@@ -82,28 +101,17 @@ def run_fixture_pipeline(
     out_dir: str,
     config: PipelineConfig = DEFAULT_CONFIG,
     retain_versions: int = 0,
-    bridge_batches: int | None = None,
 ) -> DataFrame:
     """End-to-end streaming run over JSON fixture directories
     (``{fixture_dir}/receipts`` etc.), multi-micro-batch via
     maxFilesPerTrigger=1 + availableNow -- exercises real streaming
-    state.  Returns the final balances read from the keyed upsert store
-    fed by the update-mode streaming aggregate -- bit-identical to
-    ``pipeline.run_batch`` (tight join window) on the same inputs.
+    state.  Returns the final balances read from the keyed upsert
+    store -- bit-identical to ``pipeline.run_batch`` (tight join window)
+    on the same inputs.
 
     ``retain_versions`` > 0 keeps per-micro-batch store history so
     ``read_store_as_of`` / ``store_changelog`` can audit the balance
     changelog after the run (the reference's compacted-topic replay).
-
-    ``bridge_batches`` caps the balance replay's micro-batch count: the
-    bridge holds one parquet file per non-empty transfer partition per
-    half-1 trigger (~shuffle-partitions x triggers files), and the
-    default per-file replay pays a fixed state-commit cost per file.
-    Passing N sizes ``maxFilesPerTrigger`` to ceil(files/N) AFTER the
-    bridge is written, so the balance half replays in ~N genuine
-    cross-batch triggers (matching half 1's granularity at N=triggers)
-    with an identical final store -- last-writer-wins per key.  Default
-    ``None`` keeps per-file replay (finest version-retention history).
     """
     r = read_fixture_stream(
         spark, f"{fixture_dir}/receipts", RECEIPTS_SCHEMA,
@@ -117,17 +125,30 @@ def run_fixture_pipeline(
         spark, f"{fixture_dir}/actions", ACTION_RECEIPT_ACTIONS_SCHEMA,
         TOPIC_SCHEMAS["action_receipt_actions"][1],
     )
-
     transfers = build_streaming_transfers(r, o, a, config)
-    return _run_two_query_tail(
-        spark, transfers, out_dir, retain_versions,
-        bridge_batches=bridge_batches,
-    )
+    return _run_query(spark, transfers, out_dir, retain_versions)
 
 
-class _shuffle_override:
+@contextmanager
+def _conf_override(spark: SparkSession, conf: dict[str, str | None]):
+    """Set the session conf keys whose value is not None for the block
+    and restore them after."""
+    prev = {k: spark.conf.get(k, None) for k, v in conf.items() if v is not None}
+    for k in prev:
+        spark.conf.set(k, conf[k])
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _shuffle_override(spark: SparkSession, n: int | None):
     """Temporarily set spark.sql.shuffle.partitions for the streaming
-    queries built inside the block (the value is captured per query at
+    query built inside the block (the value is captured per query at
     START and pinned into its checkpoint).  Stateful streaming cost has
     a fixed per-batch term of one state-store load+commit PER SHUFFLE
     PARTITION per stateful operator, so the partition count must be
@@ -135,21 +156,9 @@ class _shuffle_override:
     digits for a 60k-record replay (measured 2x wall on the wire
     topology going 32 -> 8 at bench scale).  ``None`` = leave the
     session setting untouched."""
-
-    _KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self._spark, self._n = spark, n
-
-    def __enter__(self):
-        if self._n is not None:
-            self._prev = self._spark.conf.get(self._KEY)
-            self._spark.conf.set(self._KEY, str(self._n))
-
-    def __exit__(self, *exc):
-        if self._n is not None:
-            self._spark.conf.set(self._KEY, self._prev)
-        return False
+    return _conf_override(
+        spark, {"spark.sql.shuffle.partitions": None if n is None else str(n)}
+    )
 
 
 def run_wire_pipeline(
@@ -174,10 +183,7 @@ def run_wire_pipeline(
     framed-record files."""
     import json as _json
 
-    from nearscan_kafka_streams_spark.schemas import (
-        avro_value_schema,
-        with_event_time,
-    )
+    from nearscan_kafka_streams_spark.schemas import avro_value_schema
     from nearscan_kafka_streams_spark.sources.pyds import (
         ConfluentAvroDataSource,
     )
@@ -185,33 +191,17 @@ def run_wire_pipeline(
     spark.dataSource.register(ConfluentAvroDataSource)
 
     def rd(topic: str, schema) -> DataFrame:
-        raw = (
+        return (
             spark.readStream.format("confluentavro")
             .schema(schema)
             .option("path", f"{log_dir}/{topic}")
             .option("avro_schema", _json.dumps(avro_value_schema(topic)))
             .load()
         )
-        return with_event_time(raw, TOPIC_SCHEMAS[topic][1])
 
-    transfers = build_streaming_transfers(
-        rd("receipts", RECEIPTS_SCHEMA),
-        rd("execution_outcomes", EXECUTION_OUTCOMES_SCHEMA),
-        rd("action_receipt_actions", ACTION_RECEIPT_ACTIONS_SCHEMA),
-        config,
+    return _run_topic_pipeline(
+        spark, rd, out_dir, config, retain_versions, shuffle_partitions
     )
-    # throughput headline: drain the bridge in one balance micro-batch
-    # (per-file replay is the fixture pipeline's state-exercise mode)
-    # -- unless per-batch version history was asked for, which only
-    # exists at micro-batch granularity
-    with _shuffle_override(spark, shuffle_partitions):
-        return _run_two_query_tail(
-            spark,
-            transfers,
-            out_dir,
-            retain_versions,
-            bridge_files_per_trigger=1 if retain_versions else None,
-        )
 
 
 def run_parquet_pipeline(
@@ -232,238 +222,118 @@ def run_parquet_pipeline(
 
     Expects ``{parquet_dir}/receipts`` etc. written as parquet with the
     topic StructTypes."""
-    from nearscan_kafka_streams_spark.schemas import with_event_time
 
     def rd(topic: str, schema) -> DataFrame:
-        raw = (
-            spark.readStream.schema(schema)
-            .parquet(f"{parquet_dir}/{topic}")
-        )
-        return with_event_time(raw, TOPIC_SCHEMAS[topic][1])
+        return spark.readStream.schema(schema).parquet(f"{parquet_dir}/{topic}")
+
+    return _run_topic_pipeline(
+        spark, rd, out_dir, config, retain_versions, shuffle_partitions
+    )
+
+
+def _run_topic_pipeline(
+    spark: SparkSession,
+    rd: Callable[[str, object], DataFrame],
+    out_dir: str,
+    config: PipelineConfig,
+    retain_versions: int,
+    shuffle_partitions: int | None,
+) -> DataFrame:
+    """Shared body of the wire and parquet entry points: ``rd(topic,
+    schema)`` opens one topic stream.
+
+    Without version retention the run is a throughput replay, so
+    no-data micro-batches are off for its duration: after the last data
+    batch the advanced watermark otherwise schedules one more batch
+    purely to EVICT join/dedup state (measured 9 s for an empty batch --
+    a RocksDB load+commit per state store per shuffle partition), which
+    emits nothing for these inner interval joins."""
+    from nearscan_kafka_streams_spark.schemas import with_event_time
+
+    def topic(name: str, schema) -> DataFrame:
+        return with_event_time(rd(name, schema), TOPIC_SCHEMAS[name][1])
 
     transfers = build_streaming_transfers(
-        rd("receipts", RECEIPTS_SCHEMA),
-        rd("execution_outcomes", EXECUTION_OUTCOMES_SCHEMA),
-        rd("action_receipt_actions", ACTION_RECEIPT_ACTIONS_SCHEMA),
+        topic("receipts", RECEIPTS_SCHEMA),
+        topic("execution_outcomes", EXECUTION_OUTCOMES_SCHEMA),
+        topic("action_receipt_actions", ACTION_RECEIPT_ACTIONS_SCHEMA),
         config,
     )
-    with _shuffle_override(spark, shuffle_partitions):
-        return _run_two_query_tail(
-            spark,
-            transfers,
-            out_dir,
-            retain_versions,
-            bridge_files_per_trigger=1 if retain_versions else None,
-        )
+    conf = {
+        "spark.sql.shuffle.partitions": (
+            None if shuffle_partitions is None else str(shuffle_partitions)
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            None if retain_versions else "false"
+        ),
+    }
+    with _conf_override(spark, conf):
+        return _run_query(spark, transfers, out_dir, retain_versions)
 
 
-def _run_two_query_tail(
+def _last_planned_batch(checkpoint: str) -> int:
+    """Highest batch id in the checkpoint's offset log, -1 if none."""
+    offsets = Path(checkpoint) / "offsets"
+    if not offsets.is_dir():
+        return -1
+    return max(
+        (int(p.name) for p in offsets.iterdir() if p.name.isdigit()),
+        default=-1,
+    )
+
+
+def _run_query(
     spark: SparkSession,
     transfers: DataFrame,
     out_dir: str,
     retain_versions: int,
-    bridge_files_per_trigger: int | None = 1,
-    bridge_batches: int | None = None,
 ) -> DataFrame:
-    """Shared back half: append transfers to the bridge, then the
-    update-mode balance aggregate into the keyed upsert store.
-
-    ``bridge_files_per_trigger`` sets the balance replay's micro-batch
-    granularity: 1 (the fixture-pipeline default) forces one micro-batch
-    per bridge file so tests exercise real multi-batch upsert state and
-    per-batch version retention; None lets availableNow drain the whole
-    bridge in one batch -- each micro-batch costs a full checkpoint
-    commit + state round-trip (~seconds of fixed overhead), so replaying
-    an N-file bridge one file at a time is N× that overhead with an
-    identical final store (last-writer-wins per key).
-
-    One-shot mode (``bridge_files_per_trigger=None``) also disables
-    no-data micro-batches for the duration of the two queries: after
-    the last data batch the advanced watermark otherwise schedules one
-    more batch purely to EVICT join/dedup state (measured 9 s for an
-    empty batch -- a RocksDB load+commit per state store per shuffle
-    partition).  Eviction emits nothing for these inner interval joins
-    and the checkpoint is throwaway in a one-shot replay, so the pass
-    is pure overhead; the fixture mode keeps the default so resumable
-    checkpoints stay compacted."""
-    one_shot = bridge_files_per_trigger is None
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    nodata_prev = spark.conf.get(nodata_key, "true")
-    if one_shot:
-        spark.conf.set(nodata_key, "false")
-    try:
-        return _run_two_query_tail_inner(
-            spark, transfers, out_dir, retain_versions,
-            bridge_files_per_trigger, bridge_batches,
-        )
-    finally:
-        if one_shot:
-            spark.conf.set(nodata_key, nodata_prev)
-
-
-def _committed_bridge_files(spark: SparkSession, dir_path: str) -> int | None:
-    """Count the files the streaming file sink COMMITTED into
-    ``dir_path``, from its ``_spark_metadata`` log.
-
-    Scheme-agnostic by construction (Hadoop FS API via the session's
-    JVM, never ``glob`` -- a plain-path glob silently returns 0 for
-    ``file:``/``hdfs://``/``s3a://`` URIs), and orphan-proof: aborted
-    task attempts leave ``part-*`` files on disk but never an entry in
-    the commit log, so sizing micro-batches from the log counts only
-    data a reader will actually see.  Log semantics: batch file ``N``
-    lists the files batch N added; ``N.compact`` supersedes everything
-    ``<= N`` -- so the committed total is the latest compact's ``add``
-    entries plus the ``add`` entries of later plain batch files.
-    Returns None when no metadata log exists (not a file-sink dir)."""
-    import json as _json
-
-    jvm = spark._jvm
-    meta = jvm.org.apache.hadoop.fs.Path(f"{dir_path}/_spark_metadata")
-    fs = meta.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(meta):
-        return None
-    batches: dict[int, tuple[bool, object]] = {}
-    for st in fs.listStatus(meta):
-        name = st.getPath().getName()
-        is_compact = name.endswith(".compact")
-        base = name[: -len(".compact")] if is_compact else name
-        if not base.isdigit():
-            continue  # .crc siblings, temp files
-        bid = int(base)
-        if is_compact or bid not in batches:
-            batches[bid] = (is_compact, st.getPath())
-    if not batches:
-        return 0
-    compact_ids = [b for b, (c, _) in batches.items() if c]
-    floor_id = max(compact_ids) if compact_ids else None
-    n = 0
-    for bid, (is_compact, path) in batches.items():
-        if floor_id is not None and (
-            bid < floor_id or (bid == floor_id and not is_compact)
-        ):
-            continue
-        # commons-io toString does NOT close its argument -- close the
-        # FSDataInputStream explicitly or every metadata-log read leaks
-        # one driver-side handle (round-10 ADVICE)
-        stream = fs.open(path)
-        try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        for line in text.splitlines():
-            line = line.strip()
-            if not line.startswith("{"):
-                continue  # version header ("v1")
-            try:
-                entry = _json.loads(line)
-            except ValueError:
-                continue
-            if entry.get("action", "add") == "add":
-                n += 1
-    return n
-
-
-def _run_two_query_tail_inner(
-    spark: SparkSession,
-    transfers: DataFrame,
-    out_dir: str,
-    retain_versions: int,
-    bridge_files_per_trigger: int | None,
-    bridge_batches: int | None = None,
-) -> DataFrame:
+    """Run the one query: per micro-batch, write the transfers and fold
+    their balances into ``{out_dir}/token_balance_store``; return the
+    store's balances."""
+    checkpoint = f"{out_dir}/ckpt"
     transfer_path = f"{out_dir}/token_transfer"
-    q1 = (
-        transfers.writeStream.format("parquet")
-        .option("path", transfer_path)
-        .option("checkpointLocation", f"{out_dir}/ckpt_transfers")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q1.awaitTermination(600):
-        q1.stop()
-        raise TimeoutError(
-            "transfer replay did not finish within 600s; bridge is partial"
-        )
-
-    # half 2: STREAMING balance aggregation in update mode over the
-    # bridged transfer store (the reference re-consumes token_transfer
-    # for the aggregate, TokenBalance.java:279-280), upserted per
-    # micro-batch into the keyed store by foreachBatch -- the
-    # sink-connector leg (README.md:273-297).  Update mode emits one
-    # latest row per changed account per batch; the upsert store keeps
-    # last-writer-wins per key, so the final store equals the batch
-    # aggregate of the bridge contents.
-    from nearscan_kafka_streams_spark.schemas import TOKEN_TRANSFER_SCHEMA
-    from nearscan_kafka_streams_spark.sinks.upsert import (
-        foreach_batch_upsert,
-        read_store,
-    )
-
-    if bridge_batches is not None:
-        # translate a target micro-batch COUNT into files-per-trigger
-        # now that the bridge exists: ceil(files/N) files per trigger
-        # replays in ~N batches regardless of how many partitions each
-        # half-1 trigger materialized (driver-side read of the sink's
-        # bounded commit log, not data).  The committed-list count is
-        # scheme-agnostic and excludes aborted-attempt orphans; a
-        # missing log after a just-finished file-sink write is
-        # unexpected, so fall back loudly rather than silently sizing
-        # the replay to 1 file per trigger (the degenerate per-file
-        # mode bridge_batches exists to avoid).
-        n_files = _committed_bridge_files(spark, transfer_path)
-        if n_files is None:
-            import warnings
-
-            warnings.warn(
-                f"no _spark_metadata log under {transfer_path!r} after "
-                "the bridge write; sizing the balance replay from a "
-                "raw Hadoop FS listing (may include aborted-attempt "
-                "orphans)",
-                stacklevel=2,
-            )
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(transfer_path)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            n_files = (
-                sum(
-                    1
-                    for st in fs.listStatus(hpath)
-                    if st.getPath().getName().startswith("part-")
-                )
-                if fs.exists(hpath)
-                else 0
-            )
-        # 0 committed files = genuinely empty bridge; one trigger
-        # drains it (correct and cheap), not the per-file degradation
-        bridge_files_per_trigger = -(-max(n_files, 1) // max(bridge_batches, 1))
-    reader = spark.readStream.schema(TOKEN_TRANSFER_SCHEMA)
-    if bridge_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", bridge_files_per_trigger)
-    transfers_stream = reader.parquet(transfer_path)
     store = f"{out_dir}/token_balance_store"
-    q2 = (
-        token_balances(transfers_stream)
-        .writeStream.foreachBatch(
-            foreach_batch_upsert(
-                "account", store, retain_versions=retain_versions
+
+    # the store's replay guard trusts batch ids: a checkpoint that never
+    # planned the batch the store last folded (reset, or a different
+    # checkpoint) would restart ids below it and every fold would be
+    # skipped as a replay
+    manifest = _load_manifest(store)
+    if manifest is not None:
+        folded = manifest.get("last_batch_id", -1)
+        if _last_planned_batch(checkpoint) < folded:
+            raise RuntimeError(
+                f"balance store {store} already folded batch {folded}, but "
+                f"checkpoint {checkpoint} has not planned it; reset the "
+                "checkpoint, the store and token_transfer together with "
+                "streaming/reset.py::reset_pipeline"
             )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", f"{out_dir}/ckpt_balances")
+
+    fold = foreach_batch_additive(
+        "account", store, merge_balances, retain_versions=retain_versions
+    )
+
+    def write_and_fold(batch: DataFrame, batch_id: int) -> None:
+        # one action on the batch (re-running it would re-execute the
+        # dedup + join plan); the fold reads back the files just written
+        part = f"{transfer_path}/batch={batch_id}"
+        batch.write.mode("overwrite").parquet(part)
+        reader = batch.sparkSession.read.schema(TOKEN_TRANSFER_SCHEMA)
+        fold(token_balances(reader.parquet(part)), batch_id)
+
+    q = (
+        transfers.writeStream.foreachBatch(write_and_fold)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    if not q2.awaitTermination(600):
-        q2.stop()
-        raise TimeoutError(
-            "balance replay did not finish within 600s; store is partial"
-        )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError("streaming replay did not finish within 600s")
     try:
         return read_store(spark, store)
     except FileNotFoundError:
-        # zero-transfer replay: no batch ever fired; empty balances
-        empty = spark.read.schema(TOKEN_TRANSFER_SCHEMA).parquet(transfer_path)
-        return token_balances(empty)
+        # no batch folded a transfer: empty balances
+        return token_balances(spark.createDataFrame([], TOKEN_TRANSFER_SCHEMA))

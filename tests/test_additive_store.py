@@ -16,10 +16,16 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, ["user_id", "n", "amount"])
 
 
+def _sums(df, keys):
+    return df.groupBy(*keys).agg(
+        F.sum("n").alias("n"), F.sum("amount").alias("amount")
+    )
+
+
 def test_additive_equals_full_recompute(spark, tmp_path):
     store = str(tmp_path / "agg")
     merge = foreach_batch_additive(
-        "user_id", store, ["n", "amount"], num_buckets=8
+        "user_id", store, _sums, num_buckets=8
     )
     batches = [
         [(1, 1, 10), (2, 1, 5)],
@@ -45,7 +51,7 @@ def test_replay_of_committed_batch_is_skipped(spark, tmp_path):
     """foreachBatch may re-deliver a batch after a sink-side success;
     addition is not idempotent, so the manifest version gates it."""
     store = str(tmp_path / "agg2")
-    merge = foreach_batch_additive("user_id", store, ["n", "amount"])
+    merge = foreach_batch_additive("user_id", store, _sums)
     merge(_batch(spark, [(1, 1, 10)]), 0)
     merge(_batch(spark, [(1, 5, 50)]), 1)
     before = read_store(spark, store).collect()
@@ -59,7 +65,7 @@ def test_replay_of_committed_batch_is_skipped(spark, tmp_path):
 def test_only_touched_buckets_rewritten(spark, tmp_path):
     store = str(tmp_path / "agg3")
     merge = foreach_batch_additive(
-        "user_id", store, ["n", "amount"], num_buckets=16
+        "user_id", store, _sums, num_buckets=16
     )
     merge(_batch(spark, [(u, 1, 1) for u in range(40)]), 0)
     gens_before = {d for d in os.listdir(store) if d.startswith("gen-")}
@@ -89,13 +95,14 @@ def test_only_touched_buckets_rewritten(spark, tmp_path):
 def test_additive_random_batches_property(spark, tmp_path):
     """Hypothesis-style randomized check (seeded, deterministic): for
     arbitrary batch splits and key collisions, the store equals the
-    one-shot aggregate of everything applied."""
+    one-shot aggregate of everything applied -- for per-key sums and
+    for the balance fold."""
     import random
 
     rng = random.Random(42)
     store = str(tmp_path / "agg_prop")
     merge = foreach_batch_additive(
-        "user_id", store, ["n", "amount"], num_buckets=4
+        "user_id", store, _sums, num_buckets=4
     )
     want: dict[int, tuple[int, int]] = {}
     bid = 0
@@ -120,6 +127,63 @@ def test_additive_random_batches_property(spark, tmp_path):
     }
     assert got == want
 
+    # the balance fold the streaming topology applies: random splits of
+    # random transfer legs, each batch's token_balances partial folded
+    # through the store, land on token_balances over all the legs --
+    # the same balance and the same winning (block_timestamp,
+    # index_in_chunk) metadata
+    from decimal import Decimal
+
+    from nearscan_kafka_streams_spark.operators.balance import (
+        merge_balances,
+        token_balances,
+    )
+    from nearscan_kafka_streams_spark.schemas import TOKEN_TRANSFER_SCHEMA
+    from tests.test_balance_properties import _transfer_row
+
+    legs = [
+        {
+            "account": rng.choice(["a.near", "b.near", "c.near", "d.near"]),
+            "amount": rng.randrange(-(10**30), 10**30),
+            "ts": rng.randrange(20),
+            "idx": rng.randrange(5),
+        }
+        for _ in range(rng.randrange(10, 30))
+    ]
+    transfers = [_transfer_row(i, d) for i, d in enumerate(legs)]
+    cuts = sorted(rng.sample(range(1, len(transfers)), 3))
+    splits = [
+        transfers[i:j] for i, j in zip([0, *cuts], [*cuts, len(transfers)])
+    ]
+    balance_store = str(tmp_path / "balance_prop")
+    fold = foreach_batch_additive(
+        "account", balance_store, merge_balances, num_buckets=4
+    )
+    for bid, split in enumerate(splits):
+        partial = token_balances(
+            spark.createDataFrame(split, TOKEN_TRANSFER_SCHEMA)
+        )
+        fold(partial, bid)
+        if rng.random() < 0.5:
+            fold(partial, bid)  # duplicate delivery: a no-op
+
+    def by_account(df):
+        return {
+            r["account"]: (
+                r["balance"], int(r["block_timestamp"]), r["index_in_chunk"]
+            )
+            for r in df.collect()
+        }
+
+    folded = by_account(read_store(spark, balance_store))
+    assert folded == by_account(
+        token_balances(spark.createDataFrame(transfers, TOKEN_TRANSFER_SCHEMA))
+    )
+    for acct, (balance, ts, idx) in folded.items():
+        acct_legs = [d for d in legs if d["account"] == acct]
+        assert balance == Decimal(sum(d["amount"] for d in acct_legs))
+        assert (ts, idx) == max((d["ts"], d["idx"]) for d in acct_legs)
+
 
 def test_additive_store_survives_compaction_and_further_merges(spark, tmp_path):
     """compact_store works on additive stores unchanged (it rewrites
@@ -129,7 +193,7 @@ def test_additive_store_survives_compaction_and_further_merges(spark, tmp_path):
 
     store = str(tmp_path / "agg_compact")
     merge = foreach_batch_additive(
-        "user_id", store, ["n", "amount"], num_buckets=4
+        "user_id", store, _sums, num_buckets=4
     )
     merge(_batch(spark, [(1, 1, 10), (2, 2, 20)]), 0)
     merge(_batch(spark, [(1, 3, 30), (3, 1, 5)]), 1)

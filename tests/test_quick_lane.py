@@ -18,11 +18,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 # files that keep its operator family covered in the inner loop
 ALL_SLOW_COVERED_BY = {
     "test_additive_store.py": ["test_upsert_sink.py"],
-    "test_apws_balance.py": ["test_tws_balance.py", "test_tws_kernel.py"],
     "test_avro_fuzz.py": ["test_avro_wire.py"],
     "test_metrics_listener.py": ["test_plans.py"],
     "test_training_prep_properties.py": ["test_training_prep.py"],
-    "test_balance_properties.py": ["test_bigint_exact.py", "test_tws_balance.py"],
+    "test_balance_properties.py": ["test_bigint_exact.py", "test_pipeline_batch.py"],
     "test_graph_cluster_properties.py": ["test_clustering.py", "test_graph_ts.py"],
     "test_sampling_properties.py": ["test_sampling_mixture.py"],
     "test_selection_properties.py": ["test_selection_ops.py"],
@@ -92,8 +91,7 @@ def test_all_slow_files_keep_family_coverage_quick():
             )
             # a cover file that is itself fully slow contributes zero
             # quick tests -- the guarantee would be vacuously
-            # satisfiable (round-10 ADVICE: test_balance_properties
-            # declared test_apws_balance, itself a key of this map)
+            # satisfiable
             assert cover not in fully_slow, (
                 f"{fname}: coverage file {cover} is itself fully "
                 "slow-marked -- point at a file with quick tests"

@@ -7,7 +7,9 @@ the same transfers and final balances as the batch pipeline.
 from __future__ import annotations
 
 import json
+import os
 import shutil
+from collections import Counter
 
 import pytest
 
@@ -127,24 +129,119 @@ def test_streaming_store_history_auditable(spark, fixture_dir, tmp_path):
         assert base == expected["balances"]
 
 
-def test_streaming_bridge_batches_coarse_replay(spark, fixture_dir, tmp_path):
-    """bridge_batches=N replays the bridge in ~N balance micro-batches
-    (not one per file) with an identical final store -- the bench's
-    granularity for near_topology_stream."""
-    import glob
+def _transfer_rows(spark, out_dir) -> Counter:
+    """The run's transfer rows as a multiset (batch partition dropped)."""
+    rows = spark.read.parquet(f"{out_dir}/token_transfer").drop("batch")
+    return Counter(tuple(r) for r in rows.collect())
 
-    root, expected = fixture_dir
-    out_dir = str(tmp_path / "outb")
-    balances = run_fixture_pipeline(
-        spark, str(root), out_dir, bridge_batches=2
+
+def _batch_balances(spark) -> set:
+    from nearscan_kafka_streams_spark.config import PipelineConfig
+    from tests.fixtures_near import to_dataframes
+
+    r, o, a, _ = to_dataframes(spark)
+    out = run_batch(r, o, a, config=PipelineConfig(batch_join_tolerance="2 seconds"))
+    return {tuple(row) for row in out.balances.collect()}
+
+
+def test_streaming_restart_equals_batch(spark, fixture_dir, tmp_path, monkeypatch):
+    """A stop at either side of the balance fold, then a re-run on the
+    same out_dir, lands on run_batch's balances and on an uninterrupted
+    run's transfers: the transfer write is idempotent per batch id, and
+    the store's replay guard skips a batch it already folded."""
+    from nearscan_kafka_streams_spark.streaming import pipeline
+
+    root, _ = fixture_dir
+    want_balances = _batch_balances(spark)
+
+    # uninterrupted run: the reference transfer multiset
+    out = str(tmp_path / "restart_after_fold")
+    run_fixture_pipeline(spark, str(root), out)
+    want_transfers = _transfer_rows(spark, out)
+    assert sum(want_transfers.values()) > 0
+
+    # (1) stop after the fold, before the checkpoint commit: leave the
+    # checkpoint as such a stop would -- the store's last folded batch
+    # planned but not committed, nothing after it planned
+    store = f"{out}/token_balance_store"
+    with open(f"{store}/_MANIFEST.json") as fh:
+        folded = json.load(fh)["last_batch_id"]
+    for log, first in (("commits", folded), ("offsets", folded + 1)):
+        log_dir = f"{out}/ckpt/{log}"
+        for name in os.listdir(log_dir):
+            n = name.removeprefix(".").removesuffix(".crc")
+            if n.isdigit() and int(n) >= first:
+                os.remove(f"{log_dir}/{name}")
+    balances = run_fixture_pipeline(spark, str(root), out)
+    assert {tuple(r) for r in balances.collect()} == want_balances
+    assert _transfer_rows(spark, out) == want_transfers
+
+    # (2) stop after the transfer write, before the fold: the first
+    # fold of a non-empty partial into an existing store raises once
+    out = str(tmp_path / "restart_before_fold")
+    real = pipeline.foreach_batch_additive
+    stopped: list[int] = []
+
+    def stop_once(*args, **kwargs):
+        fold = real(*args, **kwargs)
+
+        def fold_or_stop(partial, batch_id):
+            store_exists = os.path.exists(
+                f"{out}/token_balance_store/_MANIFEST.json"
+            )
+            if not stopped and store_exists and partial.count() > 0:
+                stopped.append(batch_id)
+                raise RuntimeError("stop before the fold")
+            fold(partial, batch_id)
+
+        return fold_or_stop
+
+    monkeypatch.setattr(pipeline, "foreach_batch_additive", stop_once)
+    with pytest.raises(Exception, match="stop before the fold"):
+        run_fixture_pipeline(spark, str(root), out)
+    assert os.listdir(f"{out}/token_transfer/batch={stopped[0]}")
+    balances = run_fixture_pipeline(spark, str(root), out)
+    assert {tuple(r) for r in balances.collect()} == want_balances
+    assert _transfer_rows(spark, out) == want_transfers
+
+
+def test_streaming_empty_input_returns_empty_balances(spark, tmp_path):
+    """A run that fires no batch returns 0 rows with the balance
+    columns."""
+    from nearscan_kafka_streams_spark.operators.balance import token_balances
+    from nearscan_kafka_streams_spark.schemas import TOKEN_TRANSFER_SCHEMA
+
+    root = tmp_path / "empty"
+    for sub in ("receipts", "outcomes", "actions"):
+        (root / sub).mkdir(parents=True)
+    balances = run_fixture_pipeline(spark, str(root), str(tmp_path / "out"))
+    assert balances.count() == 0
+    want = token_balances(spark.createDataFrame([], TOKEN_TRANSFER_SCHEMA))
+    assert balances.schema == want.schema
+
+
+def test_streaming_store_without_checkpoint_fails_loudly(spark, fixture_dir, tmp_path):
+    """A store that already folded batches next to a checkpoint that
+    never planned them (a reset of the checkpoint alone) would restart
+    batch ids at 0 and the replay guard would skip every batch: the run
+    must refuse and name the reset entry point instead."""
+    from nearscan_kafka_streams_spark.operators.balance import (
+        merge_balances,
+        token_balances,
     )
-    got = {r["account"]: r["balance"] for r in balances.collect()}
-    assert got == expected["balances"]
+    from nearscan_kafka_streams_spark.schemas import TOKEN_TRANSFER_SCHEMA
+    from nearscan_kafka_streams_spark.sinks.upsert import foreach_batch_additive
+    from tests.test_balance_properties import _transfer_row
 
-    n_files = len(glob.glob(f"{out_dir}/token_transfer/part-*"))
-    n_batches = len(glob.glob(f"{out_dir}/ckpt_balances/offsets/*"))
-    # genuinely multi-batch, but bounded by the requested count (+1:
-    # availableNow may schedule one final drain/no-data batch)
-    assert n_batches <= 3, (n_batches, n_files)
-    if n_files >= 2:
-        assert n_batches >= 2, (n_batches, n_files)
+    root, _ = fixture_dir
+    out = tmp_path / "out"
+    leg = {"account": "a.near", "amount": 1, "ts": 0, "idx": 0}
+    partial = token_balances(
+        spark.createDataFrame([_transfer_row(0, leg)], TOKEN_TRANSFER_SCHEMA)
+    )
+    foreach_batch_additive(
+        "account", str(out / "token_balance_store"), merge_balances
+    )(partial, 0)
+    with pytest.raises(RuntimeError, match="reset_pipeline"):
+        run_fixture_pipeline(spark, str(root), str(out))
+    assert not (out / "ckpt").exists()

@@ -7,7 +7,7 @@ documented jarless-Python-decode cost; this tool re-runs both legs at
 the bench's exact staging (n_wire = 200_000 * sf, wire_sp =
 n_wire // 2500) with the Spark UI enabled and prints every stage's
 task count + executor time so a WIDENING delta can be attributed to a
-starved stage / bridge-sizing drift vs the Arrow-decode cost scaling
+starved stage vs the Arrow-decode cost scaling
 with the corpus.
 
 Usage: python tools/wire_census.py [--sf 0.1]

@@ -7,8 +7,9 @@
                   genuinely non-SQL-expressible ops -> rows-only check).
 
 Implementations live in the ``nearscan_kafka_streams_spark/queries/``
-package (per-family modules; the registry tail in ``_registry.py``);
-the NEAR-domain topology itself (the reference's single hard-coded
+package: each module registers its queries (and their oracle SQL) where
+they are defined, and the package builds the registry from those; the
+NEAR-domain topology itself (the reference's single hard-coded
 query) is exercised by ``tests/`` over FIXTURES.md fixtures and its
 operator shapes are each represented in the inventory below.
 """
@@ -47,7 +48,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the reference-topology analog over the events table --
     keyed running aggregate with latest-event metadata (A1 shape:
     sum + max_by, TokenBalance.java:279-329) at sf0.001."""
-    from nearscan_kafka_streams_spark.queries import running_balance_events
+    from nearscan_kafka_streams_spark.queries.topology import (
+        running_balance_events,
+    )
 
     _configure(spark)
     return running_balance_events(spark, "/root/testdata/sf0.001")

@@ -432,8 +432,10 @@ def build_stress_thunks(spark, n_docs: int, n_vecs: int):
         contamination_report,
     )
     from nearscan_kafka_streams_spark.functions.graph import pagerank
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7 import (
         clustering_coefficient_users,
+    )
+    from nearscan_kafka_streams_spark.queries.round5 import (
         triangle_count_users,
     )
     from pyspark.sql import functions as SF
@@ -774,8 +776,7 @@ def main() -> None:
     # and tools/diff_bench.py prefers floor-vs-floor when both rounds
     # recorded one).  Staged producers/consumers are excluded: their
     # timings are coupled to the staging window, so a solo re-run
-    # would measure a different cost contract.  FORCE_FLOOR backfilled
-    # round 8's four floor-less regressions, one round only.
+    # would measure a different cost contract.
     floors: dict[str, dict] = {}
     # stress/diag side-file sections are declared here because the
     # streaming-topology block below contributes its own 1x/10x pair
@@ -802,16 +803,6 @@ def main() -> None:
         prev_floors = _prev.get("floors", {})
     except Exception:  # noqa: BLE001
         pass
-    force_floor = (
-        {
-            "q3_shipping_priority",
-            "dedup_minhash_lsh",
-            "hybrid_rrf_retrieval",
-            "quality_budget_curve_documents",
-        }
-        if round_n == 9
-        else set()
-    )
     staged_names = set(STAGED_FAMILIES) | set(consumer_to_producer)
 
     def _regression(name: str) -> float:
@@ -821,7 +812,7 @@ def main() -> None:
     suspects = [
         n
         for n in timings
-        if n not in staged_names and (n in force_floor or _regression(n) > 1.5)
+        if n not in staged_names and _regression(n) > 1.5
     ]
     # worst regressions first under the wall budget
     suspects.sort(key=_regression, reverse=True)

@@ -1,28 +1,6 @@
-"""Driver-facing query inventory (SURVEY (S)2 + north-star operators).
-
-Each entry is a (spark, sf_dir) -> DataFrame callable paired with an
-ANSI-SQL oracle string runnable by DuckDB over the same parquet tables
-(pre-registered views: region nation customer supplier part orders
-lineitem events documents embeddings).
-
-Conventions for oracle hash-matching:
-- every computed column is aliased IDENTICALLY in Spark and SQL;
-- double aggregates are rounded to a fixed precision on BOTH sides
-  (ulp-level summation-order differences otherwise break the hash);
-- deterministic tie-breaks on every top-k / window ordering;
-- cross-engine hashes (fingerprints) use md5, which both engines
-  implement identically; engine-internal dedup keeps xxhash64.
-
-Queries whose operators are genuinely not SQL-expressible (MinHash-LSH,
-SimHash, hyperplane-LSH ANN, mapInPandas decode) have no oracle entry;
-the driver records a weaker rows-only check for them (per contract).
-
-Reference parity notes are in each docstring; the NEAR-domain topology
-itself (TokenBalance.java) is exercised by tests/ over FIXTURES.md
-fixtures since the driver tables are TPC-H-shaped, while its operator
-shapes (dedup / interval join / as-of / flat-map explode / sum+max_by
-running aggregate) are each expressed below over the events table.
-"""
+"""Shared imports of the query modules, the table reader ``_t`` and
+``register``, which records each query and its oracle SQL for the
+package's ``QUERIES``/``ORACLES`` (see ``__init__.py``)."""
 
 from __future__ import annotations
 
@@ -53,6 +31,21 @@ from nearscan_kafka_streams_spark.functions.text import (
     quality_score,
     token_count,
 )
+
+Query = Callable[[SparkSession, str], DataFrame]
+
+# name -> (query, oracle SQL or None), in registration order
+REGISTERED: dict[str, tuple[Query, str | None]] = {}
+
+
+def register(fn: Query, oracle: str | None = None) -> None:
+    """Add ``fn`` to the registry under ``fn.__name__``, with its DuckDB
+    oracle SQL (None: rows-only check).  Called once per query in its
+    defining module, right after the query's oracle string."""
+    name = fn.__name__
+    if name in REGISTERED:
+        raise ValueError(f"query {name!r} is already registered")
+    REGISTERED[name] = (fn, oracle)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,9 +1,6 @@
 """Training-data pipeline: multimodal plumbing, corpus prep
 (chunk/pack/shard/decontaminate), BPE, selection and curation ops
-(rounds 3-4 waves).
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+(rounds 3-4 waves)."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -17,6 +14,7 @@ from ._base import (  # noqa: F401
     make_fake_media,
     sample_frames,
     token_count,
+    register,
 )
 from .dedup import (  # noqa: F401
     dedup_embedding_allpairs,
@@ -44,6 +42,7 @@ SELECT CAST(doc_id AS VARCHAR) AS media_id,
        sha256(text) AS sha_hex
 FROM documents
 """
+register(multimodal_metadata, oracle=MULTIMODAL_META_SQL)
 
 
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,6 +78,7 @@ SELECT media_id,
         END, 6) AS feature
 FROM b
 """
+register(multimodal_decode, oracle=MULTIMODAL_DECODE_SQL)
 
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,6 +95,7 @@ SELECT CAST(doc_id AS VARCHAR) AS media_id,
        )) AS frame_index
 FROM documents
 """
+register(multimodal_frame_sample, oracle=FRAME_SAMPLE_SQL)
 
 
 def bigram_coverage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,6 +167,7 @@ FROM pairs JOIN counts USING (bg)
 GROUP BY doc_id
 ORDER BY doc_id
 """
+register(bigram_coverage_score, oracle=BIGRAM_COVERAGE_SQL)
 
 
 def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,6 +187,9 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ws, "doc_id")
         .select("doc_id", "n_tokens", "ws_tokens")
     )
+
+
+register(bpe_token_stats)
 
 
 def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,6 +224,7 @@ def _quality_model_sql() -> str:
     )
 
     return quality_model_sql(make_weights())
+register(quality_model_score, oracle=_quality_model_sql())
 
 
 def decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,6 +267,7 @@ SELECT t.doc_id, CAST(t.n_grams AS INT) AS n_grams,
 FROM t JOIN e USING (gram)
 GROUP BY t.doc_id, t.n_grams
 """
+register(decontaminate_documents, oracle=DECONTAM_SQL)
 
 
 def _md5_banded_candidates(
@@ -398,6 +405,7 @@ FROM bands a JOIN bands b
   ON a.bb.band = b.bb.band AND a.bb.bkey = b.bb.bkey
  AND a.doc_id < b.doc_id
 """
+register(dedup_minhash_banded_md5, oracle=MINHASH_MD5_SQL)
 
 
 def dedup_canonical_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,6 +457,7 @@ SELECT doc_id, source, fp FROM (
   FROM documents)
 WHERE rn = 1
 """
+register(dedup_canonical_by_source, oracle=DEDUP_CANONICAL_SQL)
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,6 +509,7 @@ SELECT doc_id,
 FROM u
 WHERE length(ch.x) > 0
 """
+register(chunk_documents, oracle=CHUNK_DOCUMENTS_SQL)
 
 
 def mixture_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,6 +558,7 @@ SELECT doc_id, lang, CAST(n_tokens AS INT) AS n_tokens,
 FROM t
 QUALIFY cum_tokens <= 2000
 """
+register(mixture_budget_sample, oracle=MIXTURE_BUDGET_SQL)
 
 
 def salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,6 +597,7 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+register(salted_hot_key_agg, oracle=SALTED_AGG_SQL)
 
 
 def sql_text_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,6 +647,7 @@ SELECT r_name, n_name,
              6) AS region_share
 FROM nat
 """
+register(sql_text_interface, oracle=SQL_TEXT_SQL)
 
 
 def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,6 +696,7 @@ SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
 FROM frag
 ORDER BY seq_id, doc_id
 """
+register(pack_training_sequences, oracle=PACK_SEQUENCES_SQL)
 
 
 def dedup_repeated_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,6 +757,7 @@ SELECT t.doc_id,
 FROM totals t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id
 ORDER BY t.doc_id
 """
+register(dedup_repeated_chunks, oracle=REPEATED_CHUNKS_SQL)
 
 
 def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,6 +796,7 @@ SELECT shard_id,
 FROM hashed
 ORDER BY shard_id, pos
 """
+register(shuffle_shards, oracle=SHUFFLE_SHARDS_SQL)
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -831,6 +847,7 @@ FROM a
 WHERE a.vec_id NOT IN (SELECT vec_id FROM dup)
 ORDER BY a.vec_id
 """
+register(dedup_semantic, oracle=DEDUP_SEMANTIC_SQL)
 
 
 def knn_classify_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -876,6 +893,7 @@ FROM pred p JOIN embeddings e ON e.vec_id = p.query_id
 WHERE p.rn = 1
 ORDER BY vec_id
 """
+register(knn_classify_embeddings, oracle=KNN_CLASSIFY_SQL)
 
 
 def snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,6 +974,7 @@ SELECT COALESCE(a.user_id, b.user_id) AS user_id,
 FROM a FULL OUTER JOIN b ON a.user_id = b.user_id
 ORDER BY user_id
 """
+register(snapshot_diff_events, oracle=SNAPSHOT_DIFF_SQL)
 
 
 def importance_reweight_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -997,6 +1016,7 @@ FROM toks t JOIN wt USING (bucket)
 GROUP BY t.doc_id
 ORDER BY t.doc_id
 """
+register(importance_reweight_documents, oracle=IMPORTANCE_SQL)
 
 
 def ann_bruteforce_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1016,6 +1036,9 @@ def ann_bruteforce_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
     ).orderBy("query_id", "rank")
+
+
+register(ann_bruteforce_gemm)
 
 
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,6 +1120,7 @@ FROM (
 WHERE rank <= 3
 ORDER BY anchor_id, rank
 """
+register(hard_negative_mining, oracle=HARD_NEGATIVE_SQL)
 
 
 def store_changelog_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,6 +1194,7 @@ WHERE a.user_id IS NULL OR b.user_id IS NULL
    OR a.n <> b.n OR a.v <> b.v
 ORDER BY user_id
 """
+register(store_changelog_events, oracle=STORE_CHANGELOG_SQL)
 
 
 def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1236,6 +1261,7 @@ FROM runs
 WINDOW w2 AS (PARTITION BY user_id ORDER BY seg)
 ORDER BY user_id, version
 """
+register(scd2_user_state, oracle=SCD2_SQL)
 
 
 def gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,6 +1322,7 @@ SELECT doc_id, n_words,
 FROM m
 ORDER BY doc_id
 """
+register(gopher_quality_gates, oracle=GOPHER_GATES_SQL)
 
 
 def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,6 +1378,7 @@ SELECT anchor_id, other_id, is_positive, cosine FROM (
 )
 ORDER BY anchor_id, other_id, is_positive
 """
+register(contrastive_pairs, oracle=CONTRASTIVE_PAIRS_SQL)
 
 
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,6 +1453,7 @@ SELECT vec_id, CAST(cid AS INT) AS cluster_id, CAST(d2 AS BIGINT) AS d2 FROM (
   FROM d1) WHERE rn = 1
 ORDER BY vec_id
 """
+register(kmeans_embeddings, oracle=KMEANS_SQL)
 
 
 def lm_perplexity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,6 +1492,7 @@ FROM toks2 t JOIN model m USING (tok)
 GROUP BY t.doc_id
 ORDER BY doc_id
 """
+register(lm_perplexity_documents, oracle=LM_PERPLEXITY_SQL)
 
 
 def salted_skew_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1500,6 +1530,7 @@ SELECT c.c_mktsegment, count(*) AS n_events,
 FROM events e JOIN customer c ON c.c_custkey = e.user_id
 GROUP BY 1 ORDER BY 1
 """
+register(salted_skew_join_events, oracle=SALTED_JOIN_SQL)
 
 
 def normalize_events_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1574,6 +1605,7 @@ SELECT e.event_id, e.event_type,
 FROM e JOIN stats s USING (event_type)
 ORDER BY event_id
 """
+register(normalize_events_features, oracle=NORMALIZE_SQL)
 
 
 def pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,6 +1681,7 @@ WITH pairs AS (
 )
 SELECT node AS user_id, rank_fp FROM r3 ORDER BY user_id
 """
+register(pagerank_events, oracle=PAGERANK_SQL)
 
 
 def ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1710,6 +1743,7 @@ FROM e
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ORDER BY event_id
 """
+register(ewma_events, oracle=EWMA_SQL)
 
 
 def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1761,6 +1795,7 @@ FROM names a JOIN names b
 WHERE levenshtein(a.name, b.name) BETWEEN 1 AND 4
 ORDER BY name_a, name_b
 """
+register(fuzzy_match_parts, oracle=FUZZY_MATCH_SQL)
 
 
 def retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1868,6 +1903,7 @@ FROM (SELECT DISTINCT qid FROM exact) a
 LEFT JOIN hits h ON h.qid = a.qid
 ORDER BY query_id
 """
+register(retrieval_eval_metrics, oracle=RETRIEVAL_EVAL_SQL)
 
 
 def group_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1903,6 +1939,7 @@ SELECT doc_id, source,
 FROM documents
 ORDER BY doc_id
 """
+register(group_split_documents, oracle=GROUP_SPLIT_SQL)
 
 
 def curriculum_bins_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,6 +2024,7 @@ FROM binned
 GROUP BY tier
 ORDER BY tier
 """
+register(curriculum_bins_documents, oracle=CURRICULUM_SQL)
 
 
 def weighted_sample_documents(
@@ -2037,6 +2075,7 @@ FROM (
 ORDER BY k DESC, doc_id
 LIMIT 500
 """
+register(weighted_sample_documents, oracle=WEIGHTED_SAMPLE_SQL)
 
 
 # per-source training epochs for mixture_upsample_documents, expressed
@@ -2105,6 +2144,7 @@ WITH c AS (
 SELECT doc_id, source, unnest(generate_series(1, copies)) AS epoch_copy
 FROM c
 """
+register(mixture_upsample_documents, oracle=MIXTURE_UPSAMPLE_SQL)
 
 
 def bloom_prune_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2165,6 +2205,7 @@ WHERE c_mktsegment = 'BUILDING' AND c_nationkey < 5
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
+register(bloom_prune_join_orders, oracle=BLOOM_PRUNE_JOIN_SQL)
 
 
 def hll_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2187,6 +2228,9 @@ def hll_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, fine=["event_type", "day"], coarse=["event_type"],
         value_col="user_id",
     )
+
+
+register(hll_distinct_events)
 
 
 def data_quality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2254,6 +2298,7 @@ FROM (
 )
 ORDER BY check_name
 """
+register(data_quality_orders, oracle=DATA_QUALITY_SQL)
 
 
 # stride weights for interleave_mixture_schedule, in 16ths; each weight
@@ -2321,6 +2366,7 @@ SELECT doc_id, source, rank_in_source, weight16,
          AS stride_key
 FROM ranked
 """
+register(interleave_mixture_schedule, oracle=INTERLEAVE_SQL)
 
 
 def chisq_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2388,6 +2434,7 @@ JOIN ct USING (source)
 CROSS JOIN tt t
 ORDER BY lang, source
 """
+register(chisq_lang_source, oracle=CHISQ_SQL)
 
 
 def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2458,6 +2505,7 @@ JOIN dim d
 WHERE p.event_type = 'click'
 ORDER BY p.event_id, d.state_version
 """
+register(scd2_point_in_time_join, oracle=SCD2_PIT_SQL)
 
 
 def bpe_zero_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2480,6 +2528,7 @@ SELECT doc_id,
             AS INT) AS n_tokens
 FROM documents
 """
+register(bpe_zero_merge_stats, oracle=BPE_ZERO_MERGE_SQL)
 
 
 def text_normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2543,6 +2592,7 @@ SELECT doc_id, norm_text,
        CAST(length(norm_text) - length(m) AS INT) AS len_delta
 FROM norm
 """
+register(text_normalize_documents, oracle=TEXT_NORMALIZE_SQL)
 
 
 def length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2617,6 +2667,7 @@ SELECT doc_id, n_tokens, bucket,
 FROM pos
 ORDER BY bucket, batch_in_bucket, pos_in_batch
 """
+register(length_bucket_batches, oracle=LENGTH_BUCKET_SQL)
 
 
 def recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2656,6 +2707,7 @@ FROM chain
 GROUP BY anchor
 ORDER BY c_custkey
 """
+register(recursive_cte_hierarchy, oracle=RECURSIVE_CTE_SQL)
 
 
 def variant_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2695,6 +2747,7 @@ FROM events
 GROUP BY event_type
 ORDER BY event_type
 """
+register(variant_json_events, oracle=VARIANT_JSON_SQL)
 
 
 PSEUDO_SECRET = "corpus-v1"  # rotate per release; NOT a real secret here
@@ -2733,6 +2786,7 @@ FROM events
 GROUP BY 1
 ORDER BY user_token
 """
+register(pseudonymize_events, oracle=PSEUDONYMIZE_SQL)
 
 
 def range_frame_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2777,6 +2831,7 @@ WINDOW w AS (
 )
 ORDER BY event_id
 """
+register(range_frame_events, oracle=RANGE_FRAME_SQL)
 
 
 def forward_fill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2824,6 +2879,7 @@ SELECT event_id, user_id,
 FROM gappy
 ORDER BY event_id
 """
+register(forward_fill_events, oracle=FORWARD_FILL_SQL)
 
 
 def sentence_split_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2885,6 +2941,7 @@ SELECT doc_id, sent_idx,
 FROM cleaned
 ORDER BY doc_id, sent_idx
 """
+register(sentence_split_udtf, oracle=SENTENCE_UDTF_SQL)
 
 
 def listagg_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2931,6 +2988,7 @@ FROM orders
 GROUP BY o_custkey
 ORDER BY o_custkey
 """
+register(listagg_order_history, oracle=LISTAGG_SQL)
 
 
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3012,6 +3070,7 @@ FROM fp a JOIN fp b ON a.fp = b.fp AND a.source < b.source
 GROUP BY 1, 2
 ORDER BY source_a, source_b
 """
+register(source_overlap_matrix, oracle=SOURCE_OVERLAP_SQL)
 
 
 def token_accounting_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3049,5 +3108,6 @@ FROM documents
 GROUP BY ROLLUP (source, lang)
 ORDER BY source, lang
 """
+register(token_accounting_documents, oracle=TOKEN_ACCOUNTING_SQL)
 
 

@@ -1,8 +1,5 @@
 """Training-data pipeline: deduplication family (exact, MinHash-LSH,
-SimHash, n-gram Jaccard/containment, embedding near-dup, clusters).
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+SimHash, n-gram Jaccard/containment, embedding near-dup, clusters)."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -14,6 +11,7 @@ from ._base import (  # noqa: F401
     jaccard_similarity_join,
     minhash_lsh_candidates,
     simhash_pairs,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -40,6 +38,7 @@ SELECT min(doc_id) AS doc_id, count(*) AS dup_count
 FROM documents
 GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
 """
+register(dedup_exact_documents, oracle=DEDUP_EXACT_SQL)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,6 +48,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force Jaccard oracle on small data."""
     d = _t(spark, sf_dir, "documents")
     return minhash_lsh_candidates(d).orderBy("left_id", "right_id")
+
+
+register(dedup_minhash_lsh)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,6 +100,7 @@ SELECT inner_id, outer_id,
        CAST(la AS INT) AS inner_size
 FROM p WHERE 10 * inter_size >= 9 * la
 """
+register(dedup_ngram_containment, oracle=NGRAM_CONTAINMENT_SQL)
 
 
 NGRAM_JACCARD_SQL = r"""
@@ -120,6 +123,7 @@ SELECT left_id, right_id,
        CAST(la + lb - inter_size AS INT) AS union_size
 FROM p WHERE 5 * inter_size >= 4 * (la + lb - inter_size)
 """
+register(dedup_ngram_jaccard, oracle=NGRAM_JACCARD_SQL)
 
 
 def jaccard_edges_frame(
@@ -210,12 +214,17 @@ reach(node, label) AS (
 SELECT node AS doc_id, min(label) AS component
 FROM reach GROUP BY node
 """
+register(dedup_clusters, oracle=DEDUP_CLUSTERS_SQL)
+register(dedup_clusters_star, oracle=DEDUP_CLUSTERS_SQL)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs within hamming distance 3."""
     d = _t(spark, sf_dir, "documents")
     return simhash_pairs(d)
+
+
+register(dedup_simhash)
 
 
 def dedup_embedding_cosine(
@@ -263,6 +272,9 @@ def dedup_embedding_cosine(
             F.round("cosine", 6).alias("cosine"),
         )
     )
+
+
+register(dedup_embedding_cosine)
 
 
 def dedup_embedding_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,5 +325,6 @@ FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
 WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                              CAST(b.embedding AS DOUBLE[])) >= 0.40
 """
+register(dedup_embedding_allpairs, oracle=EMB_ALLPAIRS_SQL)
 
 

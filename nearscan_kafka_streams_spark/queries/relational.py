@@ -1,8 +1,5 @@
 """TPC-H-style relational core, sorts/top-k, set ops, window
-functions, rollup/cube, subqueries, sampling, SQL-text interface.
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+functions, rollup/cube, subqueries, sampling, SQL-text interface."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -11,6 +8,7 @@ from ._base import (  # noqa: F401
     SparkSession,
     Window,
     _t,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -62,6 +60,7 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
+register(q1_pricing_summary, oracle=Q1_SQL)
 
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,6 +97,7 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey ASC
 LIMIT 10
 """
+register(q3_shipping_priority, oracle=Q3_SQL)
 
 
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,6 +135,7 @@ FROM customer
   JOIN region   ON n_regionkey = r_regionkey
 GROUP BY n_name
 """
+register(q5_local_supplier_volume, oracle=Q5_SQL)
 
 
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,6 +170,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
               WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
 GROUP BY o_orderpriority
 """
+register(q4_order_priority, oracle=Q4_SQL)
 
 
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,6 +212,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_discount >= 0.02 AND l_discount <= 0.04
   AND l_quantity < 24
 """
+register(q6_forecast_revenue, oracle=Q6_SQL)
 
 
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,6 +280,7 @@ FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')))
 GROUP BY supp_nation, cust_nation, l_year
 """
+register(q7_volume_shipping, oracle=Q7_SQL)
 
 
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,6 +333,7 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
+register(q10_returned_items, oracle=Q10_SQL)
 
 
 def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,6 +371,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY l_linestatus
 """
+register(q12_priority_lines, oracle=Q12_SQL)
 
 
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,6 +408,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
 """
+register(q14_promo_revenue, oracle=Q14_SQL)
 
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,6 +463,7 @@ FROM supplier JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s_suppkey
 """
+register(q15_top_supplier, oracle=Q15_SQL)
 
 
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,6 +500,7 @@ WHERE p_brand = 'Brand#13'
   AND l_quantity < (SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
                     WHERE l2.l_partkey = lineitem.l_partkey)
 """
+register(q17_small_quantity_revenue, oracle=Q17_SQL)
 
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,6 +538,7 @@ WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
 GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
 ORDER BY o_totalprice DESC, o_orderdate ASC, o_orderkey ASC
 """
+register(q18_large_orders, oracle=Q18_SQL)
 
 
 def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,6 +593,7 @@ WHERE (p_brand = 'Brand#1'  AND p_size BETWEEN 1 AND 15
    OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 35
        AND l_quantity BETWEEN 20 AND 40)
 """
+register(q19_discounted_revenue, oracle=Q19_SQL)
 
 
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,6 +636,7 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
 GROUP BY cust_group
 ORDER BY cust_group
 """
+register(q22_dormant_customers, oracle=Q22_SQL)
 
 
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,6 +689,7 @@ WHERE p_size = 15 AND p_type = 'SMALL'
 ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
 LIMIT 100
 """
+register(q2_min_cost_supplier, oracle=Q2_SQL)
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,6 +755,7 @@ WHERE r_name = 'ASIA'
 GROUP BY o_year
 ORDER BY o_year
 """
+register(q8_market_share, oracle=Q8_SQL)
 
 
 def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,6 +794,7 @@ WHERE p_name LIKE '%gear%'
 GROUP BY n_name, year(o_orderdate)
 ORDER BY nation ASC, o_year DESC
 """
+register(q9_profit_by_nation, oracle=Q9_SQL)
 
 
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,6 +840,7 @@ FROM per_part
 WHERE sum_i * 10000 > (SELECT sum(sum_i) FROM per_part)
 ORDER BY part_value DESC, p_partkey ASC
 """
+register(q11_important_parts, oracle=Q11_SQL)
 
 
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,6 +875,7 @@ FROM (SELECT c_custkey, count(o_orderkey) AS c_count
 GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """
+register(q13_customer_distribution, oracle=Q13_SQL)
 
 
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -898,6 +915,7 @@ WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
 GROUP BY p_brand, p_type, p_size
 ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
 """
+register(q16_supplier_part_counts, oracle=Q16_SQL)
 
 
 def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,6 +975,7 @@ WHERE s_suppkey IN (SELECT l_suppkey FROM per_ps JOIN per_part USING (l_partkey)
   AND s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_name = 'NATION_1')
 ORDER BY s_suppkey
 """
+register(q20_dominant_suppliers, oracle=Q20_SQL)
 
 
 def q21_latest_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,6 +1037,7 @@ GROUP BY s_name
 ORDER BY numwait DESC, s_name ASC
 LIMIT 20
 """
+register(q21_latest_shippers, oracle=Q21_SQL)
 
 
 def broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,6 +1062,7 @@ FROM customer JOIN nation ON c_nationkey = n_nationkey
               JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name
 """
+register(broadcast_dim_join, oracle=BROADCAST_DIM_SQL)
 
 
 def filter_project_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1063,6 +1084,7 @@ FILTER_PROJECT_SQL = """
 SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS total_qty
 FROM lineitem WHERE l_quantity > 45 AND l_returnflag = 'R'
 """
+register(filter_project_scan, oracle=FILTER_PROJECT_SQL)
 
 
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,6 +1101,7 @@ TOPK_SQL = """
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
 FROM orders ORDER BY price DESC, o_orderkey ASC LIMIT 10
 """
+register(topk_orders, oracle=TOPK_SQL)
 
 
 def window_rank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,6 +1125,7 @@ SELECT o_custkey, o_orderkey, rnk FROM (
   FROM orders
 ) WHERE rnk <= 3
 """
+register(window_rank_orders, oracle=WINDOW_RANK_SQL)
 
 
 def window_lag_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,6 +1147,7 @@ SELECT user_id, event_id,
                               ORDER BY ts ASC, event_id ASC), 2) AS prev_value
 FROM events
 """
+register(window_lag_events, oracle=WINDOW_LAG_SQL)
 
 
 def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,6 +1167,7 @@ SET_OPS_SQL = """
 EXCEPT ALL
 SELECT c_custkey FROM customer WHERE c_nationkey = 0
 """
+register(set_ops_customers, oracle=SET_OPS_SQL)
 
 
 def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,6 +1190,7 @@ FROM customer JOIN nation ON c_nationkey = n_nationkey
               JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
 """
+register(rollup_region_nation, oracle=ROLLUP_SQL)
 
 
 def having_big_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1190,6 +1217,7 @@ WITH per_cust AS (
 SELECT o_custkey, total FROM per_cust
 WHERE total > 1.5 * (SELECT avg(total) FROM per_cust)
 """
+register(having_big_customers, oracle=HAVING_SQL)
 
 
 def semi_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,6 +1237,7 @@ SELECT c_custkey, c_name FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders)
   AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
 """
+register(semi_anti_join_customers, oracle=SEMI_ANTI_SQL)
 
 
 def exists_subquery_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,6 +1259,7 @@ SELECT s_suppkey, s_name FROM supplier s
 WHERE EXISTS (SELECT 1 FROM lineitem l
               WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity > 49)
 """
+register(exists_subquery_suppliers, oracle=EXISTS_SQL)
 
 
 def distinct_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1248,6 +1278,7 @@ SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_customers,
        count(*) AS n_orders
 FROM orders GROUP BY o_orderstatus
 """
+register(distinct_agg_orders, oracle=DISTINCT_AGG_SQL)
 
 
 def cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,6 +1296,7 @@ SELECT event_type, hod, count(*) AS n, round(sum(value), 2) AS total
 FROM (SELECT event_type, CAST(hour(ts) AS INT) AS hod, value FROM events)
 GROUP BY CUBE (event_type, hod)
 """
+register(cube_events, oracle=CUBE_SQL)
 
 
 def _bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1390,6 +1422,7 @@ GROUP BY doc_id
 ORDER BY score DESC, doc_id ASC
 LIMIT 20
 """
+register(bm25_retrieval, oracle=BM25_SQL)
 
 
 def resample_gapfill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,6 +1488,7 @@ LEFT JOIN agg a ON a.bucket_epoch = s.bucket_epoch
                AND a.event_type = t.event_type
 ORDER BY 1, 2
 """
+register(resample_gapfill_events, oracle=RESAMPLE_GAPFILL_SQL)
 
 
 def outliers_iqr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1512,6 +1546,7 @@ FROM events e JOIN fences f ON e.event_type = f.event_type
 GROUP BY e.event_type
 ORDER BY 1
 """
+register(outliers_iqr_events, oracle=OUTLIERS_IQR_SQL)
 
 
 def heavy_hitters_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1541,6 +1576,7 @@ GROUP BY word
 ORDER BY n DESC, word ASC
 LIMIT 20
 """
+register(heavy_hitters_words, oracle=HEAVY_HITTERS_SQL)
 
 
 def range_join_pricebands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1589,6 +1625,7 @@ SELECT band, count(*) AS n,
 FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
 GROUP BY band ORDER BY band
 """
+register(range_join_pricebands, oracle=RANGE_JOIN_SQL)
 
 
 def window_distribution_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1627,6 +1664,7 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice ASC, o_orderkey ASC)
 """
+register(window_distribution_orders, oracle=WINDOW_DISTRIBUTION_SQL)
 
 
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,6 +1700,7 @@ FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 ORDER BY gid, o_orderstatus, o_orderpriority
 """
+register(grouping_sets_orders, oracle=GROUPING_SETS_SQL)
 
 
 def full_outer_join_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1702,6 +1741,7 @@ SELECT COALESCE(c_nk, s_nk) AS nationkey,
 FROM c FULL OUTER JOIN s ON c_nk = s_nk
 ORDER BY nationkey
 """
+register(full_outer_join_nations, oracle=FULL_OUTER_SQL)
 
 
 def moving_avg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1735,6 +1775,7 @@ FROM events
 WHERE event_id < 2000
 ORDER BY event_id
 """
+register(moving_avg_events, oracle=MOVING_AVG_SQL)
 
 
 def funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1798,6 +1839,7 @@ SELECT * FROM (
   SELECT 3, 'purchase', count(*) FROM p)
 ORDER BY step
 """
+register(funnel_events, oracle=FUNNEL_SQL)
 
 
 def retention_cohorts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1844,6 +1886,7 @@ FROM active JOIN first USING (user_id)
 GROUP BY cohort_wk, week_k
 ORDER BY cohort_week, week_k
 """
+register(retention_cohorts_events, oracle=RETENTION_SQL)
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1874,5 +1917,6 @@ SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
        count(*) AS n_events
 FROM seq GROUP BY user_id, session_seq
 """
+register(sessionize_events, oracle=SESSIONIZE_SQL)
 
 

@@ -1,10 +1,7 @@
 """Round-5 additions: time-series finance/telemetry aggregates, graph
 structure, phrase mining, information-theoretic quality, retrieval
 index construction, boilerplate removal, privacy audit, layout
-statistics, nearest-event joins.
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+statistics, nearest-event joins."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -13,6 +10,7 @@ from ._base import (  # noqa: F401
     SparkSession,
     Window,
     _t,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -98,6 +96,7 @@ GROUP BY user_id
 HAVING sum(dur_s) > 0
 ORDER BY user_id
 """
+register(twap_events, oracle=TWAP_SQL)
 
 
 def _co_event_edges(
@@ -184,6 +183,7 @@ WITH b0 AS (
 SELECT u, v FROM pairs WHERE n_shared >= 2
 ORDER BY u, v
 """
+register(co_event_edges_users, oracle=CO_EVENT_EDGES_SQL)
 
 
 # Orientation gate for the adjacency-intersection triangle plans:
@@ -414,6 +414,7 @@ SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
        CAST(n_triangles AS BIGINT) AS n_triangles
 FROM nn, tri
 """
+register(triangle_count_users, oracle=TRIANGLE_SQL)
 
 
 def _word_tokens(col: str = "text"):
@@ -507,6 +508,7 @@ WHERE c_xy >= 5
 ORDER BY lift_ppm DESC, w1, w2
 LIMIT 50
 """
+register(collocation_lift_documents, oracle=COLLOCATION_SQL)
 
 
 def char_entropy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,6 +589,7 @@ FROM with_n
 GROUP BY doc_id
 ORDER BY doc_id
 """
+register(char_entropy_documents, oracle=CHAR_ENTROPY_SQL)
 
 
 def inverted_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,6 +640,7 @@ GROUP BY term
 ORDER BY df DESC, term
 LIMIT 100
 """
+register(inverted_index_terms, oracle=INVERTED_INDEX_SQL)
 
 
 def dedup_cross_doc_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,6 +698,7 @@ FROM sents s JOIN dps d ON s.sent = d.sent
 GROUP BY s.doc_id
 ORDER BY s.doc_id
 """
+register(dedup_cross_doc_sentences, oracle=CROSS_DOC_SENTENCES_SQL)
 
 
 def k_anonymity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -728,6 +733,7 @@ FROM documents
 GROUP BY lang, source, n_chars // 100
 ORDER BY lang, source, len_bucket
 """
+register(k_anonymity_documents, oracle=K_ANONYMITY_SQL)
 
 
 def equidepth_histogram_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,6 +777,7 @@ FROM (SELECT o_totalprice, o_orderkey,
 GROUP BY bucket
 ORDER BY bucket
 """
+register(equidepth_histogram_orders, oracle=EQUIDEPTH_SQL)
 
 
 def asof_nearest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,5 +844,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY click_id
 WHERE rn = 1
 ORDER BY click_id
 """
+register(asof_nearest_events, oracle=ASOF_NEAREST_SQL)
 
 

@@ -1,8 +1,5 @@
 """Round-6 waves: skyline, graph communities, sequence mining,
-attribution, string-distance dedup, drift/calibration statistics.
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+attribution, string-distance dedup, drift/calibration statistics."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -11,6 +8,7 @@ from ._base import (  # noqa: F401
     SparkSession,
     Window,
     _t,
+    register,
 )
 from .dedup import (  # noqa: F401
     jaccard_edges_frame,
@@ -100,6 +98,7 @@ WHERE o.o_orderdate = g2.pmax
   AND (g2.best_higher IS NULL OR g2.best_higher < o.o_orderdate)
 ORDER BY o.o_totalprice DESC, o.o_orderkey
 """
+register(pareto_frontier_orders, oracle=PARETO_FRONTIER_SQL)
 
 
 def label_propagation_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,6 +214,7 @@ WITH b0 AS (
 )
 SELECT user_id, CAST(label AS BIGINT) AS label FROM l3 ORDER BY user_id
 """
+register(label_propagation_users, oracle=LABEL_PROPAGATION_SQL)
 
 
 def markov_transitions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,6 +271,7 @@ SELECT src, dst, CAST(n AS BIGINT) AS n_trans,
          AS ppm
 FROM a ORDER BY src, dst
 """
+register(markov_transitions_events, oracle=MARKOV_TRANSITIONS_SQL)
 
 
 def attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,6 +361,7 @@ SELECT first_touch, CAST(count(*) AS BIGINT) AS n_conversions,
          AS avg_ms
 FROM g WHERE conv_tus IS NOT NULL GROUP BY 1 ORDER BY 1
 """
+register(attribution_events, oracle=ATTRIBUTION_SQL)
 
 
 def dedup_edit_distance_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,6 +444,7 @@ FROM t a JOIN t b
   ON a.lang = b.lang AND a.w1 = b.w1 AND a.doc_id < b.doc_id
 ORDER BY dist, doc_a, doc_b LIMIT 20
 """
+register(dedup_edit_distance_titles, oracle=EDIT_DISTANCE_SQL)
 
 
 def psi_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,6 +519,7 @@ SELECT ca.lang, CAST(ca AS BIGINT) AS n_a, CAST(cb AS BIGINT) AS n_b,
 FROM ca JOIN cb USING (lang) CROSS JOIN na CROSS JOIN nb
 ORDER BY ca.lang
 """
+register(psi_drift_documents, oracle=PSI_DRIFT_SQL)
 
 
 def ngram_novelty_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,6 +601,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_grams,
             // count(*) AS BIGINT) AS novelty_ppm
 FROM fp2 GROUP BY source ORDER BY source
 """
+register(ngram_novelty_sources, oracle=NGRAM_NOVELTY_SQL)
 
 
 def user_saturation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,6 +647,7 @@ SELECT strftime(day, '%Y-%m-%d') AS day,
          AS cum_users
 FROM daily ORDER BY day
 """
+register(user_saturation_events, oracle=USER_SATURATION_SQL)
 
 
 def rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,6 +706,7 @@ SELECT r_score, f_score, m_score,
        CAST(min(o_custkey) AS BIGINT) AS sample_custkey
 FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
+register(rfm_segments_customers, oracle=RFM_SQL)
 
 
 def benford_digits_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,6 +773,7 @@ SELECT digit, CAST(n AS BIGINT) AS n,
                          ELSE 46 END AS BIGINT) AS dev_milli
 FROM agg ORDER BY digit
 """
+register(benford_digits_orders, oracle=BENFORD_SQL)
 
 
 def tokenizer_fertility_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,6 +831,7 @@ SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
          AS fertility_milli
 FROM per GROUP BY lang ORDER BY lang
 """
+register(tokenizer_fertility_documents, oracle=FERTILITY_SQL)
 
 
 def bfs_reachability_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,6 +945,7 @@ WITH RECURSIVE b0 AS (
 SELECT CAST(lvl AS INT) AS lvl, CAST(count(*) AS BIGINT) AS n_users
 FROM minlvl GROUP BY lvl ORDER BY lvl
 """
+register(bfs_reachability_users, oracle=BFS_REACH_SQL)
 
 
 def hhi_concentration_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -997,6 +1007,7 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n_users,
        CAST(max(ppm) AS BIGINT) AS top_share_ppm
 FROM shares GROUP BY 1 ORDER BY 1
 """
+register(hhi_concentration_events, oracle=HHI_SQL)
 
 
 def outliers_mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1060,6 +1071,7 @@ SELECT d.event_type,
 FROM dev d JOIN mad m2 USING (event_type)
 GROUP BY 1 ORDER BY 1
 """
+register(outliers_mad_events, oracle=OUTLIERS_MAD_SQL)
 
 
 def percentiles_global_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1138,6 +1150,7 @@ SELECT pct, CAST(rn AS BIGINT) AS rk, price, n AS n_rows
 FROM numbered JOIN targets ON rn = target
 ORDER BY pct
 """
+register(percentiles_global_lineitem, oracle=PERCENTILES_GLOBAL_SQL)
 
 
 def gini_user_activity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,6 +1220,7 @@ SELECT n_users, total_events,
             // (n_users * total_events) AS BIGINT) AS gini_milli
 FROM agg
 """
+register(gini_user_activity_events, oracle=GINI_SQL)
 
 
 def sorted_neighborhood_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1268,6 +1282,7 @@ JOIN numbered b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3
 WHERE levenshtein(a.c_name, b.c_name) <= 4
 ORDER BY custkey_a, custkey_b
 """
+register(sorted_neighborhood_customers, oracle=SORTED_NEIGHBORHOOD_SQL)
 
 
 def auc_lang_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1346,6 +1361,7 @@ SELECT CAST((2 * sum(p_s * cum_neg_below) + sum(p_s * n_s)) * 1000000
        CAST(sum(n_s) AS BIGINT) AS n_neg
 FROM cum
 """
+register(auc_lang_quality_documents, oracle=AUC_LANG_QUALITY_SQL)
 
 
 def calibration_bins_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1393,6 +1409,7 @@ FROM documents
 GROUP BY 1
 ORDER BY bucket
 """
+register(calibration_bins_documents, oracle=CALIBRATION_BINS_SQL)
 
 
 def ohlc_bars_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1453,6 +1470,7 @@ FROM base
 GROUP BY event_type, bar_ts
 ORDER BY event_type, bar_ts
 """
+register(ohlc_bars_events, oracle=OHLC_BARS_SQL)
 
 
 def ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1544,6 +1562,7 @@ SELECT CAST(max(abs(CAST(cum_a AS HUGEINT) * n_b
        CAST(max(n_b) AS BIGINT) AS n_b
 FROM cum, tot
 """
+register(ks_drift_events, oracle=KS_DRIFT_SQL)
 
 
 def trend_slope_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1627,6 +1646,7 @@ FROM stats
 WHERE n * sxx - sx * sx > 0
 ORDER BY user_id
 """
+register(trend_slope_users, oracle=TREND_SLOPE_SQL)
 
 
 def cohens_kappa_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1710,6 +1730,7 @@ SELECT CAST(CASE WHEN (a+b+c+d)*(a+b+c+d) = (a+b)*(a+c) + (c+d)*(b+d)
        CAST(b + c AS BIGINT) AS n_disagree
 FROM conf
 """
+register(cohens_kappa_documents, oracle=COHENS_KAPPA_SQL)
 
 
 def l_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1750,6 +1771,7 @@ FROM documents
 GROUP BY lang, n_chars // 100
 ORDER BY lang, len_bucket
 """
+register(l_diversity_documents, oracle=L_DIVERSITY_SQL)
 
 
 def seasonal_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1837,6 +1859,7 @@ FROM with_mad
 GROUP BY event_type, hod
 ORDER BY event_type, hod
 """
+register(seasonal_anomaly_events, oracle=SEASONAL_ANOMALY_SQL)
 
 
 def weighted_median_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1917,6 +1940,7 @@ WHERE 2 * cumw >= totw
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
+register(weighted_median_lineitem, oracle=WEIGHTED_MEDIAN_SQL)
 
 
 def gap_islands_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1996,6 +2020,7 @@ FROM runs
 GROUP BY user_id
 ORDER BY user_id
 """
+register(gap_islands_events, oracle=GAP_ISLANDS_SQL)
 
 
 def wow_change_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2068,6 +2093,7 @@ FROM lagged
 WHERE prev_n IS NOT NULL
 ORDER BY event_type, week
 """
+register(wow_change_events, oracle=WOW_CHANGE_SQL)
 
 
 def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2126,6 +2152,7 @@ FROM streaks
 GROUP BY user_id
 ORDER BY user_id
 """
+register(activity_streaks_users, oracle=ACTIVITY_STREAKS_SQL)
 
 
 def conversion_lag_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2216,6 +2243,7 @@ FROM banded
 GROUP BY band
 ORDER BY band
 """
+register(conversion_lag_events, oracle=CONVERSION_LAG_SQL)
 
 
 def new_vs_returning_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2289,6 +2317,7 @@ FROM base
 GROUP BY day
 ORDER BY day
 """
+register(new_vs_returning_events, oracle=NEW_VS_RETURNING_SQL)
 
 
 def dedup_cluster_census(
@@ -2389,5 +2418,6 @@ FROM sizes
 GROUP BY cluster_size
 ORDER BY cluster_size
 """
+register(dedup_cluster_census, oracle=DEDUP_CLUSTER_CENSUS_SQL)
 
 

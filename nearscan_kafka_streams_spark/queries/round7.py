@@ -1,9 +1,6 @@
 """Round-7 additions: market-basket rules, clustering coefficient,
 referential integrity, embedding statistics, session mining,
-Z-order layout, quality-budget curve, bucketed joins, RRF.
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+Z-order layout, quality-budget curve, bucketed joins, RRF."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -12,6 +9,7 @@ from ._base import (  # noqa: F401
     SparkSession,
     Window,
     _t,
+    register,
 )
 from .relational import (  # noqa: F401
     _bm25_scored_docs,
@@ -154,6 +152,7 @@ WHERE c_ab >= 10
 ORDER BY lift_ppm DESC, antecedent, consequent
 LIMIT 50
 """
+register(association_rules_lineitem, oracle=ASSOCIATION_RULES_SQL)
 
 
 def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,6 +250,7 @@ SELECT 'supplier.s_nationkey->nation',
 FROM supplier LEFT JOIN nation ON n_nationkey = s_nationkey
 ORDER BY fk_edge
 """
+register(referential_integrity_audit, oracle=REFERENTIAL_INTEGRITY_SQL)
 
 
 def behavioral_entropy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,6 +311,7 @@ GROUP BY user_id
 ORDER BY n_events DESC, user_id
 LIMIT 100
 """
+register(behavioral_entropy_users, oracle=BEHAVIORAL_ENTROPY_SQL)
 
 
 def duplicate_share_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,6 +388,7 @@ SELECT source, n_docs, n_dup_docs, n_removable,
 FROM per_source
 ORDER BY source
 """
+register(duplicate_share_by_source, oracle=DUPLICATE_SHARE_SQL)
 
 
 def dedup_near_time_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,6 +474,7 @@ FROM pairs
 GROUP BY event_type
 ORDER BY event_type
 """
+register(dedup_near_time_events, oracle=DEDUP_NEAR_TIME_SQL)
 
 
 def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,6 +547,7 @@ SELECT CAST(dim AS INT) AS dim,
 FROM stats
 ORDER BY dim
 """
+register(embedding_dim_stats, oracle=EMBEDDING_DIM_STATS_SQL)
 
 
 def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,6 +662,7 @@ JOIN norms na ON na.label = label_a
 JOIN norms nb ON nb.label = label_b
 ORDER BY label_a, label_b
 """
+register(label_centroid_similarity, oracle=LABEL_CENTROID_SQL)
 
 
 def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,6 +754,7 @@ FROM q a JOIN q b ON a.vec_id = b.vec_id AND a.dim <= b.dim
 GROUP BY a.dim, b.dim
 ORDER BY i, j
 """
+register(embedding_gram_matrix, oracle=EMBEDDING_GRAM_SQL)
 
 
 def zorder_layout_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,6 +835,7 @@ FROM zed
 GROUP BY z
 ORDER BY z
 """
+register(zorder_layout_lineitem, oracle=ZORDER_LAYOUT_SQL)
 
 
 def quality_budget_curve_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,6 +930,7 @@ FROM cum JOIN budgets ON cum_toks >= budget_tokens
 GROUP BY budget_tokens
 ORDER BY budget_tokens
 """
+register(quality_budget_curve_documents, oracle=QUALITY_BUDGET_CURVE_SQL)
 
 
 def top_paths_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1014,6 +1022,7 @@ GROUP BY path
 ORDER BY n_sessions DESC, path
 LIMIT 50
 """
+register(top_paths_sessions, oracle=TOP_PATHS_SQL)
 
 
 def clustering_coefficient_users(
@@ -1158,6 +1167,7 @@ FROM deg LEFT JOIN tri_nodes tn ON tn.x = deg.x
 ORDER BY degree DESC, user_id
 LIMIT 100
 """
+register(clustering_coefficient_users, oracle=CLUSTERING_COEFF_SQL)
 
 
 def bucketed_join_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,6 +1241,7 @@ FROM lineitem JOIN orders ON o_orderkey = l_orderkey
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
+register(bucketed_join_lineitem, oracle=BUCKETED_JOIN_SQL)
 
 
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,6 +1403,7 @@ FROM t_top t FULL OUTER JOIN v_top v USING (doc_id)
 ORDER BY rrf_ppm DESC, doc_id
 LIMIT 20
 """
+register(hybrid_rrf_retrieval, oracle=HYBRID_RRF_SQL)
 
 
 def minhash_candidate_pr_audit(
@@ -1519,6 +1531,7 @@ SELECT CAST(n_candidates AS BIGINT) AS n_candidates,
             ELSE CAST(NULL AS BIGINT) END AS recall_ppm
 FROM counts
 """
+register(minhash_candidate_pr_audit, oracle=MINHASH_PR_AUDIT_SQL)
 
 
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,6 +1600,7 @@ SELECT lang, lang_pred, CAST(n_docs AS BIGINT) AS n_docs,
 FROM cells
 ORDER BY lang, lang_pred
 """
+register(lang_id_confusion, oracle=LANG_CONFUSION_SQL)
 
 
 def dedup_threshold_sweep(
@@ -1786,5 +1800,6 @@ base AS (
     )
     + "\nORDER BY threshold_pct\n"
 )
+register(dedup_threshold_sweep, oracle=DEDUP_THRESHOLD_SWEEP_SQL)
 
 

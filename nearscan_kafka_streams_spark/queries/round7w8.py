@@ -1,9 +1,6 @@
 """Round-7 wave 8 + round-8 additions: t-closeness, autocorrelation,
 assortativity, fan-out, inter-arrival, monotonicity, trimmed mean,
-mutual-NN, k-core, zone-map audit, water-filling, prefix census.
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+mutual-NN, k-core, zone-map audit, water-filling, prefix census."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -13,6 +10,7 @@ from ._base import (  # noqa: F401
     Window,
     _t,
     token_count,
+    register,
 )
 from .dedup import (  # noqa: F401
     jaccard_edges_frame,
@@ -163,6 +161,7 @@ SELECT lang, source, CAST(n_c AS BIGINT) AS class_size,
 FROM dist CROSS JOIN tot
 ORDER BY lang, source
 """
+register(t_closeness_documents, oracle=T_CLOSENESS_SQL)
 
 
 def autocorr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,6 +255,7 @@ FROM pairs CROSS JOIN den
 WHERE den > 0
 ORDER BY lag
 """
+register(autocorr_events, oracle=AUTOCORR_SQL)
 
 
 def degree_assortativity_users(
@@ -353,6 +353,7 @@ SELECT CAST(M // 2 AS BIGINT) AS n_edges,
             ELSE 0 END AS BIGINT) AS assortativity_ppm
 FROM stats
 """
+register(degree_assortativity_users, oracle=DEGREE_ASSORTATIVITY_SQL)
 
 
 def join_fanout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,6 +443,7 @@ SELECT edge, CAST(n_children AS BIGINT) AS n_children,
 FROM per
 ORDER BY edge
 """
+register(join_fanout_audit, oracle=JOIN_FANOUT_SQL)
 
 
 def interarrival_histogram_events(
@@ -509,6 +511,7 @@ WHERE gap_s IS NOT NULL
 GROUP BY 1
 ORDER BY bucket
 """
+register(interarrival_histogram_events, oracle=INTERARRIVAL_SQL)
 
 
 def monotonic_violations_orders(
@@ -572,6 +575,7 @@ WHERE prev_d IS NOT NULL
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
+register(monotonic_violations_orders, oracle=MONOTONIC_VIOLATIONS_SQL)
 
 
 def trimmed_mean_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,6 +654,7 @@ FROM ranked CROSS JOIN tot
 WHERE rn > n_total // 10 AND rn <= n_total - n_total // 10
 GROUP BY n_total
 """
+register(trimmed_mean_lineitem, oracle=TRIMMED_MEAN_SQL)
 
 
 def mutual_nn_pairs_embeddings(
@@ -770,6 +775,7 @@ FROM nn m1 JOIN nn m2 ON m1.a = m2.b AND m1.b = m2.a
 WHERE m1.rk = 1 AND m2.rk = 1 AND m1.a < m1.b
 ORDER BY left_id
 """
+register(mutual_nn_pairs_embeddings, oracle=MUTUAL_NN_SQL)
 
 
 def k_core_peel_users(
@@ -956,6 +962,7 @@ kk AS MATERIALIZED (
 
 
 K_CORE_SQL = _k_core_sql()
+register(k_core_peel_users, oracle=K_CORE_SQL)
 
 
 _PRUNE_Z = (
@@ -1147,6 +1154,7 @@ FROM stat_{name}"""
 
 
 SCAN_PRUNING_SQL = _scan_pruning_sql()
+register(scan_pruning_audit_lineitem, oracle=SCAN_PRUNING_SQL)
 
 
 def token_budget_waterfill_sources(
@@ -1252,6 +1260,7 @@ SELECT source, avail,
 FROM feas CROSS JOIN kk
 ORDER BY source
 """
+register(token_budget_waterfill_sources, oracle=WATERFILL_SQL)
 
 
 def boilerplate_prefix_census(
@@ -1386,6 +1395,7 @@ FROM per_cluster
 GROUP BY ns
 ORDER BY n_sources
 """
+register(dedup_cluster_source_span, oracle=CLUSTER_SOURCE_SPAN_SQL)
 
 
 BOILERPLATE_PREFIX_SQL = r"""
@@ -1409,5 +1419,6 @@ HAVING count(*) >= 2
 ORDER BY n_docs DESC, prefix
 LIMIT 20
 """
+register(boilerplate_prefix_census, oracle=BOILERPLATE_PREFIX_SQL)
 
 

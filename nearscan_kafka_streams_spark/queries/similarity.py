@@ -1,8 +1,5 @@
 """Training-data pipeline: similarity search (brute-force / IVF /
-LSH / PQ ANN variants).
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+LSH / PQ ANN variants)."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -13,6 +10,7 @@ from ._base import (  # noqa: F401
     brute_force_topk,
     lsh_topk,
     pq_topk,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -45,6 +43,7 @@ SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank FROM (
   WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
 ) WHERE rank <= 5
 """
+register(ann_bruteforce_cosine, oracle=ANN_BRUTEFORCE_SQL)
 
 
 def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,6 +59,9 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(ann_ivf_cosine)
+
+
 def ann_ivf_fullprobe_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probing EVERY cell: candidates = whole corpus, so the result
     must equal exact brute force -- which makes the entire IVF
@@ -73,6 +75,9 @@ def ann_ivf_fullprobe_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
+
+
+register(ann_ivf_fullprobe_cosine, oracle=ANN_BRUTEFORCE_SQL)
 
 
 def ann_ivf_persisted_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,6 +105,9 @@ def ann_ivf_persisted_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
+
+
+register(ann_ivf_persisted_fullprobe, oracle=ANN_BRUTEFORCE_SQL)
 
 
 def ann_ivf_append_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,6 +139,9 @@ def ann_ivf_append_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(ann_ivf_append_fullprobe, oracle=ANN_BRUTEFORCE_SQL)
+
+
 def ann_pq_fullrerank_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ with a corpus-deep rerank: the refine stage scores EVERY
     candidate exactly, so the output must equal brute force -- making
@@ -146,6 +157,9 @@ def ann_pq_fullrerank_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("adc_score", 6).alias("cosine"),
         "rank",
     )
+
+
+register(ann_pq_fullrerank_cosine, oracle=ANN_BRUTEFORCE_SQL)
 
 
 def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,6 +178,9 @@ def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(ann_pq_cosine)
+
+
 def ann_lsh_fullbucket_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane LSH with ZERO bits: every vector lands in the single
     bucket, so the bucket join + scoring + top-k must equal exact
@@ -176,6 +193,9 @@ def ann_lsh_fullbucket_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+register(ann_lsh_fullbucket_cosine, oracle=ANN_BRUTEFORCE_SQL)
+
+
 def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via hyperplane-LSH bucketing (rows-only check;
     recall vs brute force is pinned in tests/)."""
@@ -185,5 +205,8 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
+
+
+register(ann_lsh_cosine)
 
 

@@ -1,8 +1,5 @@
 """Training-data pipeline: text analysis (lang-id, quality, tokens,
-fingerprints, sampling, scrubbing).
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+fingerprints, sampling, scrubbing)."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -14,6 +11,7 @@ from ._base import (  # noqa: F401
     jaccard_similarity_join,
     quality_score,
     token_count,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -33,6 +31,7 @@ SELECT doc_id,
             ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
 FROM documents
 """
+register(text_token_count, oracle=TOKEN_COUNT_SQL)
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,6 +72,7 @@ SELECT doc_id,
            + 0.3 * least(1.0, swr * 5.0) + 0.000000001, 6) AS quality
 FROM s
 """
+register(text_quality_score, oracle=QUALITY_SQL)
 
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,6 +106,7 @@ SELECT doc_id,
             ELSE 'es' END AS lang_pred
 FROM h
 """
+register(text_lang_id, oracle=LANG_ID_SQL)
 
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,6 +122,7 @@ FINGERPRINT_SQL = r"""
 SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
 FROM documents
 """
+register(text_fingerprint, oracle=FINGERPRINT_SQL)
 
 
 def pivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,6 +161,7 @@ SELECT o_orderstatus,
 FROM orders
 GROUP BY o_orderstatus
 """
+register(pivot_orders, oracle=PIVOT_ORDERS_SQL)
 
 
 def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,6 +201,7 @@ SELECT doc_id,
            '\b(?:customer|vector)\b', '<REDACTED>', 'g')) AS scrubbed_fp
 FROM documents
 """
+register(text_scrub, oracle=TEXT_SCRUB_SQL)
 
 
 def percentile_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,6 +231,7 @@ SELECT c_nationkey,
 FROM customer
 GROUP BY c_nationkey
 """
+register(percentile_acctbal, oracle=PERCENTILE_SQL)
 
 
 def unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,6 +257,7 @@ SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
 UNION ALL
 SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
 """
+register(unpivot_lineitem, oracle=UNPIVOT_SQL)
 
 
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,6 +283,7 @@ WHERE length(gram) = 32
 GROUP BY gram
 HAVING count(DISTINCT doc_id) >= 2
 """
+register(dedup_substring_spans, oracle=SUBSTRING_SPANS_SQL)
 
 
 def dedup_winnowed_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,6 +322,7 @@ WHERE length(gram) = 32
 GROUP BY gram
 HAVING count(DISTINCT doc_id) >= 2
 """
+register(dedup_winnowed_spans, oracle=WINNOWED_SPANS_SQL)
 
 
 def token_budget_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,6 +362,7 @@ FROM (
   )
 )
 """
+register(token_budget_shards, oracle=TOKEN_SHARDS_SQL)
 
 
 def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,6 +391,7 @@ FROM documents
 WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) AS INT)
       < CASE lang WHEN 'en' THEN 4 WHEN 'zh' THEN 8 ELSE 16 END
 """
+register(stratified_sample_documents, oracle=STRATIFIED_SAMPLE_SQL)
 
 
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,6 +436,7 @@ SELECT 'o_orderpriority', count(*), count(o_orderpriority),
        CAST(max(o_orderpriority) AS VARCHAR)
 FROM orders
 """
+register(profile_orders, oracle=PROFILE_ORDERS_SQL)
 
 
 def term_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,6 +481,7 @@ WITH words AS (
 SELECT tf.doc_id, tf.term, tf.tf, df.df
 FROM tf JOIN df USING (term)
 """
+register(term_doc_stats, oracle=TERM_DOC_STATS_SQL)
 
 
 def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,6 +511,7 @@ GROUP BY word
 ORDER BY n DESC, word ASC
 LIMIT 50
 """
+register(vocab_topk, oracle=VOCAB_TOPK_SQL)
 
 
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,6 +535,7 @@ SELECT CAST(floor(length(text) / 128) AS BIGINT) AS bin_id,
 FROM documents
 GROUP BY bin_id
 """
+register(doc_length_histogram, oracle=DOC_LENGTH_HIST_SQL)
 
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,6 +592,7 @@ FROM base b
 LEFT JOIN runs r ON b.doc_id = r.doc_id
 LEFT JOIN bigrams g ON b.doc_id = g.doc_id
 """
+register(text_repetition, oracle=TEXT_REPETITION_SQL)
 
 
 def hash_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,6 +613,7 @@ HASH_SAMPLE_SQL = """
 SELECT event_id, user_id, event_type FROM events
 WHERE substring(md5(CAST(event_id AS VARCHAR)), 1, 1) IN ('0','1','2','3')
 """
+register(hash_sample_events, oracle=HASH_SAMPLE_SQL)
 
 
 def corpus_clean_pipeline(
@@ -834,6 +850,7 @@ SELECT doc_id, n_tokens, running,
             THEN 'val' ELSE 'train' END AS split
 FROM run
 """
+register(corpus_curate_pipeline, oracle=CORPUS_CURATE_SQL)
 
 
 CORPUS_CLEAN_SQL = rf"""
@@ -912,5 +929,6 @@ SELECT sv.doc_id, sv.lang, sv.quality,
 FROM survivors sv LEFT JOIN drop_ids di ON sv.doc_id = di.doc_id
 WHERE di.doc_id IS NULL
 """
+register(corpus_clean_pipeline, oracle=CORPUS_CLEAN_SQL)
 
 

@@ -1,8 +1,5 @@
 """Reference-topology operator shapes over the events table
-(T1 dedup, J1/J2 interval join, as-of join, U1 flat-map, A1 sum+max_by).
-
-Verbatim slice of the former single-module queries.py (registry
-order and behavior unchanged; see __init__.py)."""
+(T1 dedup, J1/J2 interval join, as-of join, U1 flat-map, A1 sum+max_by)."""
 from __future__ import annotations
 
 from ._base import (  # noqa: F401
@@ -10,6 +7,7 @@ from ._base import (  # noqa: F401
     F,
     SparkSession,
     _t,
+    register,
 )
 
 # --------------------------------------------------------------------------
@@ -27,6 +25,7 @@ def dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_EVENTS_SQL = "SELECT DISTINCT user_id, event_type FROM events"
+register(dedup_events, oracle=DEDUP_EVENTS_SQL)
 
 
 def interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,6 +61,7 @@ FROM events e JOIN events p
  AND e.event_type = 'error' AND p.event_type = 'purchase'
  AND p.ts BETWEEN e.ts - INTERVAL 30 MINUTE AND e.ts + INTERVAL 30 MINUTE
 """
+register(interval_join_events, oracle=INTERVAL_JOIN_SQL)
 
 
 def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,6 +100,7 @@ SELECT user_id, purchase_id, last_signup_id FROM (
    AND s.ts <= p.ts
 ) WHERE rn = 1
 """
+register(asof_join_events, oracle=ASOF_JOIN_SQL)
 
 
 def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,6 +121,7 @@ SELECT event_type,
        count(*) AS n
 FROM events GROUP BY event_type
 """
+register(json_extract_events, oracle=JSON_EXTRACT_SQL)
 
 
 def flatmap_legs_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,6 +182,7 @@ UNION ALL
 SELECT event_id, user_id AS account, 0.0 AS amount, 'welcome' AS reason
 FROM events WHERE event_type = 'signup'
 """
+register(flatmap_legs_events, oracle=FLATMAP_SQL)
 
 
 def running_balance_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,6 +216,7 @@ WITH agg AS (
 SELECT a.user_id AS user_id, a.total_value, l.latest_event_id, a.n_events
 FROM agg a JOIN latest l ON a.user_id = l.user_id
 """
+register(running_balance_events, oracle=RUNNING_BALANCE_SQL)
 
 
 def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,6 +243,7 @@ SELECT date_trunc('hour', ts) AS window_start, event_type,
        count(*) AS n, round(sum(value), 2) AS total
 FROM events GROUP BY date_trunc('hour', ts), event_type
 """
+register(tumbling_window_events, oracle=TUMBLING_SQL)
 
 
 def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,6 +286,7 @@ SELECT window_start, event_type, count(*) AS n,
 FROM expanded
 GROUP BY window_start, event_type
 """
+register(sliding_window_events, oracle=SLIDING_SQL)
 
 
 def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,6 +330,7 @@ SELECT user_id, min(ts) AS session_start,
 FROM islands GROUP BY user_id, session_id
 ORDER BY user_id, session_start
 """
+register(session_window_events, oracle=SESSION_WINDOW_SQL)
 
 
 def scalar_functions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,6 +374,7 @@ SELECT event_id,
        coalesce(json_extract_string(props, '$.missing'), 'none') AS fallback
 FROM events
 """
+register(scalar_functions_events, oracle=SCALAR_FN_SQL)
 
 
 def array_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,6 +410,7 @@ SELECT user_id, CAST(len(types) AS INT) AS n, types[1] AS first_type,
        array_to_string(list_sort(list_distinct(types)), ',') AS distinct_csv
 FROM t
 """
+register(array_agg_events, oracle=ARRAY_AGG_SQL)
 
 
 def approx_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,5 +423,8 @@ def approx_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("value", 0.5).alias("approx_median"),
         F.count(F.lit(1)).alias("n"),
     )
+
+
+register(approx_sketches_events)
 
 

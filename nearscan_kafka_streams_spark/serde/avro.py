@@ -287,7 +287,12 @@ def confluent_frame(schema_id: int, body: bytes) -> bytes:
 
 
 def confluent_unframe(data: bytes) -> tuple[int, bytes]:
-    if not data or data[0:1] != CONFLUENT_MAGIC:
+    if len(data) < 5:
+        raise ValueError(
+            f"{len(data)}-byte Confluent frame is shorter than magic + "
+            "schema id (5 bytes)"
+        )
+    if data[0:1] != CONFLUENT_MAGIC:
         raise ValueError("not Confluent wire format (bad magic byte)")
     return int.from_bytes(data[1:5], "big"), data[5:]
 

@@ -13,20 +13,21 @@ engine-native read path: a directory of record-log files (each record
     spark.read.format("confluentavro").schema(struct)
          .option("path", dir).option("avro_schema", json).load()
 
-Scale shape: planning lists files; ONE InputPartition per file, so a
-1000-file log drives 1000 parallel decode tasks (the Kafka-partition
-analog), each streaming through its file without materializing it.
-Decode uses the pure-Python Avro codec (`serde/avro.py`, written from
-the Avro spec) -- the identical bytes-level path the wire tests pin.
+Scale shape: planning lists files; ONE InputPartition per file (per
+file record range when streaming), so a 1000-file log drives 1000
+parallel decode tasks (the Kafka-partition analog).  Each task reads
+its whole segment into one buffer; memory per task is bounded by the
+segment size, not by a chunk.
 
-Transfer shape: both the batch and the streaming reader yield
-`pyarrow.RecordBatch`es (records decoded executor-side, batched
-ARROW_BATCH_SIZE at a time), not per-record Python tuples -- the
-Python<->JVM boundary is crossed once per batch, the same vectorized
-lane Pandas UDFs use.  `option("arrow", "false")` restores the
-row-at-a-time tuple lane (kept for A/B measurement).  On a real
-cluster the JVM path (kafka source + substring(value, 6) + from_avro)
-replaces this source entirely -- see MIGRATION.md.
+Decode: the numpy field-sweep decoder (`serde/avro_vec.py`) when the
+schema supports it, else the pure-Python Avro codec (`serde/avro.py`,
+written from the Avro spec); a record the sweep refuses sends the rest
+of the range to the codec, starting at that record.  Both readers
+yield `pyarrow.RecordBatch`es of ARROW_BATCH_SIZE records, so the
+Python<->JVM boundary is crossed once per batch.  A frame shorter than
+magic + schema id (5 bytes) raises ValueError.  On a real cluster the
+JVM path (kafka source + substring(value, 6) + from_avro) replaces
+this source entirely -- see MIGRATION.md.
 """
 
 from __future__ import annotations
@@ -70,15 +71,6 @@ def _count_records(path: str) -> int:
     return n
 
 
-def _decode_rows(framed_iter, codec, names):
-    from nearscan_kafka_streams_spark.serde.avro import confluent_unframe
-
-    for framed in framed_iter:
-        _schema_id, body = confluent_unframe(framed)
-        rec = codec.decode(body)
-        yield {n: rec.get(n) for n in names}
-
-
 def _arrow_schema_for(spark_schema):
     """Arrow image of the Spark schema, computed DRIVER-side: the
     pyspark.sql.pandas.types import pulls pandas in, which costs ~1 s
@@ -89,15 +81,23 @@ def _arrow_schema_for(spark_schema):
     return to_arrow_schema(spark_schema)
 
 
-def _arrow_batches(framed_iter, codec, names, arrow_schema, batch_size):
-    """Decode framed records into `pyarrow.RecordBatch`es of
-    ``batch_size`` rows, typed by the Spark schema's Arrow image (so
-    decimals land as decimal128 and nothing re-infers per batch)."""
+def _row_batches(framed_iter, avro_schema, names, arrow_schema, batch_size):
+    """Decode framed records with the row codec into
+    `pyarrow.RecordBatch`es of ``batch_size`` rows, typed by the Spark
+    schema's Arrow image (so decimals land as decimal128 and nothing
+    re-infers per batch)."""
     import pyarrow as pa
 
+    from nearscan_kafka_streams_spark.serde.avro import (
+        AvroCodec,
+        confluent_unframe,
+    )
+
+    codec = AvroCodec(avro_schema)
     rows: list[dict] = []
-    for row in _decode_rows(framed_iter, codec, names):
-        rows.append(row)
+    for framed in framed_iter:
+        rec = codec.decode(confluent_unframe(framed)[1])
+        rows.append({n: rec.get(n) for n in names})
         if len(rows) >= batch_size:
             yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
             rows = []
@@ -135,6 +135,11 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
         if stop is not None and i >= stop:
             break
         if i >= skip:
+            if n < 5:
+                raise ValueError(
+                    f"{path}: {n}-byte frame at {pos + 4} is shorter than "
+                    "magic + schema id (5 bytes)"
+                )
             starts.append(pos + 4)
         pos += 4 + n
         i += 1
@@ -146,8 +151,7 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
 
 
 def _batches_auto(
-    path, skip, stop, avro_schema, names, arrow_schema, batch_size,
-    vectorized=True,
+    path, skip, stop, avro_schema, names, arrow_schema, batch_size
 ):
     """Yield RecordBatches for records [skip, stop) of ``path``: the
     vectorized numpy decoder when the schema supports it, the
@@ -155,15 +159,12 @@ def _batches_auto(
     back to the row path AT THE FAILED RECORD (already-yielded batches
     are never re-emitted), so exotic data degrades to the old cost
     instead of erroring differently."""
-    from nearscan_kafka_streams_spark.serde.avro import AvroCodec
     from nearscan_kafka_streams_spark.serde.avro_vec import (
         VectorizedDecoder,
     )
 
     decoder = None
-    if vectorized and arrow_schema is not None and VectorizedDecoder.supports(
-        avro_schema, arrow_schema
-    ):
+    if VectorizedDecoder.supports(avro_schema, arrow_schema):
         try:
             decoder = VectorizedDecoder(avro_schema, arrow_schema)
             buf, body_starts = _scan_frame_bodies(path, skip, stop)
@@ -181,10 +182,9 @@ def _batches_auto(
             return
         except Exception:  # noqa: BLE001
             pass  # resume below on the row path at record skip+yielded
-    codec = AvroCodec(avro_schema)
     framed = read_framed_log(path, skip + yielded, stop)
-    yield from _arrow_batches(
-        framed, codec, names, arrow_schema, batch_size
+    yield from _row_batches(
+        framed, avro_schema, names, arrow_schema, batch_size
     )
 
 
@@ -225,36 +225,40 @@ def read_framed_log(
             i += 1
 
 
+def _path_and_schema(options) -> tuple[str, str]:
+    path = options.get("path")
+    if not path:
+        raise ValueError("confluentavro: option 'path' is required")
+    avro_schema = options.get("avro_schema")
+    if not avro_schema:
+        raise ValueError(
+            "confluentavro: option 'avro_schema' (JSON) is required"
+        )
+    return path, avro_schema
+
+
+class _LogReader:
+    """Options and decode shared by the batch and stream readers."""
+
+    def __init__(self, schema, options):
+        self.dir, self.avro_schema = _path_and_schema(options)
+        self.names = [f.name for f in schema.fields]
+        self.arrow_schema = _arrow_schema_for(schema)
+
+    def _decode(self, path: str, skip: int = 0, stop: int | None = None):
+        # executor-side: decode records [skip, stop) of one segment
+        return _batches_auto(
+            path, skip, stop, self.avro_schema, self.names,
+            self.arrow_schema, ARROW_BATCH_SIZE,
+        )
+
+
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
 
 
-class ConfluentAvroReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self.spark_schema = schema
-        path = options.get("path")
-        if not path:
-            raise ValueError("confluentavro: option 'path' is required")
-        self.dir = path
-        self.avro_schema = options.get("avro_schema")
-        if not self.avro_schema:
-            raise ValueError(
-                "confluentavro: option 'avro_schema' (JSON) is required"
-            )
-        self.arrow = options.get("arrow", "true").lower() != "false"
-        # measurement knob (same stance as option("arrow")): the
-        # numpy field-sweep decoder is the default; "false" restores
-        # the row-at-a-time codec lane for A/B
-        self.vectorized = (
-            options.get("vectorized", "true").lower() != "false"
-        )
-        self.batch_size = int(
-            options.get("arrow_batch_size", str(ARROW_BATCH_SIZE))
-        )
-        self.names = [f.name for f in schema.fields]
-        self.arrow_schema = _arrow_schema_for(schema) if self.arrow else None
-
+class ConfluentAvroReader(_LogReader, DataSourceReader):
     def partitions(self):
         files = sorted(
             os.path.join(self.dir, f)
@@ -264,25 +268,7 @@ class ConfluentAvroReader(DataSourceReader):
         return [_FilePartition(p) for p in files]
 
     def read(self, partition: _FilePartition):
-        # imports INSIDE read: this body executes on executors
-        from nearscan_kafka_streams_spark.serde.avro import AvroCodec
-
-        if self.arrow:
-            yield from _batches_auto(
-                partition.path,
-                0,
-                None,
-                self.avro_schema,
-                self.names,
-                self.arrow_schema,
-                self.batch_size,
-                vectorized=self.vectorized,
-            )
-        else:
-            codec = AvroCodec(self.avro_schema)
-            framed = read_framed_log(partition.path)
-            for row in _decode_rows(framed, codec, self.names):
-                yield tuple(row[n] for n in self.names)
+        yield from self._decode(partition.path)
 
 
 class ConfluentAvroDataSource(DataSource):
@@ -318,7 +304,7 @@ class _RangePartition(InputPartition):
         self.stop = stop
 
 
-class ConfluentAvroStreamReader(DataSourceStreamReader):
+class ConfluentAvroStreamReader(_LogReader, DataSourceStreamReader):
     """Streaming half of the source (full partition-based
     DataSourceStreamReader): files are immutable append-only segments
     (the Kafka-segment analog); the offset is a per-file
@@ -332,29 +318,6 @@ class ConfluentAvroStreamReader(DataSourceStreamReader):
     -- no driver-side materialization, no per-record Python tuples.
     Replay between checkpointed offsets re-plans the identical ranges
     over the immutable segments (exactly-once offsets contract)."""
-
-    def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.dir = options.get("path")
-        if not self.dir:
-            raise ValueError("confluentavro: option 'path' is required")
-        self.avro_schema = options.get("avro_schema")
-        if not self.avro_schema:
-            raise ValueError(
-                "confluentavro: option 'avro_schema' (JSON) is required"
-            )
-        self.arrow = options.get("arrow", "true").lower() != "false"
-        # measurement knob (same stance as option("arrow")): the
-        # numpy field-sweep decoder is the default; "false" restores
-        # the row-at-a-time codec lane for A/B
-        self.vectorized = (
-            options.get("vectorized", "true").lower() != "false"
-        )
-        self.batch_size = int(
-            options.get("arrow_batch_size", str(ARROW_BATCH_SIZE))
-        )
-        self.names = [f.name for f in schema.fields]
-        self.arrow_schema = _arrow_schema_for(schema) if self.arrow else None
 
     def initialOffset(self) -> dict:
         return {"consumed": {}}
@@ -405,27 +368,7 @@ class ConfluentAvroStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _RangePartition):
-        # executor-side: decode only this partition's record range
-        from nearscan_kafka_streams_spark.serde.avro import AvroCodec
-
-        if self.arrow:
-            yield from _batches_auto(
-                partition.path,
-                partition.skip,
-                partition.stop,
-                self.avro_schema,
-                self.names,
-                self.arrow_schema,
-                self.batch_size,
-                vectorized=self.vectorized,
-            )
-        else:
-            codec = AvroCodec(self.avro_schema)
-            framed = read_framed_log(
-                partition.path, partition.skip, partition.stop
-            )
-            for row in _decode_rows(framed, codec, self.names):
-                yield tuple(row[n] for n in self.names)
+        yield from self._decode(partition.path, partition.skip, partition.stop)
 
     def commit(self, end: dict) -> None:
         # segments are immutable; nothing to clean up at offset commit
@@ -447,15 +390,7 @@ class ConfluentAvroWriter(DataSourceWriter):
     from the Schema Registry at startup, serde/registry.py)."""
 
     def __init__(self, schema, options, overwrite: bool):
-        self.spark_schema = schema
-        self.dir = options.get("path")
-        if not self.dir:
-            raise ValueError("confluentavro: option 'path' is required")
-        self.avro_schema = options.get("avro_schema")
-        if not self.avro_schema:
-            raise ValueError(
-                "confluentavro: option 'avro_schema' (JSON) is required"
-            )
+        self.dir, self.avro_schema = _path_and_schema(options)
         self.schema_id = int(options.get("schema_id", "1"))
         self.overwrite = overwrite
 

@@ -16,6 +16,7 @@ import pytest
 
 from pyspark.sql.types import (
     BooleanType,
+    DecimalType,
     DoubleType,
     FloatType,
     LongType,
@@ -249,3 +250,49 @@ def test_empty_batch():
     buf, starts = _pack([])
     batch = dec.decode_batch(buf, starts)
     assert batch.num_rows == 0
+
+
+def test_mid_file_vector_failure_resumes_on_row_path(tmp_path):
+    # record 2's decimal is sign-extended to 17 bytes: valid Avro that
+    # the row codec reads, but wider than decimal128 storage, so the
+    # vector decoder refuses it.  With batch_size=2 the first batch
+    # comes from the vector path and the rest from the row path,
+    # starting at the batch that failed.
+    from nearscan_kafka_streams_spark.serde.avro import confluent_frame
+    from nearscan_kafka_streams_spark.sources.pyds import (
+        _batches_auto,
+        write_framed_log,
+    )
+
+    struct = StructType(
+        [
+            StructField("id", LongType(), False),
+            StructField("amount", DecimalType(38, 0), True),
+        ]
+    )
+    avro = avro_schema_from_struct(
+        struct, name="R", precision_overrides={"amount": 45}
+    )
+    codec = AvroCodec(avro)
+    bodies = [
+        codec.encode({"id": i, "amount": decimal.Decimal(10**37 + i)})
+        for i in range(5)
+    ]
+    small = codec.encode({"id": 2, "amount": decimal.Decimal(5)})
+    assert small.endswith(b"\x02\x05")  # bytes of length 1: 0x05
+    bodies[2] = small[:-2] + b"\x22" + b"\x00" * 16 + b"\x05"
+    arrow_schema = _arrow_schema(struct)
+    dec = VectorizedDecoder(avro, arrow_schema)
+    with pytest.raises(OverflowError):
+        dec.decode_batch(*_pack(bodies[2:3]))
+
+    path = str(tmp_path / "log" / "part-00000.bin")
+    write_framed_log([confluent_frame(1, b) for b in bodies], path)
+    batches = list(
+        _batches_auto(path, 0, None, avro, ["id", "amount"], arrow_schema, 2)
+    )
+    assert [b.num_rows for b in batches] == [2, 2, 1]
+    got = [row for b in batches for row in b.to_pylist()]
+    want = [codec.decode(b) for b in bodies]
+    assert got == want
+    assert got[2] == {"id": 2, "amount": decimal.Decimal(5)}

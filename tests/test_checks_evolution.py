@@ -74,7 +74,9 @@ def test_foreign_key_orphans(spark):
 
 
 def test_data_quality_orders_green_on_testdata(spark):
-    from nearscan_kafka_streams_spark.queries import data_quality_orders
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        data_quality_orders,
+    )
 
     rep = _report(data_quality_orders(spark, "/root/testdata/sf0.001"))
     assert len(rep) == 7

@@ -213,7 +213,9 @@ def test_salted_join_rejects_unsupported_how(spark):
 
 # ------------------------------------------------------------- normalize
 def test_normalize_invariants(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import normalize_events_features
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        normalize_events_features,
+    )
 
     out = normalize_events_features(spark, sf_dir).toPandas()
     assert ((out["minmax"] >= 0) & (out["minmax"] <= 1)).all()

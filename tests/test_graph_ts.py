@@ -53,7 +53,7 @@ def test_pagerank_mass_bounded(spark):
 
 
 def test_ewma_matches_pandas_model(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import ewma_events
+    from nearscan_kafka_streams_spark.queries.corpus_ops import ewma_events
 
     out = ewma_events(spark, sf_dir).toPandas().set_index("event_id")
 

@@ -6,13 +6,13 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     INTERLEAVE_WEIGHT_DEFAULT,
     INTERLEAVE_WEIGHTS,
-    _t,
     chisq_lang_source,
     interleave_mixture_schedule,
 )
+from nearscan_kafka_streams_spark.queries._base import _t
 
 
 def test_interleave_prefixes_track_weights(spark, sf_dir):

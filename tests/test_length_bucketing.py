@@ -4,7 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import _t, length_bucket_batches
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
+    length_bucket_batches,
+)
 
 
 def test_batches_are_dense_and_complete(spark, sf_dir):

@@ -6,7 +6,9 @@ from pyspark.sql import functions as F
 
 
 def test_fuzzy_match_blocks_and_thresholds(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import fuzzy_match_parts
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        fuzzy_match_parts,
+    )
 
     out = fuzzy_match_parts(spark, sf_dir).toPandas()
     # every pair shares its blocking token and sits inside the band
@@ -19,7 +21,9 @@ def test_fuzzy_match_blocks_and_thresholds(spark, sf_dir):
 
 def test_fuzzy_match_plan_is_blocked_not_cartesian(spark, sf_dir):
     from nearscan_kafka_streams_spark.plans.explain import formatted_plan
-    from nearscan_kafka_streams_spark.queries import fuzzy_match_parts
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        fuzzy_match_parts,
+    )
 
     plan = formatted_plan(fuzzy_match_parts(spark, sf_dir))
     # the block key must drive an equi-join: hash/broadcast-hash, never
@@ -29,7 +33,9 @@ def test_fuzzy_match_plan_is_blocked_not_cartesian(spark, sf_dir):
 
 
 def test_retrieval_eval_self_consistency(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import retrieval_eval_metrics
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        retrieval_eval_metrics,
+    )
 
     out = retrieval_eval_metrics(spark, sf_dir).toPandas()
     assert len(out) == 10  # one row per query
@@ -73,7 +79,9 @@ def test_retrieval_eval_exact_system_has_perfect_recall(spark, sf_dir):
 def test_group_split_no_leakage(spark, sf_dir):
     """Every source lands wholly in one fold -- the property that
     row-level splits violate when near-dups share a source."""
-    from nearscan_kafka_streams_spark.queries import group_split_documents
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        group_split_documents,
+    )
 
     out = group_split_documents(spark, sf_dir).toPandas()
     assert (out.groupby("source")["fold"].nunique() == 1).all()
@@ -85,7 +93,9 @@ def test_group_split_no_leakage(spark, sf_dir):
 
 
 def test_curriculum_bins_partition_corpus(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import curriculum_bins_documents
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        curriculum_bins_documents,
+    )
 
     out = curriculum_bins_documents(spark, sf_dir).toPandas()
     assert list(out["tier"]) == [1, 2, 3, 4]

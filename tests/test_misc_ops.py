@@ -5,7 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import _t, approx_sketches_events
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.topology import (
+    approx_sketches_events,
+)
 from nearscan_kafka_streams_spark.streaming.reset import reset_pipeline
 
 

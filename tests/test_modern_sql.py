@@ -6,13 +6,13 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     PSEUDO_SECRET,
-    _t,
     pseudonymize_events,
     recursive_cte_hierarchy,
     variant_json_events,
 )
+from nearscan_kafka_streams_spark.queries._base import _t
 
 
 def test_recursive_hierarchy_matches_python_model(spark, sf_dir):
@@ -140,7 +140,9 @@ def test_variant_survives_parquet_round_trip(spark, tmp_path, sf_dir):
 def test_listagg_deterministic_across_partitionings(spark, sf_dir):
     """The struct-sort-before-concat recipe: identical history strings
     whatever the physical layout (raw collect_list would not be)."""
-    from nearscan_kafka_streams_spark.queries import listagg_order_history
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        listagg_order_history,
+    )
 
     a = sorted(map(tuple, listagg_order_history(spark, sf_dir).collect()))
     o = _t(spark, sf_dir, "orders").repartition(13, "o_orderkey")

@@ -16,7 +16,7 @@ from nearscan_kafka_streams_spark.plans import (
     pushed_filters,
     read_schema_columns,
 )
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.relational import (
     broadcast_dim_join,
     filter_project_scan,
     q1_pricing_summary,
@@ -64,7 +64,9 @@ def test_containment_join_plan_shape(spark, sf_dir):
     prefix-vs-full-index candidate join keys on the gram (never a
     cartesian), and broadcast_verify=True broadcasts both set sides."""
     from nearscan_kafka_streams_spark.functions.dedup import release_cached
-    from nearscan_kafka_streams_spark.queries import dedup_ngram_containment
+    from nearscan_kafka_streams_spark.queries.dedup import (
+        dedup_ngram_containment,
+    )
 
     df = dedup_ngram_containment(spark, sf_dir)
     plan = formatted_plan(df)
@@ -75,7 +77,7 @@ def test_containment_join_plan_shape(spark, sf_dir):
 
 
 def test_observe_counts(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import _t
+    from nearscan_kafka_streams_spark.queries._base import _t
 
     df = observe_counts(_t(spark, sf_dir, "region"), "region_rows")
     n = df.count()
@@ -99,7 +101,9 @@ def test_single_partition_payload_plan(spark):
 def test_plan_summary_counts(spark, sf_dir):
     """plan_summary (bench fingerprint) counts joins/exchanges/scans."""
     from nearscan_kafka_streams_spark.plans.explain import plan_summary
-    from nearscan_kafka_streams_spark.queries import q5_local_supplier_volume
+    from nearscan_kafka_streams_spark.queries.relational import (
+        q5_local_supplier_volume,
+    )
 
     s = plan_summary(q5_local_supplier_volume(spark, sf_dir))
     assert s["broadcast_hash_join"] >= 2  # region/nation dims broadcast
@@ -111,7 +115,7 @@ def test_plan_summary_counts(spark, sf_dir):
 def test_new_tpch_queries_plan_shapes(spark, sf_dir):
     """Round-3 TPC-H batch: dimension joins broadcast, never cartesian,
     and q6's predicates reach the scan."""
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.relational import (
         q6_forecast_revenue,
         q7_volume_shipping,
         q10_returned_items,
@@ -142,7 +146,7 @@ def test_round4_tpch_queries_plan_shapes(spark, sf_dir):
     no cartesian products anywhere; dimension-filtered joins broadcast;
     q13's outer join keeps zero-order customers (LEFT join survives in
     the plan, not rewritten to inner by the condition)."""
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.relational import (
         q2_min_cost_supplier,
         q8_market_share,
         q9_profit_by_nation,
@@ -176,7 +180,9 @@ def test_q15_global_max_not_single_task_window(spark, sf_dir):
     would sort the whole aggregate in ONE task (fatal at 100x supplier
     cardinality).  Pin: no Window operator at all, and the max joins
     back via broadcast."""
-    from nearscan_kafka_streams_spark.queries import q15_top_supplier
+    from nearscan_kafka_streams_spark.queries.relational import (
+        q15_top_supplier,
+    )
 
     plan = formatted_plan(q15_top_supplier(spark, sf_dir))
     assert "Window" not in plan, plan[:2000]
@@ -186,7 +192,9 @@ def test_q15_global_max_not_single_task_window(spark, sf_dir):
 def test_decontamination_broadcast_no_shuffle_of_train_grams(spark, sf_dir):
     """The eval gram table must broadcast: the train side's exploded
     grams never enter an exchange before the contamination join."""
-    from nearscan_kafka_streams_spark.queries import decontaminate_documents
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        decontaminate_documents,
+    )
 
     plan = formatted_plan(decontaminate_documents(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -228,7 +236,9 @@ def test_grouping_sets_single_pass(spark, sf_dir):
         formatted_plan,
         plan_summary,
     )
-    from nearscan_kafka_streams_spark.queries import grouping_sets_orders
+    from nearscan_kafka_streams_spark.queries.relational import (
+        grouping_sets_orders,
+    )
 
     df = grouping_sets_orders(spark, sf_dir)
     plan = formatted_plan(df)
@@ -244,7 +254,9 @@ def test_repeated_chunks_no_window_exec(spark, sf_dir):
     across a huge corpus would concentrate every occurrence in one
     window-sort partition."""
     from nearscan_kafka_streams_spark.plans.explain import formatted_plan
-    from nearscan_kafka_streams_spark.queries import dedup_repeated_chunks
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        dedup_repeated_chunks,
+    )
 
     plan = formatted_plan(dedup_repeated_chunks(spark, sf_dir))
     assert "Window" not in plan, plan[:2000]
@@ -257,7 +269,7 @@ def test_round4_new_query_plan_shapes(spark, sf_dir):
     (corpus stats / bucket spine); heavy hitters runs exactly ONE
     Python stage (the MG candidate pass)."""
     from nearscan_kafka_streams_spark.plans.explain import plan_summary
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.relational import (
         bm25_retrieval,
         heavy_hitters_words,
         outliers_iqr_events,
@@ -281,7 +293,7 @@ def test_selection_family_plan_shapes(spark, sf_dir):
     degenerates to a CartesianProduct, and only the GEMM path runs
     Python (exactly one Arrow stage)."""
     from nearscan_kafka_streams_spark.plans.explain import plan_summary
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
         ann_bruteforce_gemm,
         dedup_semantic,
         hard_negative_mining,
@@ -323,7 +335,7 @@ def test_sixth_batch_plan_shapes(spark, sf_dir):
     lags fold into ONE window pass; normalize broadcasts its tiny
     stats aggregate back over the fact scan."""
     from nearscan_kafka_streams_spark.plans.explain import plan_summary
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
         ewma_events,
         kmeans_embeddings,
         lm_perplexity_documents,

@@ -5,6 +5,9 @@ reference's wire format without a broker or connector jar."""
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from nearscan_kafka_streams_spark.schemas import (
     RECEIPTS_SCHEMA,
@@ -13,9 +16,11 @@ from nearscan_kafka_streams_spark.schemas import (
 from nearscan_kafka_streams_spark.serde.avro import (
     AvroCodec,
     confluent_frame,
+    confluent_unframe,
 )
 from nearscan_kafka_streams_spark.sources.pyds import (
     ConfluentAvroDataSource,
+    _scan_frame_bodies,
     write_framed_log,
 )
 
@@ -258,3 +263,42 @@ def test_write_leg_overwrite_replaces_prior_commit(spark, tmp_path):
         .load()
     )
     assert back.count() == 2
+
+
+def _framed_log_with_short_frame(tmp_path):
+    """Two valid receipts around a 3-byte frame (magic + 2 bytes): the
+    short frame's would-be body start is the next record's length
+    header."""
+    from fixtures_near import build_fixture
+
+    receipts = build_fixture()[0][:2]
+    codec = AvroCodec(avro_value_schema("receipts"))
+    good = [confluent_frame(7, codec.encode(r)) for r in receipts]
+    path = str(tmp_path / "short_log" / "part-00000.bin")
+    write_framed_log([good[0], b"\x00\x00\x00", good[1]], path)
+    return path
+
+
+def test_short_frame_rejected(tmp_path):
+    path = _framed_log_with_short_frame(tmp_path)
+    with pytest.raises(ValueError, match="shorter than magic"):
+        confluent_unframe(b"\x00\x00\x00")
+    with pytest.raises(ValueError, match="shorter than magic"):
+        _scan_frame_bodies(path)
+    # records before the short frame still scan
+    _buf, starts = _scan_frame_bodies(path, 0, 1)
+    assert list(starts) == [4 + 5]
+
+
+def test_datasource_read_fails_on_short_frame(spark, tmp_path):
+    path = _framed_log_with_short_frame(tmp_path)
+    spark.dataSource.register(ConfluentAvroDataSource)
+    df = (
+        spark.read.format("confluentavro")
+        .schema(RECEIPTS_SCHEMA)
+        .option("path", os.path.dirname(path))
+        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
+        .load()
+    )
+    with pytest.raises(Exception, match="shorter than magic"):
+        df.collect()

@@ -4,12 +4,14 @@ schedule.  These tests pin the standing contract (reverify lane
 first, then new, then changed, then the oldest-green backlog /
 oldest-green fill) so a stray re-registration can't silently push an
 unverified entry out of the driver's sampling window.  Round-13 lanes
-are the current front; the round-7..12 lists remain in
-queries/_registry.py as the backlog's provenance."""
+are the current front; the tail follows registration order."""
 
 from __future__ import annotations
 
+import pytest
+
 from nearscan_kafka_streams_spark import queries as Q
+from nearscan_kafka_streams_spark.queries._base import REGISTERED, register
 
 
 def _front():
@@ -93,34 +95,13 @@ def test_driver_budget_arithmetic_documented():
     )
 
 
-def test_round9_provenance_retained():
-    # the round-9 lanes stay importable as the backlog's provenance
-    # (CORRECTNESS_r09.json was sampled from exactly this front)
-    assert Q._STALE_R9 == Q._STALE_R8[41:]
-    assert len(Q._STALE_R9) == 33
-    assert len(Q._FRONT_R9) == 50
+def test_register_rejects_a_duplicate_name():
+    # a second query under an existing name would silently replace the
+    # first (and its oracle); registration refuses it instead
+    def twap_events(spark, sf_dir):
+        raise AssertionError("never called")
 
-
-def test_round10_provenance_retained():
-    # CORRECTNESS_r10.json was sampled from exactly this front
-    assert len(Q._FRONT_R10) == 50
-    assert len(Q._STALE_R10) == 38
-    assert len(Q._CHANGED_R10) == 12
-
-
-def test_round11_provenance_retained():
-    # CORRECTNESS_r11.json was sampled from exactly this front (the
-    # judge re-verified the byte-exact key order against _FRONT_R11)
-    assert len(Q._FRONT_R11) == 50
-    assert len(Q._STALE_R11) == 38
-    assert len(Q._CHANGED_R11) == 12
-
-
-def test_round12_provenance_retained():
-    # CORRECTNESS_r12.json was sampled from exactly this front
-    assert len(Q._FRONT_R12) == 50
-    assert len(Q._STALE_R12) == 48
-    assert set(Q._CHANGED_R12) == {
-        "triangle_count_users",
-        "clustering_coefficient_users",
-    }
+    before = dict(REGISTERED)
+    with pytest.raises(ValueError, match="twap_events"):
+        register(twap_events, oracle="SELECT 1")
+    assert REGISTERED == before

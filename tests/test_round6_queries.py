@@ -15,8 +15,8 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round5 import (
     asof_nearest_events,
     char_entropy_documents,
     collocation_lift_documents,
@@ -305,7 +305,9 @@ def test_asof_nearest_python_recompute(spark, sf_dir):
 
 
 def test_percentiles_global_python_recompute(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import percentiles_global_lineitem
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        percentiles_global_lineitem,
+    )
 
     rows = {r["pct"]: r for r in percentiles_global_lineitem(spark, sf_dir).collect()}
     prices = sorted(
@@ -321,7 +323,9 @@ def test_percentiles_global_python_recompute(spark, sf_dir):
 
 
 def test_gini_matches_python_recompute(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import gini_user_activity_events
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        gini_user_activity_events,
+    )
 
     row = gini_user_activity_events(spark, sf_dir).collect()[0]
     counts = Counter(
@@ -338,7 +342,9 @@ def test_gini_matches_python_recompute(spark, sf_dir):
 
 
 def test_sorted_neighborhood_python_recompute(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import sorted_neighborhood_customers
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        sorted_neighborhood_customers,
+    )
 
     got = {
         (r["custkey_a"], r["custkey_b"]): r["lev"]
@@ -370,7 +376,7 @@ def test_sorted_neighborhood_python_recompute(spark, sf_dir):
 def test_outliers_mad_python_recompute(spark, sf_dir):
     import statistics
 
-    from nearscan_kafka_streams_spark.queries import outliers_mad_events
+    from nearscan_kafka_streams_spark.queries.round6 import outliers_mad_events
 
     rows = {r["event_type"]: r for r in outliers_mad_events(spark, sf_dir).collect()}
     data = defaultdict(list)

@@ -13,8 +13,8 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     attribution_events,
     dedup_edit_distance_titles,
     label_propagation_users,
@@ -223,7 +223,7 @@ def test_edit_distance_pairs_match_python_recompute(spark, sf_dir):
 def test_psi_drift_matches_python_recompute(spark, sf_dir):
     import math
 
-    from nearscan_kafka_streams_spark.queries import psi_drift_documents
+    from nearscan_kafka_streams_spark.queries.round6 import psi_drift_documents
 
     got = {
         r["lang"]: (r["n_a"], r["n_b"], r["p_ppm"], r["q_ppm"], r["psi_micro"])
@@ -254,7 +254,9 @@ def test_psi_drift_matches_python_recompute(spark, sf_dir):
 def test_ngram_novelty_matches_python_recompute(spark, sf_dir):
     import re
 
-    from nearscan_kafka_streams_spark.queries import ngram_novelty_sources
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        ngram_novelty_sources,
+    )
 
     got = {
         r["source"]: (r["n_grams"], r["n_novel"], r["novelty_ppm"])
@@ -283,7 +285,9 @@ def test_ngram_novelty_matches_python_recompute(spark, sf_dir):
 
 
 def test_user_saturation_matches_python_recompute(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import user_saturation_events
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        user_saturation_events,
+    )
 
     got = [
         (r["day"], r["new_users"], r["cum_users"])

@@ -13,8 +13,8 @@ import math
 import re
 from collections import defaultdict
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     benford_digits_orders,
     bfs_reachability_users,
     hhi_concentration_events,

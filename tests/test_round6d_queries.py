@@ -13,8 +13,8 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     auc_lang_quality_documents,
     calibration_bins_documents,
     cohens_kappa_documents,

@@ -8,8 +8,8 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     l_diversity_documents,
     seasonal_anomaly_events,
     weighted_median_lineitem,

@@ -10,8 +10,8 @@ import math
 from collections import defaultdict
 from datetime import timedelta
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     activity_streaks_users,
     gap_islands_events,
     wow_change_events,

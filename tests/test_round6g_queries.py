@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round6 import (
     conversion_lag_events,
     new_vs_returning_events,
 )
@@ -96,7 +96,9 @@ def test_new_vs_returning_matches_bruteforce(spark, sf_dir):
 def test_dedup_cluster_census_covers_corpus(spark, sf_dir):
     """Sizes must sum to the corpus row count (singletons included),
     and removable docs = docs - clusters in every size band."""
-    from nearscan_kafka_streams_spark.queries import dedup_cluster_census
+    from nearscan_kafka_streams_spark.queries.round6 import (
+        dedup_cluster_census,
+    )
 
     n_docs = _t(spark, sf_dir, "documents").count()
     got = dedup_cluster_census(spark, sf_dir).collect()

@@ -10,8 +10,8 @@ from __future__ import annotations
 
 import pytest
 
-from nearscan_kafka_streams_spark.queries import (
-    dedup_cluster_census,
+from nearscan_kafka_streams_spark.queries.round6 import dedup_cluster_census
+from nearscan_kafka_streams_spark.queries.dedup import (
     dedup_clusters,
     dedup_clusters_star,
     jaccard_edges_frame,
@@ -78,7 +78,7 @@ def test_staged_edges_skip_allpairs_machinery(spark, sf_dir, staged_edges):
 
 
 def test_trend_slope_products_formed_in_decimal(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import trend_slope_users
+    from nearscan_kafka_streams_spark.queries.round6 import trend_slope_users
 
     plan = (
         trend_slope_users(spark, sf_dir)
@@ -93,7 +93,7 @@ def test_trend_slope_products_formed_in_decimal(spark, sf_dir):
 
 
 def test_auc_and_kappa_carry_decimal(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round6 import (
         auc_lang_quality_documents,
         cohens_kappa_documents,
     )
@@ -120,7 +120,9 @@ def test_trend_slope_no_int64_wrap_on_long_horizon(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/events.parquet")
-        from nearscan_kafka_streams_spark.queries import trend_slope_users
+        from nearscan_kafka_streams_spark.queries.round6 import (
+            trend_slope_users,
+        )
 
         row = trend_slope_users(spark, d).collect()[0]
         # slope of (value cycling mod 97) over a monotone clock is ~0;
@@ -134,7 +136,7 @@ def test_clean_pipeline_staged_edges_identical(spark, sf_dir, staged_edges):
     # to the pipeline's survivor ids must reproduce the survivor-only
     # AllPairs join bit-for-bit, so the final (doc_id, lang, quality,
     # split) output is identical under either path
-    from nearscan_kafka_streams_spark.queries import corpus_clean_pipeline
+    from nearscan_kafka_streams_spark.queries.text import corpus_clean_pipeline
 
     assert _rows(
         corpus_clean_pipeline(spark, sf_dir, edges=staged_edges)
@@ -150,8 +152,8 @@ def test_consumers_leave_staged_cache_alive(spark, sf_dir, staged_edges):
     # unpersisted the staged frame and every later consumer in the
     # bench staging window recomputed the AllPairs join.
     from nearscan_kafka_streams_spark.functions.dedup import release_cached
-    from nearscan_kafka_streams_spark.queries import (
-        corpus_clean_pipeline,
+    from nearscan_kafka_streams_spark.queries.text import corpus_clean_pipeline
+    from nearscan_kafka_streams_spark.queries.round7 import (
         dedup_threshold_sweep,
         minhash_candidate_pr_audit,
     )

@@ -19,8 +19,8 @@ from collections import Counter, defaultdict
 import numpy as np
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round7 import (
     association_rules_lineitem,
     behavioral_entropy_users,
     bucketed_join_lineitem,

@@ -10,10 +10,12 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
-    bm25_retrieval,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.relational import bm25_retrieval
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     dedup_minhash_banded_md5,
+)
+from nearscan_kafka_streams_spark.queries.round7 import (
     hybrid_rrf_retrieval,
     lang_id_confusion,
     minhash_candidate_pr_audit,
@@ -58,7 +60,9 @@ def test_minhash_pr_audit_counts_consistent(spark, sf_dir):
     assert r["n_hits"] <= min(r["n_candidates"], r["n_truth"])
     # the audit uses the 2-bands-of-4 geometry (t ~ 0.84), not the
     # registered 4x2 query's
-    from nearscan_kafka_streams_spark.queries import _md5_banded_candidates
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        _md5_banded_candidates,
+    )
 
     d = _t(spark, sf_dir, "documents")
     n_cand = _md5_banded_candidates(

@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import pytest
 
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.round7 import (
     clustering_coefficient_users,
+)
+from nearscan_kafka_streams_spark.queries.round5 import (
     co_event_edges_users,
     triangle_count_users,
 )
@@ -42,11 +44,13 @@ def test_clustering_coeff_staged_edges_identical(spark, sf_dir, staged_co_edges)
 
 
 def test_threshold_sweep_monotone_and_census_consistent(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round6 import (
         dedup_cluster_census,
-        dedup_threshold_sweep,
-        jaccard_edges_frame,
     )
+    from nearscan_kafka_streams_spark.queries.round7 import (
+        dedup_threshold_sweep,
+    )
+    from nearscan_kafka_streams_spark.queries.dedup import jaccard_edges_frame
 
     rows = dedup_threshold_sweep(spark, sf_dir).collect()
     assert [r["threshold_pct"] for r in rows] == [80, 85, 90, 95]
@@ -72,7 +76,7 @@ def test_edge_list_is_canonical_and_deduped(spark, sf_dir):
 def test_degree_assortativity_staged_edges_identical(
     spark, sf_dir, staged_co_edges
 ):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         degree_assortativity_users,
     )
 
@@ -82,7 +86,7 @@ def test_degree_assortativity_staged_edges_identical(
 
 
 def test_degree_assortativity_bounded(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         degree_assortativity_users,
     )
 

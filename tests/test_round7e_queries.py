@@ -7,8 +7,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.round7w8 import (
     autocorr_events,
     interarrival_histogram_events,
     join_fanout_audit,

@@ -8,8 +8,8 @@ from __future__ import annotations
 
 import pytest
 
-from nearscan_kafka_streams_spark.queries import (
-    co_event_edges_users,
+from nearscan_kafka_streams_spark.queries.round5 import co_event_edges_users
+from nearscan_kafka_streams_spark.queries.round7w8 import (
     k_core_peel_users,
     mutual_nn_pairs_embeddings,
     scan_pruning_audit_lineitem,
@@ -110,7 +110,7 @@ def test_global_row_number_consistent_across_plan_branches(spark, sf_dir):
 def test_waterfill_conservation_and_caps(spark, sf_dir):
     import pyspark.sql.functions as F
 
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         token_budget_waterfill_sources,
     )
 
@@ -140,7 +140,7 @@ def test_waterfill_scarce_sources_fully_funded(spark, sf_dir):
 
     import pyspark.sql.functions as F
 
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         token_budget_waterfill_sources,
     )
 
@@ -173,7 +173,7 @@ def test_waterfill_scarce_sources_fully_funded(spark, sf_dir):
 
 
 def test_boilerplate_census_counts(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         boilerplate_prefix_census,
     )
 
@@ -189,8 +189,10 @@ def test_boilerplate_census_counts(spark, sf_dir):
 
 def test_cluster_source_span_staged_and_conservation(spark, sf_dir):
     from nearscan_kafka_streams_spark.functions.dedup import release_cached
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.round7w8 import (
         dedup_cluster_source_span,
+    )
+    from nearscan_kafka_streams_spark.queries.dedup import (
         dedup_clusters,
         jaccard_edges_frame,
     )

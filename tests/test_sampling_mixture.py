@@ -13,14 +13,14 @@ import math
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     MIXTURE_EPOCHS,
     MIXTURE_EPOCHS_DEFAULT,
     bloom_prune_join_orders,
     mixture_upsample_documents,
     weighted_sample_documents,
-    _t,
 )
+from nearscan_kafka_streams_spark.queries._base import _t
 
 
 def _aes_key(doc_id: int, n_chars: int) -> float:

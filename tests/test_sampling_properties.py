@@ -105,7 +105,7 @@ def test_weighted_sample_model_parity(spark, rows, k):
     )
 )
 def test_mixture_conserves_copy_counts(spark, rows):
-    from nearscan_kafka_streams_spark.queries import (
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
         MIXTURE_EPOCHS,
         MIXTURE_EPOCHS_DEFAULT,
     )

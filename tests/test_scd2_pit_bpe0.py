@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nearscan_kafka_streams_spark.queries import (
-    _t,
+from nearscan_kafka_streams_spark.queries._base import _t
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     bpe_zero_merge_stats,
     scd2_point_in_time_join,
 )

@@ -22,7 +22,7 @@ from nearscan_kafka_streams_spark.functions.sketches import (
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    from nearscan_kafka_streams_spark.queries import _t
+    from nearscan_kafka_streams_spark.queries._base import _t
 
     return _t(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts"))
@@ -69,7 +69,9 @@ def test_hll_partition_independence(events):
 
 
 def test_hll_query_entry(spark):
-    from nearscan_kafka_streams_spark.queries import hll_distinct_events
+    from nearscan_kafka_streams_spark.queries.corpus_ops import (
+        hll_distinct_events,
+    )
 
     out = hll_distinct_events(spark, "/root/testdata/sf0.001")
     rows = out.collect()

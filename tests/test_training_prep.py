@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
-from nearscan_kafka_streams_spark.queries import (
+from nearscan_kafka_streams_spark.queries.corpus_ops import (
     dedup_repeated_chunks,
     pack_training_sequences,
     shuffle_shards,

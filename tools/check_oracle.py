@@ -24,6 +24,14 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
+# The only queries allowed a one-step float miss (tolerant_rows_match):
+# each has a result documented to sit exactly on a %.6f half boundary.
+# Every other query compares strictly.
+FLOAT_BOUNDARY_OK = {
+    # margin = 0.1 - 6210093/38e6 = -0.0634235 exactly at sf0.001
+    "quality_model_score",
+}
+
 
 def normalize(df):
     """pandas DataFrame -> (row_count, sorted column names, canonical rows)."""
@@ -67,7 +75,7 @@ def tolerant_rows_match(sdf, ddf) -> bool:
     %.6f canonicalization already equates values up to 1e-6 apart
     whenever they round to the same string.  O(n^2) worst case --
     used only after the strict compare fails, on the small result
-    frames these queries emit."""
+    frames these queries emit.  Applied only to FLOAT_BOUNDARY_OK."""
     import math
 
     cols = sorted(sdf.columns)
@@ -151,10 +159,12 @@ def main() -> int:
             print(f"FAIL {name}: rows {sn} vs {dn}")
             failures.append(name)
         elif sr != dr:
-            # engine-agnostic %.6f boundary pin (round-12 verdict item
-            # 8): a 1-ulp cross-engine double difference straddling a
-            # 6th-digit rounding boundary is not a value mismatch
-            if tolerant_rows_match(spark_pdf, duck_pdf):
+            # a 1-ulp cross-engine double difference straddling a
+            # 6th-digit rounding boundary is not a value mismatch, on
+            # the allowlisted queries only
+            if name in FLOAT_BOUNDARY_OK and tolerant_rows_match(
+                spark_pdf, duck_pdf
+            ):
                 print(f"OK~  {name}: {sn} rows (float-boundary tolerance)")
             else:
                 diff = [(a, b) for a, b in zip(sr, dr) if a != b][:3]

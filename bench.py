@@ -970,12 +970,14 @@ def main() -> None:
         errors["token_pipeline"] = f"{type(exc).__name__}: {exc}"[:500]
 
     # wire flagship: the SAME topology fed from Confluent-framed Avro
-    # record logs through the custom Python DataSource -- wire bytes in,
+    # record logs through Spark's binaryFile stream source and the Arrow
+    # segment decode (sources/pyds.py:read_segments) -- wire bytes in,
     # balance store out (streaming/pipeline.py:run_wire_pipeline).  This
     # is the closest in-sandbox equivalent of the reference's production
     # Kafka workload, so it gets a reference-parity headline number.
-    # Staging (generate + distributed Avro-encode via the write leg) is
-    # untimed producer work; the timed span is the availableNow run.
+    # Staging (generate + distributed Avro-encode via the confluentavro
+    # write leg, the data source's only use) is untimed producer work;
+    # the timed span is the availableNow run.
     try:
         import json as _json
         import shutil as _shutil

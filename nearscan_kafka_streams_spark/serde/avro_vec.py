@@ -18,10 +18,16 @@ supports` accepts, ``decode_batch`` produces exactly the rows
 paths against each other).  Anything else -- nested records, arrays,
 maps, non-null-first unions, scale-mismatched decimals -- is refused
 at construction time and the caller falls back to the row decoder.
+Data the sweep cannot represent -- a decimal wider than decimal128, a
+string/bytes column of 2 GiB or more in one batch, an unexpected
+union branch -- is refused per batch with ``ValueError``,
+``OverflowError`` or ``IndexError`` (``sources.pyds.DECODER_REFUSALS``)
+and the caller decodes from that batch on with the row codec.
 
-Decoding stays executor-side: the reader (sources/pyds.py) constructs
-one decoder per task and feeds it record-body offset vectors per
-Arrow batch.
+Decoding stays executor-side: the segment decode
+(``sources/pyds.py::read_segments``, inside ``mapInArrow``) builds one
+decoder per segment and feeds it record-body offset vectors per Arrow
+batch.
 """
 
 from __future__ import annotations
@@ -220,8 +226,7 @@ class VectorizedDecoder:
                     ),
                     pos,
                 )
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
+            offsets = _int32_offsets(lens)
             total = int(offsets[-1])
             if total:
                 gather = np.arange(total, dtype=np.int64) + np.repeat(
@@ -246,6 +251,19 @@ class VectorizedDecoder:
                 arr.validate(full=True)
             return arr, pos
         raise ValueError(f"unsupported primitive {prim}")
+
+
+def _int32_offsets(lens: np.ndarray) -> np.ndarray:
+    """Arrow string/binary offsets (int32 storage) for value lengths
+    ``lens``, summed as int64; a column of 2 GiB or more would wrap in
+    the int32 cast, so it is refused."""
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(offsets[-1])}-byte column exceeds int32 Arrow offsets"
+        )
+    return offsets
 
 
 def _varint_vec(buf, pos, active):

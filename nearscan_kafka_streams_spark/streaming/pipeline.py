@@ -26,6 +26,7 @@ by design -- the KTable equivalent) outside the query's state.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from contextlib import contextmanager
 from pathlib import Path
@@ -170,33 +171,24 @@ def run_wire_pipeline(
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """The SAME topology fed from Confluent-framed Avro record logs
-    through the custom Python DataSource (`sources/pyds.py`) -- wire
-    bytes in, balance store out.  This is the closest in-sandbox
-    equivalent of the reference's Kafka consumption path: the value
-    bytes are the exact Confluent frames a Connect producer emits,
-    decoded executor-side by the spec-derived Avro codec, flowing into
-    the identical dedup -> interval-join -> flat-map -> aggregate
-    topology (TokenBalance.java:74-336).
+    (``sources/pyds.py::read_segments``: Spark's file stream source,
+    decoded in executor Python workers) -- wire bytes in, balance store
+    out.  This is the closest in-sandbox equivalent of the reference's
+    Kafka consumption path: the value bytes are the exact Confluent
+    frames a Connect producer emits, flowing into the identical dedup
+    -> interval-join -> flat-map -> aggregate topology
+    (TokenBalance.java:74-336).
 
     Expects ``{log_dir}/receipts``, ``{log_dir}/execution_outcomes``,
     ``{log_dir}/action_receipt_actions`` directories of length-prefixed
     framed-record files."""
-    import json as _json
-
     from nearscan_kafka_streams_spark.schemas import avro_value_schema
-    from nearscan_kafka_streams_spark.sources.pyds import (
-        ConfluentAvroDataSource,
-    )
-
-    spark.dataSource.register(ConfluentAvroDataSource)
+    from nearscan_kafka_streams_spark.sources.pyds import read_segments
 
     def rd(topic: str, schema) -> DataFrame:
-        return (
-            spark.readStream.format("confluentavro")
-            .schema(schema)
-            .option("path", f"{log_dir}/{topic}")
-            .option("avro_schema", _json.dumps(avro_value_schema(topic)))
-            .load()
+        return read_segments(
+            spark.readStream, f"{log_dir}/{topic}", schema,
+            avro_value_schema(topic),
         )
 
     return _run_topic_pipeline(
@@ -216,7 +208,7 @@ def run_parquet_pipeline(
     parquet-staged (already-decoded) topic frames -- the all-JVM
     variant: file-stream sources, zero Python in the data path.  Bench
     runs it next to the wire variant so the headline separates "Avro
-    decode through the Python DataSource" from "topology cost"; it is
+    decode in Python workers" from "topology cost"; it is
     also the shape a real cluster runs after the Kafka+`from_avro`
     swap (MIGRATION.md), so its number is the migration target.
 
@@ -282,6 +274,26 @@ def _last_planned_batch(checkpoint: str) -> int:
     )
 
 
+def _check_file_source_offsets(checkpoint: str) -> None:
+    """Every topology entry point reads file sources, whose offset is
+    ``{"logOffset": n}``.  A checkpoint holding any other source's
+    offsets (per-file record counts, say) cannot resume, and the file
+    source would fail on it without naming the fix."""
+    last = _last_planned_batch(checkpoint)
+    if last < 0:
+        return
+    # offset log entry: version line, metadata line, one line per source
+    entry = (Path(checkpoint) / "offsets" / str(last)).read_text()
+    for line in entry.splitlines()[2:]:
+        if line != "-" and "logOffset" not in json.loads(line):
+            raise RuntimeError(
+                f"checkpoint {checkpoint} holds offsets {line} that no "
+                "file source wrote; reset the checkpoint, the store and "
+                "token_transfer together with "
+                "streaming/reset.py::reset_pipeline"
+            )
+
+
 def _run_query(
     spark: SparkSession,
     transfers: DataFrame,
@@ -295,6 +307,7 @@ def _run_query(
     transfer_path = f"{out_dir}/token_transfer"
     store = f"{out_dir}/token_balance_store"
 
+    _check_file_source_offsets(checkpoint)
     # the store's replay guard trusts batch ids: a checkpoint that never
     # planned the batch the store last folded (reset, or a different
     # checkpoint) would restart ids below it and every fold would be

@@ -252,17 +252,24 @@ def test_empty_batch():
     assert batch.num_rows == 0
 
 
+def _segment(tmp_path, bodies) -> bytes:
+    """The bytes of one framed segment file holding ``bodies``."""
+    from nearscan_kafka_streams_spark.serde.avro import confluent_frame
+    from nearscan_kafka_streams_spark.sources.pyds import write_framed_log
+
+    path = str(tmp_path / "log" / "part-00000.bin")
+    write_framed_log([confluent_frame(1, b) for b in bodies], path)
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
 def test_mid_file_vector_failure_resumes_on_row_path(tmp_path):
     # record 2's decimal is sign-extended to 17 bytes: valid Avro that
     # the row codec reads, but wider than decimal128 storage, so the
     # vector decoder refuses it.  With batch_size=2 the first batch
     # comes from the vector path and the rest from the row path,
     # starting at the batch that failed.
-    from nearscan_kafka_streams_spark.serde.avro import confluent_frame
-    from nearscan_kafka_streams_spark.sources.pyds import (
-        _batches_auto,
-        write_framed_log,
-    )
+    from nearscan_kafka_streams_spark.sources.pyds import _batches_auto
 
     struct = StructType(
         [
@@ -286,13 +293,44 @@ def test_mid_file_vector_failure_resumes_on_row_path(tmp_path):
     with pytest.raises(OverflowError):
         dec.decode_batch(*_pack(bodies[2:3]))
 
-    path = str(tmp_path / "log" / "part-00000.bin")
-    write_framed_log([confluent_frame(1, b) for b in bodies], path)
+    data = _segment(tmp_path, bodies)
     batches = list(
-        _batches_auto(path, 0, None, avro, ["id", "amount"], arrow_schema, 2)
+        _batches_auto(data, avro, ["id", "amount"], arrow_schema, 2)
     )
     assert [b.num_rows for b in batches] == [2, 2, 1]
     got = [row for b in batches for row in b.to_pylist()]
     want = [codec.decode(b) for b in bodies]
     assert got == want
     assert got[2] == {"id": 2, "amount": decimal.Decimal(5)}
+
+
+def test_int32_offset_overflow_refused():
+    # lengths only: a column summing past int32 would wrap in the cast
+    from nearscan_kafka_streams_spark.serde.avro_vec import _int32_offsets
+
+    ok = _int32_offsets(np.array([3, 0, 5], dtype=np.int64))
+    assert list(ok) == [0, 3, 3, 8]
+    edge = np.array([2**31 - 2, 1], dtype=np.int64)
+    assert _int32_offsets(edge)[-1] == 2**31 - 1
+    with pytest.raises(OverflowError):
+        _int32_offsets(np.array([2**30, 2**30], dtype=np.int64))
+
+
+def test_decoder_bug_propagates_instead_of_falling_back(
+    tmp_path, monkeypatch
+):
+    # only the decoder's refusal types send a batch to the row path; any
+    # other error is a bug and must surface
+    from nearscan_kafka_streams_spark.sources.pyds import _batches_auto
+
+    struct = StructType([StructField("id", LongType(), False)])
+    avro = avro_schema_from_struct(struct, name="R")
+    codec = AvroCodec(avro)
+    data = _segment(tmp_path, [codec.encode({"id": i}) for i in range(3)])
+
+    def broken(self, buf, body_starts):
+        raise RuntimeError("decoder bug")
+
+    monkeypatch.setattr(VectorizedDecoder, "decode_batch", broken)
+    with pytest.raises(RuntimeError, match="decoder bug"):
+        list(_batches_auto(data, avro, ["id"], _arrow_schema(struct), 2))

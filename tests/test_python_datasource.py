@@ -1,10 +1,10 @@
-"""Spark 4 Python DataSource: Confluent-framed Avro logs via
-format("confluentavro") -- the engine-native read path for the
-reference's wire format without a broker or connector jar."""
+"""Confluent-framed Avro logs through ``read_segments`` (Spark's
+``binaryFile`` source + one Arrow decode function), and the write leg
+``format("confluentavro")`` -- the engine-native read and write paths
+for the reference's wire format without a broker or connector jar."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -21,8 +21,15 @@ from nearscan_kafka_streams_spark.serde.avro import (
 from nearscan_kafka_streams_spark.sources.pyds import (
     ConfluentAvroDataSource,
     _scan_frame_bodies,
+    read_segments,
     write_framed_log,
 )
+
+
+def _read_receipts(spark, path):
+    return read_segments(
+        spark.read, path, RECEIPTS_SCHEMA, avro_value_schema("receipts")
+    )
 
 
 def _stage_logs(spark, tmp_path, n_files=2):
@@ -44,14 +51,7 @@ def _stage_logs(spark, tmp_path, n_files=2):
 
 def test_datasource_round_trips_wire_bytes(spark, tmp_path):
     path, rows = _stage_logs(spark, tmp_path)
-    spark.dataSource.register(ConfluentAvroDataSource)
-    df = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", path)
-        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
+    df = _read_receipts(spark, path)
     got = sorted(
         (r["receipt_id"], str(r["included_in_block_timestamp"]))
         for r in df.collect()
@@ -64,34 +64,14 @@ def test_datasource_round_trips_wire_bytes(spark, tmp_path):
     assert df.schema == RECEIPTS_SCHEMA
 
 
-def test_datasource_partitions_per_file(spark, tmp_path):
-    path, _ = _stage_logs(spark, tmp_path, n_files=3)
-    spark.dataSource.register(ConfluentAvroDataSource)
-    df = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", path)
-        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3
-
-
 def test_datasource_feeds_the_topology(spark, tmp_path):
-    """The custom source composes with the engine like any DataFrame:
-    run the dedup + event-time derivation over it."""
+    """The decoded segments compose with the engine like any
+    DataFrame: run the dedup + event-time derivation over them."""
     from nearscan_kafka_streams_spark.operators.dedup import dedup_batch
     from nearscan_kafka_streams_spark.schemas import with_event_time
 
     path, rows = _stage_logs(spark, tmp_path)
-    spark.dataSource.register(ConfluentAvroDataSource)
-    df = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", path)
-        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
+    df = _read_receipts(spark, path)
     out = dedup_batch(
         with_event_time(df, "included_in_block_timestamp"),
         ["receipt_id"],
@@ -99,60 +79,9 @@ def test_datasource_feeds_the_topology(spark, tmp_path):
     assert out.count() == len({r["receipt_id"] for r in rows})
 
 
-def test_streaming_source_resumes_from_checkpoint(spark, tmp_path):
-    """readStream over the custom source: the committed offset (a
-    per-file consumed-record map) survives a query restart -- the
-    second run emits ONLY records appended after the first run, the
-    exactly-once-offsets contract of the Kafka analog."""
-    import json as _json
-
-    path, rows = _stage_logs(spark, tmp_path, n_files=1)
-    spark.dataSource.register(ConfluentAvroDataSource)
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "stream_out")
-
-    def run_once():
-        q = (
-            spark.readStream.format("confluentavro")
-            .schema(RECEIPTS_SCHEMA)
-            .option("path", path)
-            .option(
-                "avro_schema",
-                _json.dumps(avro_value_schema("receipts")),
-            )
-            .load()
-            .select("receipt_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    first = spark.read.parquet(out).count()
-    assert first == len(rows)
-
-    # append a new immutable segment, restart from the checkpoint
-    codec = AvroCodec(avro_value_schema("receipts"))
-    extra = dict(rows[0])
-    extra["receipt_id"] = "rx-appended"
-    write_framed_log(
-        [confluent_frame(7, codec.encode(extra))],
-        path + "/part-99999.bin",
-    )
-    run_once()
-    after = spark.read.parquet(out)
-    assert after.count() == first + 1
-    assert (
-        after.where("receipt_id = 'rx-appended'").count() == 1
-    )
-
-
 def test_write_leg_round_trips(spark, tmp_path):
-    """df.write.format('confluentavro') -> read back with the same
-    format: the engine-native SINK leg (S3's wire serialization)
+    """df.write.format('confluentavro') -> read back with
+    read_segments: the engine-native SINK leg (S3's wire serialization)
     through the 2-phase staged-segment commit."""
     import json as _json
 
@@ -177,13 +106,7 @@ def test_write_leg_round_trips(spark, tmp_path):
     assert len(files) == 3
     assert not any(f.startswith("_staged-") for f in _os.listdir(d))
 
-    back = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", d)
-        .option("avro_schema", _json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
+    back = _read_receipts(spark, d)
     assert sorted(x["receipt_id"] for x in back.collect()) == sorted(
         x["receipt_id"] for x in r.collect()
     )
@@ -218,13 +141,7 @@ def test_write_leg_append_twice_keeps_both_commits(spark, tmp_path):
     files = [f for f in _os.listdir(d) if f.startswith("part-")]
     assert len(files) == 4, files
 
-    back = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", d)
-        .option("avro_schema", _json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
+    back = _read_receipts(spark, d)
     assert back.count() == 2 * r.count()
 
 
@@ -255,13 +172,7 @@ def test_write_leg_overwrite_replaces_prior_commit(spark, tmp_path):
     wr(r, "append")
     subset = r.limit(2)
     wr(subset, "overwrite")
-    back = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", d)
-        .option("avro_schema", _json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
+    back = _read_receipts(spark, d)
     assert back.count() == 2
 
 
@@ -281,24 +192,21 @@ def _framed_log_with_short_frame(tmp_path):
 
 def test_short_frame_rejected(tmp_path):
     path = _framed_log_with_short_frame(tmp_path)
+    with open(path, "rb") as fh:
+        data = fh.read()
     with pytest.raises(ValueError, match="shorter than magic"):
         confluent_unframe(b"\x00\x00\x00")
     with pytest.raises(ValueError, match="shorter than magic"):
-        _scan_frame_bodies(path)
-    # records before the short frame still scan
-    _buf, starts = _scan_frame_bodies(path, 0, 1)
-    assert list(starts) == [4 + 5]
+        _scan_frame_bodies(data)
+    # the record before the short frame scans on its own
+    first = int.from_bytes(data[:4], "big")
+    _buf, starts, ends = _scan_frame_bodies(data[: 4 + first])
+    assert list(starts) == [4 + 5] and list(ends) == [4 + first]
 
 
 def test_datasource_read_fails_on_short_frame(spark, tmp_path):
     path = _framed_log_with_short_frame(tmp_path)
-    spark.dataSource.register(ConfluentAvroDataSource)
-    df = (
-        spark.read.format("confluentavro")
-        .schema(RECEIPTS_SCHEMA)
-        .option("path", os.path.dirname(path))
-        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
-        .load()
-    )
-    with pytest.raises(Exception, match="shorter than magic"):
+    df = _read_receipts(spark, os.path.dirname(path))
+    with pytest.raises(Exception, match="shorter than magic") as err:
         df.collect()
+    assert "short_log/part-00000.bin" in str(err.value)

@@ -1,6 +1,6 @@
 """Per-stage census of the wire-pipeline bench leg (round-11 verdict
-item 5): the Confluent-framed Avro replay through the Python
-DataSource vs the all-JVM parquet control.
+item 5): the Confluent-framed Avro replay through the binaryFile
+source and the Arrow segment decode vs the all-JVM parquet control.
 
 The bench's `wire_pipeline` minus `wire_pipeline_jvm` is the
 documented jarless-Python-decode cost; this tool re-runs both legs at

@@ -191,7 +191,14 @@ class AvroCodec:
     # -- decode
 
     def decode(self, data: bytes) -> dict:
-        value, _ = self._read(self.schema, data, 0)
+        """One record from ``data``, which must hold exactly one Avro
+        body: a body the schema does not consume to its last byte
+        (truncated, or with trailing bytes) raises ``ValueError``."""
+        value, pos = self._read(self.schema, data, 0)
+        if pos != len(data):
+            raise ValueError(
+                f"{len(data)}-byte Avro body but its record ends at {pos}"
+            )
         return value
 
     def _read(self, schema, buf: bytes, pos: int):

@@ -26,8 +26,8 @@ and the caller decodes from that batch on with the row codec.
 
 Decoding stays executor-side: the segment decode
 (``sources/pyds.py::read_segments``, inside ``mapInArrow``) builds one
-decoder per segment and feeds it record-body offset vectors per Arrow
-batch.
+decoder per segment and feeds it record-body start and end vectors
+per Arrow batch.
 """
 
 from __future__ import annotations
@@ -133,11 +133,14 @@ class VectorizedDecoder:
         self,
         buf: np.ndarray,
         body_starts: np.ndarray,
+        body_ends: np.ndarray,
     ) -> pa.RecordBatch:
-        """Decode the records whose Avro bodies start at ``body_starts``
-        within ``buf`` (uint8, padded by >= 10 bytes past the last
-        record so finished-lane gathers stay in bounds) into one
-        RecordBatch typed by ``arrow_schema``."""
+        """Decode the records whose Avro bodies span ``body_starts`` to
+        ``body_ends`` within ``buf`` (uint8, padded by >= 10 bytes past
+        the last record so finished-lane gathers stay in bounds) into
+        one RecordBatch typed by ``arrow_schema``.  A body the schema
+        does not consume exactly -- truncated mid-field, or with
+        trailing bytes -- raises ``ValueError``."""
         n = len(body_starts)
         pos = body_starts.astype(np.int64, copy=True)
         all_lanes = np.ones(n, dtype=bool)
@@ -160,6 +163,13 @@ class VectorizedDecoder:
             )
             if arrow_type is not None:
                 columns[name] = arr
+        off = pos != body_ends
+        if off.any():
+            i = int(off.argmax())
+            raise ValueError(
+                f"Avro body at {int(body_starts[i])} ends at "
+                f"{int(body_ends[i])} but its record ends at {int(pos[i])}"
+            )
         return pa.RecordBatch.from_arrays(
             [columns[f.name] for f in self.arrow_schema],
             schema=self.arrow_schema,

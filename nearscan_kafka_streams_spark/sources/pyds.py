@@ -25,10 +25,12 @@ it, else the pure-Python Avro codec (``serde/avro.py``, written from
 the Avro spec); a batch the sweep refuses sends the rest of the
 segment, from that batch's first record, to the codec.  Both yield
 ``pyarrow.RecordBatch``es of ARROW_BATCH_SIZE records.  A frame
-shorter than magic + schema id (5 bytes), a bad magic byte or a
-truncated record raises.  On a real cluster the Kafka source replaces
-only the reader: its ``value`` column holds the same Confluent frames,
-one per row -- see MIGRATION.md.
+shorter than magic + schema id (5 bytes), a bad magic byte, a
+truncated record, or an Avro body the schema does not consume to
+exactly its frame's end raises, naming the segment.  On a real
+cluster the Kafka source replaces only the reader: its ``value``
+column holds the same Confluent frames, one per row -- see
+MIGRATION.md.
 
 ``format("confluentavro")`` (register ``ConfluentAvroDataSource``) is
 the write leg only: ``df.write.format("confluentavro")`` encodes rows
@@ -104,8 +106,8 @@ def _row_batches(bodies, avro_schema, names, arrow_schema, batch_size):
 
 def _scan_frame_bodies(data):
     """Copy one segment's bytes into a padded uint8 buffer and return
-    ``(buf, body_starts, body_ends)``: the vectorized decoder's input,
-    and the row codec's body bounds.  The header walk is Python but
+    ``(buf, body_starts, body_ends)``: the input of both the vectorized
+    decoder and the row codec.  The header walk is Python but
     touches 4 bytes per record; bodies are never copied out (the
     decoder gathers from ``buf`` in place).  The 16-byte zero pad keeps
     finished-lane gathers in bounds at the final record."""
@@ -137,7 +139,7 @@ def _scan_frame_bodies(data):
     if len(frame_starts) and (buf[frame_starts] != 0).any():
         raise ValueError("not Confluent wire format (bad magic byte)")
     # skip magic (1) + schema id (4): Avro body start
-    return buf, frame_starts + 5, ends
+    return buf, frame_starts + 5, np.asarray(ends, dtype=np.int64)
 
 
 def _batches_auto(data, avro_schema, names, arrow_schema, batch_size):
@@ -158,7 +160,8 @@ def _batches_auto(data, avro_schema, names, arrow_schema, batch_size):
         decoder = VectorizedDecoder(avro_schema, arrow_schema)
         try:
             for done in range(0, len(starts), batch_size):
-                yield decoder.decode_batch(buf, starts[done : done + batch_size])
+                span = slice(done, done + batch_size)
+                yield decoder.decode_batch(buf, starts[span], ends[span])
             return
         except DECODER_REFUSALS:
             pass  # resume below on the row path at record ``done``

@@ -42,8 +42,8 @@ def _arrow_schema(struct):
 
 
 def _pack(bodies):
-    """Concatenate Avro bodies into one padded buffer + starts vector
-    (the shape _scan_frame_bodies hands the decoder)."""
+    """Concatenate Avro bodies into one padded buffer + starts and ends
+    vectors (the shape _scan_frame_bodies hands the decoder)."""
     starts = []
     pos = 0
     chunks = []
@@ -54,7 +54,9 @@ def _pack(bodies):
     buf = np.frombuffer(
         b"".join(chunks) + b"\x00" * 16, dtype=np.uint8
     ).copy()
-    return buf, np.asarray(starts, dtype=np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    ends = starts + np.asarray([len(b) for b in bodies], dtype=np.int64)
+    return buf, starts, ends
 
 
 def _decode_both(struct, avro_schema, records):
@@ -64,8 +66,7 @@ def _decode_both(struct, avro_schema, records):
     arrow_schema = _arrow_schema(struct)
     assert VectorizedDecoder.supports(avro_schema, arrow_schema)
     dec = VectorizedDecoder(avro_schema, arrow_schema)
-    buf, starts = _pack(bodies)
-    batch = dec.decode_batch(buf, starts)
+    batch = dec.decode_batch(*_pack(bodies))
     names = [f.name for f in struct.fields]
     got = batch.to_pylist()
     assert len(got) == len(expected)
@@ -198,9 +199,8 @@ def test_oversized_decimal_refused_not_corrupted():
     rec["tokens_burnt"] = decimal.Decimal(2**130)  # 17-byte two's complement
     body = codec.encode(rec)
     dec = VectorizedDecoder(avro, _arrow_schema(struct))
-    buf, starts = _pack([body])
     with pytest.raises(OverflowError):
-        dec.decode_batch(buf, starts)
+        dec.decode_batch(*_pack([body]))
 
 
 def test_unsupported_schemas_refused():
@@ -247,8 +247,7 @@ def test_empty_batch():
         precision_overrides=AVRO_PRECISION_OVERRIDES,
     )
     dec = VectorizedDecoder(avro, _arrow_schema(struct))
-    buf, starts = _pack([])
-    batch = dec.decode_batch(buf, starts)
+    batch = dec.decode_batch(*_pack([]))
     assert batch.num_rows == 0
 
 
@@ -328,7 +327,7 @@ def test_decoder_bug_propagates_instead_of_falling_back(
     codec = AvroCodec(avro)
     data = _segment(tmp_path, [codec.encode({"id": i}) for i in range(3)])
 
-    def broken(self, buf, body_starts):
+    def broken(self, buf, body_starts, body_ends):
         raise RuntimeError("decoder bug")
 
     monkeypatch.setattr(VectorizedDecoder, "decode_batch", broken)

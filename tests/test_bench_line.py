@@ -3,7 +3,8 @@ splits on newlines, and ``json.loads`` the FINAL line.  Rounds 2-4 lost
 their bench numbers because the final line embedded ~90 per-query
 timings (~3.3 KB) and overflowed that window -- this test simulates the
 driver's exact parse against a worst-case-sized suite so the line can
-never regress past the window again."""
+never regress past the window again.  Also pins the bench's one
+measurement rule for topology legs (``run_leg``) on a fake clock."""
 
 from __future__ import annotations
 
@@ -54,17 +55,53 @@ def test_final_line_zero_queries_still_parses():
     assert parsed["value"] == 0 and parsed["n_queries"] == 0
 
 
-def test_final_line_floor_skips_surface_only_when_nonzero():
-    # a budget-starved floor pass must be visible on the driver line;
-    # the normal (zero-skip) line stays byte-identical to before
-    assert "floor_skips" not in json.loads(final_line({}, {}, 0.1))
-    parsed = json.loads(final_line({}, {}, 0.1, floor_skips=3))
-    assert parsed["floor_skips"] == 3
-    # worst case still fits the driver's tail window
-    timings = {f"extra_query_with_a_long_name_{i:03d}": 9.99 for i in range(135)}
-    errors = {f"err_query_{i}": "SomeException: boom" for i in range(20)}
-    line = final_line(timings, errors, 0.1, floor_skips=12)
-    assert len(line.encode()) < 500
+def _fake_leg(monkeypatch, walls: dict, fail_on: str | None = None):
+    """A Spark-free ``run(tag)`` on a fake clock: each call advances the
+    clock by ``walls[tag]`` and logs its tag."""
+    import types
+
+    import bench
+
+    clock = [0.0]
+    calls: list[str] = []
+    monkeypatch.setattr(
+        bench, "time", types.SimpleNamespace(perf_counter=lambda: clock[0])
+    )
+
+    def run(tag):
+        calls.append(tag)
+        clock[0] += walls[tag]
+        if tag == fail_on:
+            raise RuntimeError("leg failed")
+
+    return run, calls
+
+
+def test_run_leg_warms_once_untimed_then_keeps_min_of_reps(monkeypatch):
+    from bench import REPS, run_leg
+
+    assert REPS == 2
+    # the warm-up is the slowest call: a timed warm-up would show as 100
+    run, calls = _fake_leg(monkeypatch, {"warm": 100.0, "0": 5.0, "1": 2.5})
+    timings: dict = {}
+    errors: dict = {}
+    run_leg(timings, errors, "leg", run)
+    assert calls == ["warm", "0", "1"]
+    assert timings == {"leg": 2.5} and errors == {}
+
+
+def test_run_leg_records_a_failure_as_an_error_not_a_timing(monkeypatch):
+    from bench import run_leg
+
+    run, calls = _fake_leg(
+        monkeypatch, {"warm": 1.0, "0": 1.0, "1": 1.0}, fail_on="0"
+    )
+    timings: dict = {}
+    errors: dict = {}
+    run_leg(timings, errors, "leg", run)
+    assert calls == ["warm", "0"]
+    assert timings == {}
+    assert errors == {"leg": "RuntimeError: leg failed"}
 
 
 def test_every_headline_entry_is_registered():

@@ -5,9 +5,8 @@ for the reference's wire format without a broker or connector jar."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from nearscan_kafka_streams_spark.schemas import (
     RECEIPTS_SCHEMA,
@@ -176,24 +175,73 @@ def test_write_leg_overwrite_replaces_prior_commit(spark, tmp_path):
     assert back.count() == 2
 
 
-def _framed_log_with_short_frame(tmp_path):
-    """Two valid receipts around a 3-byte frame (magic + 2 bytes): the
-    short frame's would-be body start is the next record's length
-    header."""
-    from fixtures_near import build_fixture
+# the same two fields under two Avro schemas: the first is vectorizable,
+# the second's long-first union makes VectorizedDecoder refuse it, so
+# its segments decode on the row codec only
+N_S_SCHEMA = StructType(
+    [
+        StructField("n", LongType(), True),
+        StructField("s", StringType(), True),
+    ]
+)
+N_S_AVRO = {
+    "vector": {
+        "type": "record",
+        "name": "R",
+        "fields": [
+            {"name": "n", "type": "long"},
+            {"name": "s", "type": "string"},
+        ],
+    },
+    "row": {
+        "type": "record",
+        "name": "R",
+        "fields": [
+            {"name": "n", "type": ["long", "null"]},
+            {"name": "s", "type": "string"},
+        ],
+    },
+}
 
-    receipts = build_fixture()[0][:2]
-    codec = AvroCodec(avro_value_schema("receipts"))
-    good = [confluent_frame(7, codec.encode(r)) for r in receipts]
-    path = str(tmp_path / "short_log" / "part-00000.bin")
-    write_framed_log([good[0], b"\x00\x00\x00", good[1]], path)
+# corruption -> the message the read must fail with
+CORRUPTIONS = {
+    "truncated_length_header": "truncated length header",
+    "truncated_record": "truncated record",
+    "short_frame": "shorter than magic",
+    "bad_magic": "bad magic",
+    "body_truncated_mid_field": "Avro body",
+    "body_with_trailing_bytes": "Avro body",
+}
+
+
+def _corrupt_segment(tmp_path, case, lane):
+    """One segment of two ``{n, s: "hello"}`` records with ``case``
+    applied to the first record (or to the file's tail).  A body cut
+    two bytes short ends inside ``s``, so an unchecked decoder reads
+    the next record's length header as the string's last bytes."""
+    codec = AvroCodec(N_S_AVRO[lane])
+    good = [
+        confluent_frame(7, codec.encode({"n": i, "s": "hello"}))
+        for i in range(2)
+    ]
+    frames = {
+        "short_frame": [good[0], b"\x00\x00\x00", good[1]],
+        "bad_magic": [b"\x01" + good[0][1:], good[1]],
+        "body_truncated_mid_field": [good[0][:-2], good[1]],
+        "body_with_trailing_bytes": [good[0] + b"\x00\x00", good[1]],
+    }.get(case, good)
+    path = tmp_path / f"{case}-{lane}" / "part-00000.bin"
+    write_framed_log(frames, str(path))
+    data = path.read_bytes()
+    if case == "truncated_length_header":
+        path.write_bytes(data + b"\x00\x00")
+    elif case == "truncated_record":
+        path.write_bytes(data[:-3])
     return path
 
 
 def test_short_frame_rejected(tmp_path):
-    path = _framed_log_with_short_frame(tmp_path)
-    with open(path, "rb") as fh:
-        data = fh.read()
+    data = _corrupt_segment(tmp_path, "short_frame", "vector").read_bytes()
     with pytest.raises(ValueError, match="shorter than magic"):
         confluent_unframe(b"\x00\x00\x00")
     with pytest.raises(ValueError, match="shorter than magic"):
@@ -204,9 +252,19 @@ def test_short_frame_rejected(tmp_path):
     assert list(starts) == [4 + 5] and list(ends) == [4 + first]
 
 
-def test_datasource_read_fails_on_short_frame(spark, tmp_path):
-    path = _framed_log_with_short_frame(tmp_path)
-    df = _read_receipts(spark, os.path.dirname(path))
-    with pytest.raises(Exception, match="shorter than magic") as err:
+@pytest.mark.parametrize("lane", ["vector", "row"])
+@pytest.mark.parametrize("case", list(CORRUPTIONS))
+def test_datasource_read_fails_on_corrupt_segment(spark, tmp_path, case, lane):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from nearscan_kafka_streams_spark.serde.avro_vec import VectorizedDecoder
+
+    avro = N_S_AVRO[lane]
+    assert VectorizedDecoder.supports(avro, to_arrow_schema(N_S_SCHEMA)) == (
+        lane == "vector"
+    )
+    path = _corrupt_segment(tmp_path, case, lane)
+    df = read_segments(spark.read, str(path.parent), N_S_SCHEMA, avro)
+    with pytest.raises(Exception, match=CORRUPTIONS[case]) as err:
         df.collect()
-    assert "short_log/part-00000.bin" in str(err.value)
+    assert f"{case}-{lane}/part-00000.bin" in str(err.value)

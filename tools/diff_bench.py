@@ -1,12 +1,8 @@
-"""Round-over-round bench regression diff: per-query time deltas +
-physical-plan drift, failing LOUDLY (exit 2) on regressions.
+"""Bench-to-bench diff of two BENCH_PLANS_r{NN}.json side files:
+per-query time deltas + physical-plan drift, failing LOUDLY (exit 2)
+on plan-shape regressions.
 
 Usage: python tools/diff_bench.py OLD.json NEW.json
-
-Accepts either bench artifact shape:
-  - the driver-recorded compact line  {"value", "queries", ...}
-  - the BENCH_PLANS_r{NN}.json side file  {"queries", "plans", ...}
-(plans live in the side file since round 4; older rounds embedded them)
 
 Regressions that trip the nonzero exit (PLAN-SHAPE ONLY):
   - a broadcast join lost to sort-merge (broadcast count down, SMJ up)
@@ -14,18 +10,15 @@ Regressions that trip the nonzero exit (PLAN-SHAPE ONLY):
   - new nested-loop joins
 Timing deltas are reported as prose WARNINGs but never affect the exit
 code: per-query run-to-run variance on this box is up to 4x on
-sub-second queries (documented in BENCH notes), so a timing-based exit
-cried wolf every round and trained readers to ignore exit 2.  Plan
-fingerprints are deterministic -- drift there is a real signal.
+sub-second queries, so a timing-based exit would cry wolf and train
+readers to ignore exit 2.  Plan fingerprints are deterministic --
+drift there is a real signal.
 Other plan drift (exchange counts, scan counts) is reported but
 informational -- AQE and staged persists legitimately move those.
 
-Fingerprint semantics changed in round 8 (SCALE.md "Bench variance
-adjudications"): counts are DISTINCT plan nodes, cached lineage
-excluded, with a new in_memory_scans key.  r<=7 side files counted
-raw string occurrences including cached build plans, so r7-vs-r8
-plan diffs are expected to drift everywhere; r8 is the first
-node-count baseline.
+Timings on both sides are the bench's one reading per query (min of
+its reps, bench.py module docstring).  Plan fingerprints count
+DISTINCT plan nodes, cached lineage excluded (SCALE.md).
 """
 
 from __future__ import annotations
@@ -34,42 +27,21 @@ import json
 import sys
 
 
-def _load(path: str) -> tuple[dict, dict, float | None, dict]:
+def _load(path: str) -> tuple[dict, dict, float | None]:
     with open(path) as fh:
         d = json.load(fh)
-    return (
-        d.get("queries") or {},
-        d.get("plans") or {},
-        d.get("value"),
-        d.get("floors") or {},
-    )
+    return d.get("queries") or {}, d.get("plans") or {}, d.get("total_sec")
 
 
 def main() -> int:
     if len(sys.argv) != 3:
         sys.exit(__doc__)
-    oq, op, oval, ofl = _load(sys.argv[1])
-    nq, np_, nval, nfl = _load(sys.argv[2])
-
-    # measurement-series discipline (round-9 verdict item 3): since
-    # round 10 ``queries`` is uniformly the in-suite first reading and
-    # solo-rerun floors live in ``floors`` -- r09 mixed the two in one
-    # series.  When BOTH rounds recorded a floor for a query, compare
-    # floor-vs-floor (same estimator, more samples); otherwise compare
-    # the first-reading series.  The printed line labels which series
-    # was used so a cross-policy comparison is never silent.
-    def _series(name: str) -> tuple[float | None, float | None, str]:
-        o_f = (ofl.get(name) or {}).get("floor")
-        n_f = (nfl.get(name) or {}).get("floor")
-        if o_f is not None and n_f is not None:
-            return o_f, n_f, "floor"
-        return oq.get(name), nq.get(name), "first"
+    oq, op, oval = _load(sys.argv[1])
+    nq, np_, nval = _load(sys.argv[2])
 
     regressions: list[str] = []
     print(f"total: {oval} -> {nval} s")
-    # iterate the union of timed AND plan-fingerprinted queries: a
-    # partially-recovered old artifact may carry plans without timings,
-    # and plan drift must still be compared for those
+    # every query either side timed or plan-fingerprinted
     for name in sorted(set(oq) | set(nq) | set(op) | set(np_)):
         known_old = name in oq or name in op
         known_new = name in nq or name in np_
@@ -79,14 +51,12 @@ def main() -> int:
         if not known_new:
             print(f"  - {name}: removed (was {oq.get(name, '?')} s)")
             continue
-        a, b, series = _series(name)
+        a, b = oq.get(name), nq.get(name)
         notes: list[str] = []
         if a is not None and b is not None and b > a * 1.25 and b - a > 0.5:
             # timing-only: warn, never exit nonzero (4x run-to-run
             # variance on sub-second queries makes this pure noise)
-            notes.append(
-                f"WARN slower {a} -> {b} s ({series} series, timing only)"
-            )
+            notes.append(f"WARN slower {a} -> {b} s (timing only)")
         if name in op and name in np_ and op[name] != np_[name]:
             o, n = op[name], np_[name]
             changed = {

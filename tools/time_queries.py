@@ -3,14 +3,12 @@
 Usage:
   python tools/time_queries.py [--reps N] query [query ...]
 
-Prints one JSON line: {"host_probe_ms": ..., "times": {name: [r1, r2, ...]}}.
+Prints one JSON line: {"times": {name: [r1, r2, ...]}}.
 
-Round-12 measurement discipline: the sandbox host's effective CPU
-speed swings ~10x on a seconds timescale (tools/host_probe.py), so
-single wall-clock readings are meaningless.  A/B comparisons must
-interleave runs of both trees (A B A B ...) and bracket each JVM with
-the host probe; per-query reps inside one JVM separate plan cost from
-JIT/codegen warm-up.
+Each rep is a fresh plan over cleared caches; the first rep of a
+query carries its codegen and JIT warm-up, later reps its plan cost.
+Wall time on a shared host swings from run to run, so compare two
+trees by interleaving their runs (A B A B ...).
 """
 
 from __future__ import annotations
@@ -34,10 +32,6 @@ def main() -> int:
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from tools.host_probe import probe
-
-    probe_pre = probe(3)
-
     from nearscan_kafka_streams_spark.functions.dedup import release_cached
     from nearscan_kafka_streams_spark.queries import QUERIES
     from nearscan_kafka_streams_spark.session import get_spark
@@ -54,18 +48,7 @@ def main() -> int:
             runs.append(round(time.perf_counter() - t0, 3))
             release_cached()
         times[name] = runs
-    probe_post = probe(3)
-    print(
-        json.dumps(
-            {
-                "host_probe_ms": [
-                    round(probe_pre * 1000, 1),
-                    round(probe_post * 1000, 1),
-                ],
-                "times": times,
-            }
-        )
-    )
+    print(json.dumps({"times": times}))
     spark.stop()
     return 0
 

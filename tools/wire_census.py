@@ -21,22 +21,10 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _stages(ui: str) -> dict[int, dict]:
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    out = {}
-    for st in json.load(
-        urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-        )
-    ):
-        out[st["stageId"]] = st
-    return out
+from tools.stage_census import _stages  # noqa: E402
 
 
 def _report(ui: str, before: set, label: str, wall: float) -> None:

@@ -581,6 +581,20 @@ def _err(exc: BaseException) -> str:
     return f"{type(exc).__name__}: {exc}"[:500]
 
 
+def stop_session(spark) -> None:
+    """``spark.stop()``, but a JVM that already died (say, killed for
+    memory in the stress battery) is reported on stderr instead of
+    raising, so the final line still prints: every error is already
+    in ``errors`` and the side file is written."""
+    from py4j.protocol import Py4JError
+
+    try:
+        spark.stop()
+    except (OSError, Py4JError) as exc:
+        print(f"bench: spark.stop() failed, JVM gone: {_err(exc)}",
+              file=sys.stderr)
+
+
 def run_leg(timings: dict, errors: dict, name: str, run) -> None:
     """Time one end-to-end leg by the suite's one rule: ``run("warm")``
     once, untimed (it carries codegen, Python-worker start-up and
@@ -988,7 +1002,7 @@ def main() -> None:
     with open(side_path, "w") as fh:
         json.dump(side, fh, indent=1)
 
-    spark.stop()
+    stop_session(spark)
     # FINAL stdout line, by itself -- the driver tail-parses stdout
     sys.stdout.flush()
     print(final_line(timings, errors, sf_val))

@@ -244,27 +244,43 @@ def incremental_exact_dedup(
     return survivors
 
 
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Character n-gram shingle hashes of normalized text -> array<bigint>.
+def normalized_text(text_col: str) -> F.Column:
+    """Trimmed, lower-cased text with every whitespace run collapsed to
+    one space: the input of :func:`shingle_strings` and :func:`shingles`.
 
-    Hashing shingles immediately (xxhash64) keeps the per-doc working
-    set at 8 bytes/shingle regardless of document size.
-    """
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    # sliding window via sequence + substring: pure Catalyst, no UDF
-    idx = F.sequence(F.lit(1), F.greatest(F.length(normalized) - (n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: normalized.substr(i, F.lit(n)))
-    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
+    Project it as its own column, below the projection that builds the
+    grams.  The gram kernels read the column twice (length and
+    substring), so ``CollapseProject`` keeps the two projections apart
+    and the regex runs once per document; written inline, it sits in
+    the ``transform`` lambda and runs once per gram."""
+    return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
 
 
-def shingle_strings(text_col: str, n: int = 3) -> F.Column:
-    """Raw (unhashed) distinct character n-grams of normalized text.
+def shingle_strings(norm_col: str, n: int = 3) -> F.Column:
+    """Raw (unhashed) distinct character n-grams of the normalized text
+    in ``norm_col`` (a :func:`normalized_text` column, projected once
+    per document by the caller) -> array<string>.
 
     Used where cross-engine value parity matters (exact Jaccard with a
-    SQL oracle); the hashed variant above is the scale default."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(normalized) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: normalized.substr(i, F.lit(n))))
+    SQL oracle); :func:`shingles` hashes the same grams."""
+    norm = F.col(norm_col)
+    # sliding window via sequence + substring: pure Catalyst, no UDF
+    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(n))))
+
+
+def shingles(norm_col: str, n: int = 3) -> F.Column:
+    """Character n-gram shingle hashes of the normalized text in
+    ``norm_col`` (a :func:`normalized_text` column, projected once per
+    document by the caller) -> array<bigint>: xxhash64 of each of
+    :func:`shingle_strings`' grams, in the same order.
+
+    Hashing shingles immediately keeps the per-doc working set at
+    8 bytes/shingle regardless of document size.
+    """
+    return F.array_distinct(
+        F.transform(shingle_strings(norm_col, n), lambda g: F.xxhash64(g))
+    )
 
 
 def _doc_bitmaps(
@@ -440,7 +456,8 @@ def jaccard_similarity_join(
     p, q = frac.numerator, frac.denominator
     sets = (
         _spread(df)
-        .select(F.col(id_col), shingle_strings(text_col, shingle_n).alias("grams"))
+        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
+        .select(F.col(id_col), shingle_strings("norm", shingle_n).alias("grams"))
         .withColumn("sz", F.size("grams"))
     )
     if materialize:
@@ -942,7 +959,8 @@ def containment_join(
     p, q = frac.numerator, frac.denominator
     sets = (
         _spread(df)
-        .select(F.col(id_col), shingle_strings(text_col, shingle_n).alias("grams"))
+        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
+        .select(F.col(id_col), shingle_strings("norm", shingle_n).alias("grams"))
         .withColumn("sz", F.size("grams"))
     )
     if materialize:
@@ -1881,8 +1899,10 @@ def _band_keys(
     ``num_hashes`` permutation expressions (64x recompute per doc --
     measured 102.7s collapsed vs ~8s staged at sf0.1)."""
     rows_per_band = num_hashes // bands
-    sh_df = _spread(df).select(
-        F.col(id_col), shingles(text_col, shingle_n).alias("sh")
+    sh_df = (
+        _spread(df)
+        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
+        .select(F.col(id_col), shingles("norm", shingle_n).alias("sh"))
     )
     if materialize:
         sh_df = _persist_tracked(sh_df)
@@ -2103,11 +2123,11 @@ def ngram_jaccard_pairs(
     (id_col, "sh") -- e.g. from ``minhash_lsh_candidates(...,
     return_shingles=True)`` -- to reuse already-computed sets.
     """
-    sets_df = (
-        shingle_df
-        if shingle_df is not None
-        else df.select(F.col(id_col), shingles(text_col, shingle_n).alias("sh"))
-    )
+    sets_df = shingle_df
+    if sets_df is None:
+        sets_df = df.select(
+            F.col(id_col), normalized_text(text_col).alias("norm")
+        ).select(F.col(id_col), shingles("norm", shingle_n).alias("sh"))
     out = (
         candidates.join(
             sets_df.withColumnRenamed(id_col, "left_id").withColumnRenamed(
@@ -2213,9 +2233,10 @@ def simhash_pairs(
     any pair within hamming distance 3 shares at least one of 4
     contiguous 16-bit blocks), then verifies hamming distance exactly.
     """
-    sh = _spread(df).select(
-        F.col(id_col),
-        simhash_from_shingles(shingles(text_col)).alias("sh"),
+    sh = (
+        _spread(df)
+        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
+        .select(F.col(id_col), simhash_from_shingles(shingles("norm")).alias("sh"))
     )
     blocks = sh.select(
         id_col,

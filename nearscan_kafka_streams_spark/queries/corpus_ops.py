@@ -294,6 +294,7 @@ def _md5_banded_candidates(
     as the co-event graph's pair cap."""
     from nearscan_kafka_streams_spark.functions.dedup import (
         _spread,
+        normalized_text,
         shingle_strings,
     )
 
@@ -301,8 +302,10 @@ def _md5_banded_candidates(
     # CPU-heavy stage, and a small parquet arrives as 1-2 scan splits
     # -- unspread it runs on 2 of 32 cores (measured 15.8 s vs ~2 s
     # for the shingle pass alone at sf0.1)
-    sets = _spread(d).select(
-        "doc_id", shingle_strings("text", 3).alias("grams")
+    sets = (
+        _spread(d)
+        .select("doc_id", normalized_text("text").alias("norm"))
+        .select("doc_id", shingle_strings("norm", 3).alias("grams"))
     )
     def _perm(s: int):
         # closure factory: a 2-param lambda (even with a default) is

@@ -49,6 +49,12 @@ def get_spark(
         # (unix_micros, to_utc_timestamp, ...) reject -- read them as
         # plain TIMESTAMP under the pinned UTC session zone instead
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # compiled-class cache (static conf): the default 100 entries is
+        # below one warm working set -- one corpus_dedup rep (a Jaccard
+        # and a containment self-join) needs ~115 generated classes, one
+        # wire_tail step ~105 -- so each call evicted the other's classes
+        # and Janino recompiled them on every call
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # RocksDB state store: the reference's dedup/join/KTable state is
         # RocksDB-backed (TokenBalance.java:87-89); Spark's provider
         # keeps large streaming state off-heap and incremental-checkpoints

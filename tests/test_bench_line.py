@@ -4,7 +4,8 @@ their bench numbers because the final line embedded ~90 per-query
 timings (~3.3 KB) and overflowed that window -- this test simulates the
 driver's exact parse against a worst-case-sized suite so the line can
 never regress past the window again.  Also pins the bench's one
-measurement rule for topology legs (``run_leg``) on a fake clock."""
+measurement rule for topology legs (``run_leg``) on a fake clock, and
+that a JVM already dead at ``spark.stop()`` cannot cost the final line."""
 
 from __future__ import annotations
 
@@ -102,6 +103,39 @@ def test_run_leg_records_a_failure_as_an_error_not_a_timing(monkeypatch):
     assert calls == ["warm", "0"]
     assert timings == {}
     assert errors == {"leg": "RuntimeError: leg failed"}
+
+
+def test_stop_session_reports_a_dead_jvm_instead_of_raising(capsys):
+    """A JVM that died mid-run makes ``spark.stop()`` raise; the bench
+    must still reach its final line, so the stop reports on stderr."""
+    from py4j.protocol import Py4JNetworkError
+
+    from bench import stop_session
+
+    class DeadSession:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def stop(self):
+            raise self.exc
+
+    for exc in (
+        ConnectionRefusedError(111, "Connection refused"),
+        Py4JNetworkError("An error occurred while trying to connect"),
+    ):
+        stop_session(DeadSession(exc))
+        out, err = capsys.readouterr()
+        assert out == ""
+        assert type(exc).__name__ in err
+
+    stopped = []
+
+    class LiveSession:
+        def stop(self):
+            stopped.append(True)
+
+    stop_session(LiveSession())
+    assert stopped == [True] and capsys.readouterr().err == ""
 
 
 def test_every_headline_entry_is_registered():

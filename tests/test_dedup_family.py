@@ -72,6 +72,7 @@ def test_simhash_distance_ordering(spark):
     fixed bucket threshold: near-dup (0,2) must be closer than
     unrelated (0,3) and (0,4)."""
     from nearscan_kafka_streams_spark.functions.dedup import (
+        normalized_text,
         shingles,
         simhash_from_shingles,
     )
@@ -79,7 +80,8 @@ def test_simhash_distance_ordering(spark):
     fps = {
         r["doc_id"]: r["fp"]
         for r in _df(spark)
-        .select("doc_id", simhash_from_shingles(shingles("text")).alias("fp"))
+        .select("doc_id", normalized_text("text").alias("norm"))
+        .select("doc_id", simhash_from_shingles(shingles("norm")).alias("fp"))
         .collect()
     }
 
@@ -108,10 +110,15 @@ def test_minhash_deterministic_across_partitionings(spark):
 def test_lsh_agrees_with_bruteforce_jaccard(spark):
     """Every pair with true Jaccard >= 0.7 must be an LSH candidate
     (16 bands x 4 rows: P(miss at s=0.7) = (1-0.7^4)^16 ~ 0.9%)."""
-    from nearscan_kafka_streams_spark.functions.dedup import shingles
+    from nearscan_kafka_streams_spark.functions.dedup import (
+        normalized_text,
+        shingles,
+    )
 
     df = _df(spark)
-    sh = df.select("doc_id", shingles("text").alias("sh"))
+    sh = df.select("doc_id", normalized_text("text").alias("norm")).select(
+        "doc_id", shingles("norm").alias("sh")
+    )
     l = sh.withColumnRenamed("doc_id", "left_id").withColumnRenamed("sh", "sh_l")
     r = sh.withColumnRenamed("doc_id", "right_id").withColumnRenamed("sh", "sh_r")
     truth = (

@@ -460,7 +460,6 @@ def build_stress_thunks(spark, n_docs: int, n_vecs: int):
             lambda stats_out=None: jaccard_similarity_join(
                 docs,
                 threshold=0.9,
-                broadcast_verify=True,
                 prefix_ext="auto",
                 stats_out=stats_out,
             ),
@@ -472,8 +471,7 @@ def build_stress_thunks(spark, n_docs: int, n_vecs: int):
             # that term observable
             "dedup_ngram_containment",
             lambda stats_out=None: containment_join(
-                docs, threshold=0.9, broadcast_verify=True,
-                stats_out=stats_out,
+                docs, threshold=0.9, stats_out=stats_out,
             ),
         ),
         (
@@ -637,17 +635,7 @@ def main() -> None:
     from nearscan_kafka_streams_spark.queries import QUERIES
     from nearscan_kafka_streams_spark.session import get_spark
 
-    # the bench runs ~135 queries + a 10x-scale stress pass in ONE JVM:
-    # an undersized heap silently EVICTS persisted LSH/signature stages
-    # mid-job, re-triggering the 64x expression recompute those persists
-    # exist to prevent (observed as 9.7s -> 81.7s run-to-run swings).
-    # SPARK_DRIVER_MEM overrides.
-    spark = get_spark(
-        app_name="nearscan-bench",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g")
-        },
-    )
+    spark = get_spark(app_name="nearscan-bench")
     # warm-up: one scan + one shuffle + one noop write so JVM startup,
     # codegen compilation and committer init are not attributed to the
     # first timed queries
@@ -711,7 +699,7 @@ def main() -> None:
             t0 = time.perf_counter()
             keep_staged = False
             try:
-                # materialize fully, keep results distributed (no driver pull)
+                # run to completion, keep results distributed (no driver pull)
                 if producer_of is not None and producer_of in staged:
                     df = fn(spark, sf_dir, edges=staged[producer_of])
                 else:

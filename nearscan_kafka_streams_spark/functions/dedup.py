@@ -43,6 +43,16 @@ _CACHED: list[DataFrame] = []
 # max flattened hashes per vectorized simhash chunk (~64 MB bit matrix)
 _SIMHASH_CHUNK = 1 << 20
 
+# exact set-similarity joins: a gram vocabulary up to this size is dense
+# (prefix filtering barely filters) and each doc's gram set fits a
+# bitmap of at most 64 longs
+_BITMAP_MAX_VOCAB = 4096
+# largest dense corpus the all-pairs plan takes: its nested-loop join is
+# compute-bound, ~134M pair evaluations at 16,384 docs -- about 10x the
+# 12.5M-pair regime (5k docs) where it measured faster than the prefix
+# plan; the bitmap table (~36 MB at the vocab cap) still broadcasts
+_ALLPAIRS_MAX_DOCS = 16384
+
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
     """Persist ``df`` and take ownership of the cache entry, UNLESS a
@@ -103,10 +113,9 @@ def _bitmap_inter(left: str, right: str, n_words: int) -> F.Column:
     """Exact bitmap-intersection size: sum over the fixed ``n_words``
     long words of ``bit_count(l[j] & r[j])``.
 
-    For SMALL word counts the sum is UNROLLED (round 13, guide
-    §4.1/§1.2 per-task work): higher-order functions do not
-    participate in whole-stage codegen and allocate a zipped array per
-    evaluated pair, and on the all-pairs BNLJ paths -- millions of
+    For SMALL word counts the sum is UNROLLED: higher-order functions
+    do not participate in whole-stage codegen and allocate a zipped
+    array per evaluated pair, and on the all-pairs BNLJ plans -- millions of
     pair evaluations -- the fold is the dominant per-pair cost; the
     unrolled form is pure codegen-able arithmetic over ``element_at``
     with zero allocation (measured at sf0.1, 6 words: jaccard 2.71 ->
@@ -223,7 +232,7 @@ def incremental_exact_dedup(
                 )
             batch = batch.join(seen_rows.select("fp"), "fp", "left_anti")
 
-    # materialize survivors DURABLY before registration: the anti-join's
+    # write the survivors out DURABLY before registration: the anti-join's
     # lineage pins the pre-registration bucket files, and registration
     # may supersede (and GC) those very generations -- a persist() that
     # gets evicted before the caller consumes the result would then
@@ -284,13 +293,13 @@ def shingles(norm_col: str, n: int = 3) -> F.Column:
 
 
 def _doc_bitmaps(
-    tok: DataFrame, gdf: DataFrame, id_col: str, vocab_size: int
+    sets: DataFrame, gdf: DataFrame, id_col: str, vocab_size: int
 ) -> DataFrame:
-    """(id_col, sz, bm) fixed-width gram bitmaps for the dense-vocab
-    verify paths: each doc's gram set as ``vocab/64`` long words, so an
-    exact intersection is AND + popcount per word.  ``tok`` must carry
-    (id_col, sz, g) rows; the vocab index is df-ordered only to keep a
-    deterministic bijection (any order yields identical intersection
+    """(id_col, sz, bm) fixed-width gram bitmaps for the dense all-pairs
+    plans: each doc's gram set as ``vocab/64`` long words, so an exact
+    intersection is AND + popcount per word.  ``sets`` carries
+    (id_col, grams, sz) rows; the vocab index is df-ordered only to keep
+    a deterministic bijection (any order yields identical intersection
     sizes)."""
     n_words = (vocab_size + 63) // 64
     vocab = gdf.select(
@@ -298,7 +307,8 @@ def _doc_bitmaps(
         (F.row_number().over(Window.orderBy("df", "g")) - 1).alias("idx"),
     )
     return (
-        tok.join(F.broadcast(vocab), "g")
+        sets.select(id_col, "sz", F.explode("grams").alias("g"))
+        .join(F.broadcast(vocab), "g")
         .select(
             id_col,
             "sz",
@@ -329,216 +339,196 @@ def _doc_bitmaps(
     )
 
 
+def _gram_tables(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    threshold: float,
+    min_size: int = 1,
+) -> tuple:
+    """The prelude of the exact set-similarity joins:
+    ``(p, q, sets, gdf, ordered, vocab_size, n_docs)``.
+
+    - ``p/q``: ``threshold`` as an integer fraction.  All threshold
+      arithmetic is integer: float ``ceil(t*n)`` can land one off under
+      binary rounding (0.8*85 -> 68.00000000000001 -> ceil 69),
+      silently shrinking a prefix and losing pairs.
+    - ``sets``: persisted (id, grams, sz), the distinct raw n-grams of
+      each document's normalized text, without the documents that have
+      fewer than ``min_size`` grams.
+    - ``gdf``: persisted (g, df), each gram's document frequency.
+    - ``ordered``: lazy (id, sz, ordered), each document's (df, g)
+      structs sorted rarest first -- the order prefix filtering uses.
+    - ``vocab_size`` and ``n_docs``: counted.  The vocabulary count
+      fills both caches, so the document count reads cached rows.
+    """
+    from fractions import Fraction
+
+    frac = Fraction(threshold).limit_denominator(10_000)
+    # read by the df count, the prefix build and both verify sides;
+    # persisting stops a recompute of the gram pipeline per reader
+    sets = _persist_tracked(
+        _spread(df)
+        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
+        .select(F.col(id_col), shingle_strings("norm", shingle_n).alias("grams"))
+        .withColumn("sz", F.size("grams"))
+    )
+    # every set has at least one gram, so only a larger floor filters.
+    # The filter goes AFTER the persist, never before: pushed below the
+    # projection, the predicate re-evaluates the shingle chain with the
+    # normalization regex re-run per array element inside the transform
+    # lambda (no subexpression elimination in filter context) --
+    # measured 0.3 s -> 15 s on the sf0.1 corpus
+    if min_size > 1:
+        sets = sets.where(F.col("sz") >= min_size)
+    tok = sets.select(id_col, "sz", F.explode("grams").alias("g"))
+    # one row per distinct gram, read by the counts, the df-order join
+    # and the bitmap vocab index: each would re-run the explode+groupBy
+    # of the whole token stream without the persist
+    gdf = _persist_tracked(tok.groupBy("g").agg(F.count(F.lit(1)).alias("df")))
+    vocab_size = gdf.count()
+    n_docs = sets.count()
+    # the vocabulary is bounded: broadcast the df table so attaching df
+    # to every token is map-side (4M rows of (gram, count) ~ 100 MB)
+    if vocab_size <= 4_000_000:
+        gdf = F.broadcast(gdf)
+    ordered = (
+        tok.join(gdf, "g")
+        .groupBy(id_col, "sz")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("ordered"))
+    )
+    return frac.numerator, frac.denominator, sets, gdf, ordered, vocab_size, n_docs
+
+
+def _hashed_sets(sets: DataFrame, id_col: str, side: str) -> DataFrame:
+    """(<side>_id, g_<s>, sz_<s>) verify side of a prefix plan, ``s``
+    the side's initial: the set's grams hashed with xxhash64.
+
+    Intersecting hashed grams is 2.6x faster than intersecting strings
+    (measured sf0.1: 24.3 s -> 9.3 s, identical pairs).  An xxhash64
+    collision between distinct grams of one pair would change a count
+    (probability ~|doc|^2 / 2^64 per pair; at a billion docs of 10k
+    grams each, ~1e-5 affected pairs corpus-wide); the DuckDB oracles
+    intersect raw strings, so a collision would surface as a hash
+    mismatch in the correctness check rather than silently."""
+    s = side[0]
+    return sets.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.transform("grams", lambda g: F.xxhash64(g)).alias(f"g_{s}"),
+        F.col("sz").alias(f"sz_{s}"),
+    )
+
+
 def jaccard_similarity_join(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
-    broadcast_verify: bool = False,
-    bitmap_max_vocab: int = 4096,
     stats_out: dict | None = None,
     prefix_ext: int | str = "auto",
-    allpairs_max_docs: int = 16384,
 ) -> DataFrame:
-    """EXACT set-similarity self-join via AllPairs prefix filtering.
+    """EXACT set-similarity self-join: every pair whose n-gram-set
+    Jaccard is ``>= threshold``.  Unlike the probabilistic MinHash path,
+    which trades borderline recall for speed, a naive all-pairs SQL
+    oracle matches it bit-for-bit.
 
-    ``stats_out``: pass a dict to have the candidate-generation stages
-    COUNTED into it (vocab_size, use_bitmap, n_candidates_raw,
-    n_candidates_distinct) -- the super-linear term in exact set
-    similarity is candidate growth, so any scale-stress harness should
-    record these next to the timing (costs one extra action; the
-    counted frame is persisted and reused by the verify stage).
+    Output: (left_id, right_id, inter_size, union_size) -- integers, so
+    the threshold predicate and the oracle compare exactly.
 
-    ``prefix_ext``: the k-extended prefix scheme (AdaptJoin, Wang et
-    al. SIGMOD'12).  With k >= 2 each document indexes the
-    ``sz - ceil(t*sz) + k`` rarest grams and a pair is a candidate only
-    if it collides on >= k of them (exactly: >= least(k, alpha) where
-    alpha = ceil(t/(1+t)*(sx+sy)) is the pair's required overlap, so
-    tiny sets whose alpha < k are never over-filtered).  Soundness is
-    pigeonhole: if |A intersect B| >= alpha, the j-th smallest shared
-    gram (global df order) sits within the first ``sz - alpha + j``
-    grams of BOTH sides, so the min(k, alpha) smallest shared grams
-    all land in both k-extended prefixes.  On bounded-vocabulary
-    corpora (fixed gram alphabet, corpus grows), 1-prefix collision
-    pairs grow quadratically while TRUE pairs stay linear -- measured
-    at the 50k-doc stress corpus (vocab 19,605): 33.1M candidates for
-    16.5k true pairs.  Each extra required collision thins random
-    candidates by another ~lambda/k factor (collisions between
-    non-dup docs are ~Poisson(plen^2/vocab)); measured k=2 -> 3.17M,
-    k=3 -> 103k candidates, at +~8% prefix collision mass per
-    increment -- so ``prefix_ext="auto"`` measures the 1-prefix
-    collision mass (sum over grams of C(df_prefix, 2), one cheap
-    aggregate over the prefix index) and jumps straight to k=3 when
-    it exceeds max(50_000, 20 * n_docs); the decision and the
-    estimate are recorded in ``stats_out``.  ``"auto"`` is the
-    DEFAULT (round-10): the decision aggregate is linear and cheap,
-    and it retires the quadratic k=1 hot path everywhere the corpus
-    would pay for it; pass ``prefix_ext=1`` for the classic
-    bit-identical AllPairs plan (the outputs are identical either way
-    -- the scheme is lossless).  The positional (PPJoin) filter is
-    row-level, so it applies only at k=1 -- dropping individual
-    collision rows would undercount the k>=2 collision requirement.
+    Three plans, all lossless, chosen from the measured vocabulary and
+    document count:
 
-    The k>=2 path additionally pins its own parallelism: the collision
-    join and the verify stage are COMPUTE-AMPLIFYING (kilobytes of
-    prefix index fan out to tens of millions of collision rows; each
-    candidate pair costs an exact array intersect), and AQE coalesces
-    shuffle partitions by INPUT bytes, so it funnels the amplifying
-    stages onto 1-2 tasks (measured: the 92M-row collision aggregate
-    ran single-threaded, 50 s -> 12 s with explicit repartition +
-    shuffle_hash; the verify stage 44 s -> 15 s).  broadcast_verify is
-    ignored on this path for the same measured reason: building two
-    ~100 MB broadcast relations costs more than shuffling the skinny
-    candidate pairs (23.2 s vs 14.9 s at 3.2M candidates).
+    * dense all-pairs (``prefix_ext="auto"``, vocabulary
+      ``<= _BITMAP_MAX_VOCAB``, ``<= _ALLPAIRS_MAX_DOCS`` docs,
+      threshold > 0): on a small vocabulary every gram is common and
+      prefix filtering barely filters (sf0.1, 5k docs, vocab 377: 3.43M
+      distinct candidates of 12.5M pairs), so the prefix self-join,
+      per-pair shuffle and distinct cost more than they prune.  Each doc
+      becomes a ``vocab/64``-word bitmap, the bitmap table broadcasts
+      whole, and a broadcast nested-loop join evaluates the cheap
+      (id order, length ratio) predicate in codegen; the exact
+      intersection (AND + popcount) runs on survivors only.  Exact
+      AllPairs stays quadratic in pairs on such corpora whichever way
+      candidates are generated (the 100 TB answer is MinHash+LSH,
+      SCALE.md); this plan only lowers the constant.  At threshold 0 the
+      all-pairs superset would add zero-intersection pairs the prefix
+      plans never emit, so it needs threshold > 0.
+    * prefix k=1 (AllPairs/PPJoin): sort each document's grams by global
+      document frequency (rarest first) and index only the PREFIX of
+      length ``|A| - ceil(t*|A|) + 1``.  Any pair with J >= t collides
+      on a prefix gram; length pruning (min_size >= t * max_size) and
+      the positional filter (a collision at 1-based positions (i, j)
+      caps the overlap at ``1 + min(|x|-i, |y|-j)``, dropped when below
+      the required ``ceil(t/(1+t) * (|x|+|y|))``) remove pairs before
+      the shuffle.  Prefix posting lists are short by construction, so
+      the inverted-index join never degenerates to all-pairs.
+    * prefix k>=2 (AdaptJoin, Wang et al. SIGMOD'12): each document
+      indexes its ``sz - ceil(t*sz) + k`` rarest grams and a pair is a
+      candidate only if it collides on >= least(k, alpha) of them, with
+      alpha = ceil(t/(1+t)*(sx+sy)) the pair's required overlap, so tiny
+      sets whose alpha < k are never over-filtered.  Soundness is
+      pigeonhole: if |A intersect B| >= alpha, the j-th smallest shared
+      gram sits within the first ``sz - alpha + j`` grams of BOTH sides.
+      The positional filter is row-level, so it runs only at k=1
+      (dropping collision rows would undercount the k>=2 requirement).
 
-    Emits EVERY pair with n-gram-set Jaccard >= threshold -- unlike the
-    probabilistic MinHash path, which trades borderline recall for
-    speed -- so a naive all-pairs SQL oracle matches bit-for-bit.
+    Both prefix plans verify the candidates on xxhash64-hashed grams
+    (:func:`_hashed_sets`); the dense plan is collision-free.  The
+    verify joins are left to Spark's size-based broadcast: a set table
+    under ``autoBroadcastJoinThreshold`` broadcasts, a larger one
+    shuffles the skinny candidate pairs instead, which measured cheaper
+    than broadcasting two ~100 MB set tables (14.9 s vs 23.2 s at 3.2M
+    candidates).
 
-    Candidate generation (the scale story): sort each document's grams
-    by global document frequency (rarest first) and index only the
-    PREFIX of length |A| - ceil(t*|A|) + 1.  Any pair with J >= t must
-    collide on a prefix gram (the AllPairs/PPJoin bound), and length
-    pruning (min_size >= t * max_size) removes cross-size pairs before
-    the exact verify.  Prefix posting lists are short by construction
-    (rarest grams), so the inverted-index join never degenerates to
-    all-pairs.  Exact Jaccard runs only on candidates.  At petabyte
-    scale hash the gram strings first; strings are kept here for
-    cross-engine oracle parity.
+    ``prefix_ext``: ``"auto"`` (the default) takes the dense plan where
+    it applies, k=1 on any other dense corpus, and on a sparse corpus
+    measures the 1-prefix collision mass (sum over grams of
+    C(df_prefix, 2), one linear aggregate over the prefix index) and
+    jumps to k=3 when it exceeds max(50_000, 20 * n_docs).  On
+    bounded-vocabulary corpora 1-prefix collisions grow quadratically
+    while TRUE pairs stay linear -- at the 50k-doc stress corpus (vocab
+    19,605): 33.1M candidates for 16.5k true pairs.  Collisions between
+    non-duplicates are ~Poisson(plen^2/vocab), so each extra required
+    collision thins them by another ~lambda/k: k=2 -> 3.17M, k=3 -> 103k
+    candidates at +~8% prefix collision mass per increment.  An
+    integer ``prefix_ext`` forces that prefix plan; the outputs are
+    identical either way.
 
-    Output: (left_id, right_id, inter_size, union_size) -- integers,
-    so the threshold predicate and the oracle compare exactly.
+    The prefix plans pin their own parallelism: the collision join and
+    the verify are COMPUTE-AMPLIFYING (kilobytes of prefix index fan out
+    to tens of millions of collision rows; each candidate costs an exact
+    intersect), and AQE coalesces shuffle partitions by INPUT bytes, so
+    it funnels them onto 1-2 tasks (measured: the 92M-row collision
+    aggregate ran single-threaded, 50 s -> 12 s with explicit
+    repartition + shuffle_hash; the verify stage 44 s -> 15 s).
 
-    All threshold arithmetic is INTEGER (threshold as a fraction p/q):
-    float ``ceil(t*n)`` can land one off under binary rounding (e.g.
-    0.8*85 -> 68.00000000000001 -> ceil 69), silently shrinking the
-    prefix and losing pairs -- an exactness bug, not a perf choice.
-
-    Two candidate prunes beyond the prefix bound, both standard:
-
-    ``allpairs_max_docs`` (round 12): in the dense/bitmap regime with
-    ``prefix_ext="auto"`` and a corpus small enough that the bitmap
-    table broadcasts comfortably, candidate generation is skipped
-    entirely -- a broadcast nested-loop all-pairs over the fixed-width
-    bitmaps beats the weak prefix filter (measured 27% candidate
-    selectivity at sf0.1); see the inline branch for the full
-    rationale.  0 disables; explicit ``prefix_ext`` keeps the classic
-    plan.  Output is identical on every path for threshold > 0 (at
-    t=0 the BNLJ superset includes zero-intersection pairs the prefix
-    plan can never emit, so the gate requires p > 0 -- round-12
-    ADVICE).  Default 16,384 (round 13, down from 65,536): the BNLJ
-    is COMPUTE-bound, not broadcast-bound -- at the old bound it
-    evaluates ~2.1B pair predicates (and survivors a 64-word popcount
-    fold), far past where the measured win over the prefix plan
-    (validated at 5k docs / 12.5M pairs) can be extrapolated; 16,384
-    docs = ~134M pair evaluations, ~10x the validated regime, which
-    interleaved A/B still favors.  Above the cap the classic prefix
-    plan (and at real scale MinHash+LSH, SCALE.md) takes over.
-
-    * positional filter (PPJoin): a prefix collision at 1-based sorted
-      positions (i, j) caps the achievable overlap at
-      ``1 + min(|x|-i, |y|-j)``; pairs whose cap is below the required
-      overlap ``ceil(t/(1+t) * (|x|+|y|))`` are dropped pre-shuffle.
-    * bitmap verification: when the measured gram vocabulary is small
-      (``<= bitmap_max_vocab`` -- dense/short-alphabet corpora, where
-      prefix filtering is weakest and candidates approach all-pairs),
-      each doc's gram set becomes a fixed ``vocab/64``-word bitmap and
-      the exact intersection is ``sum(bit_count(a & b))`` -- a few long
-      ANDs per pair instead of a per-pair hash set, and collision-free
-      (no gram hashing at all).  Large vocabularies keep the
-      hashed-array intersect path.
+    ``stats_out``: pass a dict to have the plan inputs and the
+    candidate-stage sizes COUNTED into it (vocab_size, use_bitmap = the
+    vocabulary is dense, n_docs, prefix_ext, n_candidates_raw,
+    n_candidates_distinct; est_prefix_collisions when ``"auto"``
+    measured it; plan="bitmap_allpairs" and prefix_ext None on the dense
+    plan).  The super-linear term in exact set similarity is candidate
+    growth, so a scale-stress harness records these next to the timing
+    (one extra action; the counted frame is persisted and reused by the
+    verify).
     """
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
-    p, q = frac.numerator, frac.denominator
-    sets = (
-        _spread(df)
-        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
-        .select(F.col(id_col), shingle_strings("norm", shingle_n).alias("grams"))
-        .withColumn("sz", F.size("grams"))
+    p, q, sets, gdf, ordered, vocab_size, n_docs = _gram_tables(
+        df, text_col, id_col, shingle_n, threshold
     )
-    if materialize:
-        # read by the df-count pass, the prefix build, and both verify
-        # sides; persisting stops 4x recompute of the gram pipeline.
-        # NB: the hashed-gram column for array-path verification is
-        # derived AFTER the persist (below) -- the bitmap path never
-        # pays for it
-        sets = _persist_tracked(sets)
-    # array-path verification intersects HASHED grams: 2.6x faster than
-    # string intersect (measured sf0.1: 24.3s -> 9.3s, identical
-    # pairs).  An xxhash64 collision within one doc pair's gram sets
-    # would change a count (P ~ (n_grams)^2/2^64 per pair); the DuckDB
-    # oracle computes on raw strings, so any collision surfaces as a
-    # hash-mismatch in the correctness gate rather than silently.
-    sets_hashed = sets.withColumn(
-        "hg", F.transform("grams", lambda g: F.xxhash64(g))
-    )
+    dense = vocab_size <= _BITMAP_MAX_VOCAB
+    if stats_out is not None:
+        stats_out.update(vocab_size=vocab_size, use_bitmap=dense, n_docs=n_docs)
+    par = df.sparkSession.sparkContext.defaultParallelism
 
-    tok = sets.select(id_col, "sz", F.explode("grams").alias("g"))
-    gdf = tok.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    if materialize:
-        # gdf feeds the regime count below AND (depending on path) the
-        # df-order join, the bitmap vocab index, or the broadcast
-        # build -- each a fresh explode+groupBy of the whole token
-        # stream without this persist (the count action materializes
-        # it; the frame is one row per distinct gram, vocabulary-sized)
-        gdf = _persist_tracked(gdf)
-    # the gram vocabulary is bounded (char n-grams over natural text);
-    # one cheap count decides the verify representation
-    vocab_size = gdf.count()
-    use_bitmap = vocab_size <= bitmap_max_vocab
-
-    # Dense-regime ALL-PAIRS plan (round 12, guide §1.1/§3): when the
-    # vocabulary is bitmap-small, prefix filtering barely filters --
-    # measured at sf0.1 (5k docs, vocab 377): 3.43M distinct candidates
-    # of 12.5M possible pairs (27% selectivity), i.e. the prefix
-    # self-join + per-pair shuffle + distinct cost MORE than they
-    # prune.  In that regime skip candidate generation entirely: every
-    # doc is a vocab/64-word bitmap (a few hundred bytes), so the
-    # corpus bitmap table broadcasts whole and a broadcast nested-loop
-    # join evaluates the cheap (id<, length-ratio) predicates in
-    # codegen with no shuffle, no pair materialization for rejected
-    # rows, and no distinct -- the exact intersection (AND+popcount)
-    # runs on survivors only.  Output is provably identical: the BNLJ
-    # pair superset contains every length-eligible pair and the verify
-    # predicate is the exact one (measured bit-identical at sf0.1).
-    # Dense/bounded-vocab corpora make exact AllPairs inherently
-    # quadratic in PAIRS whichever way candidates are generated (the
-    # 100 TB answer stays MinHash+LSH, SCALE.md); this plan only
-    # lowers the constant, so it is gated to corpora whose bitmap
-    # table broadcasts comfortably (``allpairs_max_docs``, ~36 MB at
-    # the 4096-vocab worst case) and to the ``"auto"`` plan chooser
-    # (an explicit ``prefix_ext`` keeps the classic plan).
-    if (
-        prefix_ext == "auto"
-        and use_bitmap
-        and materialize
-        and allpairs_max_docs > 0
-        # the BNLJ superset is ALL length-eligible pairs; at t=0 that
-        # includes zero-intersection pairs the prefix plan (>= 1
-        # shared gram) can never emit, so identity needs t > 0
-        # (round-12 ADVICE)
-        and p > 0
-        # corpus-size gate via a CAPPED count: limit(n+1) terminates
-        # after ~n+1 rows, so deciding "corpus too big, fall back"
-        # costs O(allpairs_max_docs) rows instead of a full
-        # tokenize+count pass over the corpus (round-12 verdict item
-        # 3); when the branch IS taken the capped count equals the
-        # doc count
-        and sets.limit(allpairs_max_docs + 1).count() <= allpairs_max_docs
-    ):
-        par = df.sparkSession.sparkContext.defaultParallelism
+    if prefix_ext == "auto" and dense and p > 0 and n_docs <= _ALLPAIRS_MAX_DOCS:
         n_words = (vocab_size + 63) // 64
-        bitmaps = _doc_bitmaps(tok, gdf, id_col, vocab_size)
-        if materialize:
-            bitmaps = _persist_tracked(bitmaps)
+        bitmaps = _persist_tracked(_doc_bitmaps(sets, gdf, id_col, vocab_size))
         # the BNLJ stream side is compute-amplifying (kilobytes of
         # bitmaps fan out to n^2 pair evaluations), so pin its
-        # parallelism against AQE bytes-based coalescing -- the same
-        # adjudication as the prefix paths (SCALE.md r9/r10)
+        # parallelism against AQE bytes-based coalescing, as on the
+        # prefix plans
         left_bm = bitmaps.select(
             F.col(id_col).alias("left_id"),
             F.col("bm").alias("bm_l"),
@@ -555,17 +545,10 @@ def jaccard_similarity_join(
         )
         pairs = left_bm.join(F.broadcast(right_bm), pair_ok)
         if stats_out is not None:
-            stats_out["vocab_size"] = vocab_size
-            stats_out["use_bitmap"] = True
-            # no prefix index exists on this plan; report the plan
-            # marker instead of a misleading prefix_ext (round-12
-            # ADVICE).  The candidate count is derived ARITHMETICALLY
-            # from the per-size histogram -- the BNLJ's cheap
-            # predicate depends only on sizes and id order, so the
-            # eligible-pair count is a closed form over size
-            # multiplicities: no second O(n^2) BNLJ pass, nothing
-            # heavy persisted (round-12 ADVICE; the old stats lane ran
-            # the full quadratic join twice).
+            # no prefix index exists on this plan, so no k is reported.
+            # The BNLJ's cheap predicate depends only on sizes and id
+            # order, so the eligible-pair count is a closed form over
+            # the size histogram: no second O(n^2) pass
             stats_out["prefix_ext"] = None
             stats_out["plan"] = "bitmap_allpairs"
             hist = (
@@ -595,16 +578,6 @@ def jaccard_similarity_join(
             .select("left_id", "right_id", "inter_size", "union_size")
         )
 
-    # the document-frequency table is one row per distinct gram --
-    # bounded vocabulary -> broadcast it so attaching df to every token
-    # is map-side (gate generously; 4M rows of (gram, count) ~ 100 MB)
-    gdf_b = F.broadcast(gdf) if vocab_size <= 4_000_000 else gdf
-    ordered = (
-        tok.join(gdf_b, "g")
-        .groupBy(id_col, "sz")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("ordered"))
-    )
-
     def _prefixes(k: int) -> DataFrame:
         # plen = sz - ceil(p*sz/q) + k, with ceil done in integers
         plen = (
@@ -628,54 +601,48 @@ def jaccard_similarity_join(
             )
         )
 
-    if prefix_ext == "auto":
-        # vocab-regime gate FIRST (ported from containment_join's
-        # auto, round 11): on DENSE corpora (small vocab -- the
-        # bitmap-verify regime) every gram is common, the prefix bound
-        # is weak at every k, and k=1 keeps the positional (PPJoin)
-        # filter, which is exactly where the row-level prune earns its
-        # keep (containment measured k=1 7.3 s vs k=3 10.1 s at sf0.1,
-        # vocab ~2k; jaccard's auto paid the un-gated decision
-        # aggregate there -- 8.2 -> 9.2 s drift, round-10 verdict
-        # item 2).  Short-circuiting BEFORE the estimate means the
-        # dense path pays zero decision overhead (use_bitmap is
-        # already measured for the verify-representation choice).
-        if use_bitmap:
-            k_ext = 1
-        else:
-            # the collision mass of the 1-prefix index is
-            # sum C(df_pref, 2) over prefix postings -- the exact raw
-            # candidate count BEFORE the length/positional prunes,
-            # computable from one aggregate over the prefix index
-            # (linear, no pair blow-up)
-            if materialize:
-                ordered = _persist_tracked(ordered)
-            est_row = (
-                _prefixes(1)
-                .groupBy("g")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m"))
-                .first()
-            )
-            est_collisions = int(est_row["m"] or 0)
-            n_docs = sets.count()
-            # jump straight to k=3: once collision counting is needed
-            # at all, the marginal prefix gram costs ~8% more
-            # collision rows while thinning candidates by another
-            # ~lambda/3 (measured 3.17M -> 103k at the 50k-doc stress
-            # corpus)
-            k_ext = 3 if est_collisions > max(50_000, 20 * n_docs) else 1
-            if stats_out is not None:
-                stats_out["est_prefix_collisions"] = est_collisions
-                stats_out["n_docs"] = n_docs
-    else:
+    if prefix_ext != "auto":
         k_ext = int(prefix_ext)
+    elif dense:
+        # on a dense corpus every gram is common, the prefix bound is
+        # weak at every k, and k=1 keeps the positional filter, where
+        # the row-level prune earns its keep (containment measured k=1
+        # 7.3 s vs k=3 10.1 s at sf0.1, vocab ~2k); deciding here skips
+        # the estimate aggregate
+        k_ext = 1
+    else:
+        # the collision mass of the 1-prefix index is sum C(df_pref, 2)
+        # over prefix postings -- the exact raw candidate count BEFORE
+        # the length/positional prunes, from one aggregate over the
+        # prefix index (linear, no pair blow-up)
+        ordered = _persist_tracked(ordered)
+        est_row = (
+            _prefixes(1)
+            .groupBy("g")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m"))
+            .first()
+        )
+        est_collisions = int(est_row["m"] or 0)
+        # jump straight to k=3: once collision counting is needed at
+        # all, the marginal prefix gram costs ~8% more collision rows
+        # while thinning candidates by another ~lambda/3 (measured
+        # 3.17M -> 103k at the 50k-doc stress corpus)
+        k_ext = 3 if est_collisions > max(50_000, 20 * n_docs) else 1
+        if stats_out is not None:
+            stats_out["est_prefix_collisions"] = est_collisions
     if stats_out is not None:
         stats_out["prefix_ext"] = k_ext
 
-    prefixes = _prefixes(k_ext)
-    # both branches below bind l/r from a repartition-pinned index --
-    # never from the raw prefixes frame
+    # the prefix self-join is COMPUTE-AMPLIFYING (a byte-small posting
+    # index fans out to millions of collision rows), so AQE's
+    # bytes-based coalescing would funnel it onto a handful of tasks (a
+    # stage census measured 13.9 s of collision work on 5 of 32 cores at
+    # sf0.1): an explicit COUNT repartition on the join key, persisted,
+    # feeds both sides from one shuffle
+    pinned = _persist_tracked(_prefixes(k_ext).repartition(par, "g"))
+    l = pinned.hint("shuffle_hash").alias("l")
+    r = pinned.alias("r")
     lid, rid = f"l.{id_col}", f"r.{id_col}"
     # pair-level length prune (any true pair satisfies it, so it is
     # safe for BOTH the k=1 row path and the k>=2 counting path)
@@ -684,20 +651,6 @@ def jaccard_similarity_join(
         >= F.lit(p) * F.greatest(F.col("l.sz"), F.col("r.sz"))
     )
     if k_ext <= 1:
-        # the prefix self-join is COMPUTE-AMPLIFYING (a byte-small
-        # posting index fans out to millions of collision rows), so
-        # AQE's bytes-based coalescing funnels it onto a handful of
-        # tasks (round-11 census: 13.9 s of collision work on 5 of 32
-        # cores at sf0.1 once the dense-vocab gate restored this
-        # path).  Same pin as the k>=2 branch: explicit COUNT
-        # repartition on the join key feeding both sides from one
-        # shuffle, persist gated on the caller's no-caching contract.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        pinned = prefixes.repartition(par, "g")
-        if materialize:
-            pinned = _persist_tracked(pinned)
-        l = pinned.hint("shuffle_hash").alias("l")
-        r = pinned.alias("r")
         # required overlap for J >= p/q: alpha = ceil(p*(sx+sy)/(p+q));
         # positional cap: 1 + min(sx - i, sy - j) >= alpha, integer form
         pos_cap = F.lit(1) + F.least(
@@ -713,48 +666,24 @@ def jaccard_similarity_join(
                 >= F.lit(p) * (F.col("l.sz") + F.col("r.sz"))
             ),
         ).select(F.col(lid).alias("left_id"), F.col(rid).alias("right_id"))
-
-        # candidate dedup is shared by both verify paths; when the
-        # caller asked for stats, persist+count here so the
-        # observability action and the verify stage share one
-        # candidate materialization
+        # with stats asked for, persist+count here so the observability
+        # action and the verify share one candidate materialization
         if stats_out is not None:
-            stats_out["vocab_size"] = vocab_size
-            stats_out["use_bitmap"] = use_bitmap
             raw_cands = _persist_tracked(raw_cands)
             stats_out["n_candidates_raw"] = raw_cands.count()
-        # the verify below is broadcast-join + per-pair intersect, so
-        # it executes IN the candidates' partitioning -- and AQE
+        # the verify executes IN the candidates' partitioning, and AQE
         # coalesces the distinct's exchange to a handful of tasks
-        # because the (left_id, right_id) pairs are byte-small,
-        # starving the compute-amplifying verify (round-11 census:
-        # 15.2 s of bitmap ANDs on 5 of 32 cores once the dense-vocab
-        # gate restored this path at sf0.1).  Explicit COUNT
-        # repartition pins it; same adjudication as containment's k=1
-        # path (round 10) and the k>=2 paths (round 9).
+        # because the (left_id, right_id) pairs are byte-small, starving
+        # the compute-amplifying verify (a census at sf0.1 measured 15.2
+        # s of verify on 5 of 32 cores): the COUNT repartition pins it
         cands = raw_cands.distinct().repartition(par)
         if stats_out is not None:
             cands = _persist_tracked(cands)
             stats_out["n_candidates_distinct"] = cands.count()
     else:
         # k-extended prefix: count collisions per pair and require
-        # >= least(k, alpha).  alpha = ceil(p*(sx+sy)/(p+q)) in integer
-        # form; the positional filter is row-level and must NOT run
-        # here (it would drop rows that contribute to the count).  The
-        # groupBy both counts and dedups, so no separate distinct.
-        # Explicit partition COUNTS pin the amplifying stages'
-        # parallelism against AQE's bytes-based coalescing (see
-        # docstring); the persisted repartitioned index feeds both
-        # join sides from one shuffle.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        prefixes = prefixes.repartition(par, "g")
-        # the repartitioned index feeds BOTH join sides; the persist
-        # (one shuffle instead of two index builds) is gated on the
-        # caller's no-caching contract like sets/ordered (round-10
-        # ADVICE)
-        if materialize:
-            prefixes = _persist_tracked(prefixes)
-        l, r = prefixes.hint("shuffle_hash").alias("l"), prefixes.alias("r")
+        # >= least(k, alpha), alpha = ceil(p*(sx+sy)/(p+q)) in integer
+        # form.  The groupBy both counts and dedups, so no distinct
         alpha = F.floor(
             (
                 F.lit(p) * (F.col("_szl") + F.col("_szr"))
@@ -780,69 +709,14 @@ def jaccard_similarity_join(
             .select("left_id", "right_id")
             .repartition(par)
         )
-        # distributed verify regardless of broadcast_verify (measured:
-        # the two ~100 MB broadcast builds cost more than shuffling
-        # the thinned candidate pairs)
-        broadcast_verify = False
         if stats_out is not None:
-            stats_out["vocab_size"] = vocab_size
-            stats_out["use_bitmap"] = use_bitmap
             cands = _persist_tracked(cands)
             stats_out["n_candidates_distinct"] = cands.count()
             stats_out["n_candidates_raw"] = stats_out["n_candidates_distinct"]
 
-    # verify: clusters make candidate pairs quadratic while gram sets
-    # stay linear, so when the per-doc set table fits in memory,
-    # broadcast_verify=True joins the sets map-side instead of
-    # shuffling per candidate pair; leave False at corpus sizes where
-    # the set table itself is distributed-only
-    hint = F.broadcast if broadcast_verify else (lambda x: x)
-
-    if use_bitmap:
-        # dense corpus: prefix filtering is weak, so candidates are the
-        # cost center -- dedup them first, then verify each surviving
-        # pair with a few long ANDs instead of a per-pair hash set
-        bitmaps = _doc_bitmaps(tok, gdf, id_col, vocab_size)
-        if materialize:
-            bitmaps = _persist_tracked(bitmaps)
-        left_sets = bitmaps.select(
-            F.col(id_col).alias("left_id"),
-            F.col("bm").alias("bm_l"),
-            F.col("sz").alias("sz_l"),
-        )
-        right_sets = bitmaps.select(
-            F.col(id_col).alias("right_id"),
-            F.col("bm").alias("bm_r"),
-            F.col("sz").alias("sz_r"),
-        )
-        inter = _bitmap_inter("bm_l", "bm_r", (vocab_size + 63) // 64)
-        return (
-            cands
-            .join(hint(left_sets), "left_id")
-            .join(hint(right_sets), "right_id")
-            .withColumn("inter_size", inter)
-            .withColumn(
-                "union_size", F.col("sz_l") + F.col("sz_r") - F.col("inter_size")
-            )
-            .where(F.lit(q) * F.col("inter_size") >= F.lit(p) * F.col("union_size"))
-            .select("left_id", "right_id", "inter_size", "union_size")
-        )
-
-    # large vocabulary: per-pair verify is a hash-set intersect, on the
-    # deduped candidates (cands above)
-    left_sets = sets_hashed.select(
-        F.col(id_col).alias("left_id"),
-        F.col("hg").alias("g_l"),
-        F.col("sz").alias("sz_l"),
-    )
-    right_sets = sets_hashed.select(
-        F.col(id_col).alias("right_id"),
-        F.col("hg").alias("g_r"),
-        F.col("sz").alias("sz_r"),
-    )
     return (
-        cands.join(hint(left_sets), "left_id")
-        .join(hint(right_sets), "right_id")
+        cands.join(_hashed_sets(sets, id_col, "left"), "left_id")
+        .join(_hashed_sets(sets, id_col, "right"), "right_id")
         .withColumn("inter_size", F.size(F.array_intersect("g_l", "g_r")))
         .withColumn(
             "union_size", F.col("sz_l") + F.col("sz_r") - F.col("inter_size")
@@ -859,12 +733,8 @@ def containment_join(
     shingle_n: int = 5,
     threshold: float = 0.9,
     min_inner_size: int = 8,
-    materialize: bool = True,
-    broadcast_verify: bool = False,
-    bitmap_max_vocab: int = 4096,
     stats_out: dict | None = None,
     prefix_ext: int | str = "auto",
-    allpairs_max_docs: int = 16384,
 ) -> DataFrame:
     """EXACT asymmetric set-CONTAINMENT self-join: pairs where the
     smaller document's n-gram set is mostly inside the larger's,
@@ -878,154 +748,74 @@ def containment_join(
     dedup pipelines run both (near-dup = Jaccard, quote/subset-dup =
     containment).
 
-    Candidate generation adapts the AllPairs prefix bound to the
-    asymmetric predicate: with required overlap ``α = ceil(t*|A|)``,
-    any qualifying pair must collide between A's df-rarest PREFIX of
-    length ``|A| - α + 1`` and B's FULL gram list (if no prefix gram
-    of A is in B, the intersection fits inside A's last ``α - 1``
-    grams < α).  Only the small side is prefix-indexed -- the big
-    side has no size-ratio prune under containment, so it contributes
-    every gram, positioned, and the PPJoin positional cap
-    ``1 + min(|A|-i, |B|-j) >= α`` prunes pre-shuffle.  Prefix grams
-    are globally rarest, so the full-side posting lists they probe
-    are short by construction.
-
-    ``prefix_ext``: the k-extended prefix scheme, carried over from
-    :func:`jaccard_similarity_join` after the round-10 stress census
-    measured SUPER-LINEAR candidate growth on the synthetic corpus
-    (1,663 -> 222,841 distinct candidates for 10x docs at t=0.9 --
-    the asymmetric predicate has no length-ratio prune, so rare-gram
-    document frequency governs growth).  With k >= 2 the inner side
-    indexes its ``|A| - α + k`` rarest grams and a pair is a
-    candidate only if it collides on >= least(k, α) of them against
-    B's FULL list.  Soundness is the ONE-SIDED pigeonhole: if
-    ``|A ∩ B| >= α`` then for j = 1..min(k, α) the j-th smallest
-    shared gram (global df order) sits within A's first
-    ``|A| - α + j <= |A| - α + k`` grams, and B's side is its full
-    list, so all min(k, α) collisions are observed -- lossless, and
-    property-tested against brute force including tiny-set α < k
-    edges.  The row-level positional cap applies only at k=1
-    (dropping individual collision rows would undercount the k >= 2
-    collision requirement).  ``"auto"`` (the default) estimates the
-    1-prefix candidate mass as ``Σ_g pref_n(g) · df(g)`` -- one
-    aggregate over the prefix index joined to the broadcast df table
-    -- and jumps to k=3 when it exceeds ``max(50_000, 20 · n_docs)``
-    AND the corpus is in the sparse (non-bitmap) vocab regime: on
-    dense corpora every gram is common, the prefix bound is weak at
-    every k, and the positional cap + bitmap verify keep k=1 the
-    cheap plan (measured sf0.1, vocab ~2k: 6.8 s vs 10.1 s), while on
-    sparse corpora the extension retires the quadratic candidate term
-    (measured stress corpus, vocab 595k: 222,841 -> 16,892 distinct
-    candidates for 10x docs at wall parity).  The estimate and
-    decision land in ``stats_out``.
-
-    All threshold arithmetic is integer (``threshold`` as p/q), the
-    same float-ceil-off-by-one discipline as
-    :func:`jaccard_similarity_join`.  ``min_inner_size`` floors the
-    inner set size: a document shorter than ``shingle_n`` has one
-    gram and is trivially "contained" everywhere; mirror the floor in
-    any oracle.
-
     Output: (inner_id, outer_id, inter_size, inner_size) -- integers.
-    Exactness: the bitmap verify path (measured vocab <=
-    ``bitmap_max_vocab``) intersects over exact per-vocab bit
-    positions and matches a naive all-pairs SQL oracle bit-for-bit.
-    The large-vocab path intersects xxhash64-hashed grams, so it is
-    exact modulo 64-bit hash collisions between distinct grams of one
-    document pair (probability ~|doc|^2 / 2^64 per pair; at a billion
-    docs of 10k grams each, ~1e-5 affected pairs corpus-wide).  Claim
-    bit-for-bit parity only under the bitmap path, or intersect raw
-    gram strings (3-4x the verify bytes) where absolute exactness is
-    required at large vocab.
+    ``min_inner_size`` floors the inner set size: a document shorter
+    than ``shingle_n`` has one gram and is trivially "contained"
+    everywhere; mirror the floor in any oracle.  Threshold arithmetic
+    is integer, as in :func:`jaccard_similarity_join`.
 
-    ``allpairs_max_docs``: same dense-regime all-pairs bypass as
-    :func:`jaccard_similarity_join` (round 12) -- under the asymmetric
-    predicate the prefix index prunes even less, so the broadcast
-    nested-loop plan over bitmaps wins by a wider margin.  0 disables.
+    The three plans of :func:`jaccard_similarity_join`, adapted to the
+    asymmetric predicate:
 
-    Dense corpora hit prefix filtering even harder here than in the
-    symmetric join (no length-ratio prune at all), so the small-vocab
-    bitmap verify of :func:`jaccard_similarity_join` matters more:
-    when the measured gram vocabulary is ``<= bitmap_max_vocab`` each
-    doc's gram set becomes a ``vocab/64``-word bitmap and the exact
-    intersection is a few long ANDs per candidate instead of a
-    per-pair hash-set intersect over ~|doc| element arrays -- measured
-    2.6x end-to-end on the sf0.1 synthetic corpus (2k distinct
-    5-grams, ~6M candidates).
+    * dense all-pairs (``prefix_ext="auto"``, vocabulary
+      ``<= _BITMAP_MAX_VOCAB``, ``<= _ALLPAIRS_MAX_DOCS`` docs,
+      threshold > 0): with no length-ratio prune the prefix index
+      prunes even less here (~6M candidates of 12.5M pairs at sf0.1,
+      vocab ~2k), so a broadcast nested-loop join over the bitmaps wins
+      by a wider margin; a 256-bit signature pre-filter rejects most
+      pairs before the exact fold.
+    * prefix k=1: with required overlap ``α = ceil(t*|A|)``, any
+      qualifying pair collides between A's df-rarest PREFIX of length
+      ``|A| - α + 1`` and B's FULL gram list (if no prefix gram of A is
+      in B, the intersection fits inside A's last ``α - 1`` grams).
+      Only the small side is prefix-indexed -- the big side has no
+      size-ratio prune under containment, so it contributes every gram,
+      positioned, and the PPJoin positional cap
+      ``1 + min(|A|-i, |B|-j) >= α`` prunes pre-shuffle.
+    * prefix k>=2: A indexes its ``|A| - α + k`` rarest grams and a
+      pair is a candidate only if it collides on >= least(k, α) of them
+      against B's FULL list.  Soundness is the ONE-SIDED pigeonhole: if
+      ``|A ∩ B| >= α`` then for j = 1..min(k, α) the j-th smallest
+      shared gram sits within A's first ``|A| - α + j`` grams, and B's
+      side is its full list, so all min(k, α) collisions are observed.
+      The positional cap applies only at k=1.
+
+    Both prefix plans verify on xxhash64-hashed grams (exact modulo
+    64-bit collisions, see :func:`_hashed_sets`); the dense plan
+    intersects exact per-vocab bit positions.
+
+    ``prefix_ext``: ``"auto"`` (the default) takes the dense plan where
+    it applies and k=1 on any other dense corpus (the positional cap
+    makes k=1 the cheap plan there: sf0.1, vocab ~2k, 6.8 s vs k=3
+    10.1 s).  On a sparse corpus it estimates the 1-prefix candidate
+    mass ``Σ_g pref_n(g) · df(g)`` in one aggregate and jumps to k=3
+    when it exceeds ``max(50_000, 20 · n_docs)``: the asymmetric
+    predicate has no length-ratio prune, so rare-gram document
+    frequency governs candidate growth (stress corpus, vocab 595k:
+    1,663 -> 222,841 distinct candidates for 10x docs at k=1, 16,892 at
+    k=3 at wall parity).  An integer ``prefix_ext`` forces that prefix
+    plan.
+
+    ``stats_out``: the same census as :func:`jaccard_similarity_join`,
+    without n_candidates_raw on the prefix plans.
     """
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
-    p, q = frac.numerator, frac.denominator
-    sets = (
-        _spread(df)
-        .select(F.col(id_col), normalized_text(text_col).alias("norm"))
-        .select(F.col(id_col), shingle_strings("norm", shingle_n).alias("grams"))
-        .withColumn("sz", F.size("grams"))
+    p, q, sets, gdf, ordered, vocab_size, n_docs = _gram_tables(
+        df, text_col, id_col, shingle_n, threshold, min_inner_size
     )
-    if materialize:
-        # read by the df-count pass, the prefix build, the full-side
-        # index, and both verify sides
-        sets = _persist_tracked(sets)
-    # min-size filter AFTER the persist, never before: pushed below the
-    # projection, the predicate re-evaluates the shingle chain with the
-    # normalization regex re-run per array element inside the transform
-    # lambda (no subexpression elimination in filter context) -- measured
-    # 0.3 s -> 15 s on the sf0.1 corpus.  Against the materialized frame
-    # it reads cached grams.
-    sets = sets.where(F.col("sz") >= min_inner_size)
-    sets_hashed = sets.withColumn(
-        "hg", F.transform("grams", lambda g: F.xxhash64(g))
-    )
+    dense = vocab_size <= _BITMAP_MAX_VOCAB
+    if stats_out is not None:
+        stats_out.update(vocab_size=vocab_size, use_bitmap=dense, n_docs=n_docs)
+    par = df.sparkSession.sparkContext.defaultParallelism
 
-    tok = sets.select(id_col, "sz", F.explode("grams").alias("g"))
-    gdf = tok.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    if materialize:
-        # same rationale as the symmetric join: the regime count, the
-        # df-order join / bitmap vocab index, and the broadcast build
-        # each re-run the explode+groupBy without this persist
-        gdf = _persist_tracked(gdf)
-    vocab_size = gdf.count()
-    use_bitmap = vocab_size <= bitmap_max_vocab
-
-    # Dense-regime ALL-PAIRS plan (round 12): containment hits weak
-    # prefix filtering even harder than symmetric Jaccard (no
-    # length-ratio prune exists for this predicate -- measured ~6M
-    # candidates of 12.5M possible at sf0.1, vocab ~2k), so in the
-    # bitmap-vocab regime the positioned prefix/full-index join +
-    # per-candidate shuffle + distinct cost more than they prune.
-    # Same construction and gating rationale as the symmetric join's
-    # branch (see jaccard_similarity_join): broadcast the fixed-width
-    # bitmap table, evaluate the cheap size-order predicate in a
-    # broadcast nested-loop join, verify survivors exactly.  Output
-    # provably identical (the BNLJ pair superset contains every
-    # size-ordered pair; the verify predicate is the exact one).
-    if (
-        prefix_ext == "auto"
-        and use_bitmap
-        and materialize
-        and allpairs_max_docs > 0
-        # identity with the prefix plan needs t > 0: at t=0 the BNLJ
-        # superset includes zero-intersection pairs the prefix plan
-        # (>= 1 shared gram) can never emit (round-12 ADVICE)
-        and p > 0
-        # capped count: the fall-back decision costs
-        # O(allpairs_max_docs) rows, not a full corpus pass
-        # (round-12 verdict item 3)
-        and sets.limit(allpairs_max_docs + 1).count() <= allpairs_max_docs
-    ):
-        par = df.sparkSession.sparkContext.defaultParallelism
+    if prefix_ext == "auto" and dense and p > 0 and n_docs <= _ALLPAIRS_MAX_DOCS:
         n_words = (vocab_size + 63) // 64
-        bitmaps = _doc_bitmaps(tok, gdf, id_col, vocab_size)
-        if materialize:
-            bitmaps = _persist_tracked(bitmaps)
+        bitmaps = _persist_tracked(_doc_bitmaps(sets, gdf, id_col, vocab_size))
 
-        # 256-bit residue SIGNATURE pre-filter (round 13, round-12
-        # verdict item 4): under containment there is no length-ratio
-        # prune, so every size-ordered pair reached the full
+        # 256-bit residue SIGNATURE pre-filter: with no length-ratio
+        # prune, every size-ordered pair would reach the full
         # n_words-word exact fold.  Fold each doc's bitmap into 4
-        # signature words (word j ORs into signature word j mod 4 --
-        # a fixed partition of the vocab into <= 256 groups).  For any
+        # signature words (word j ORs into signature word j mod 4 -- a
+        # fixed partition of the vocab into <= 256 groups).  For any
         # group where the inner doc has a gram and the outer has NONE,
         # at least one inner gram is missing from the outer, so
         # ``popcount(sig_i & ~sig_o)`` LOWER-bounds the missing count
@@ -1033,7 +823,7 @@ def containment_join(
         # rejecting pairs whose upper bound is below the required
         # overlap is exact-safe.  Cost: 4 scalar AND/NOT/popcounts per
         # pair instead of the 32-word array fold; measured selective
-        # on this corpus (docs ~210 grams of vocab 2041 -> expected
+        # on the sf0.1 corpus (docs ~210 grams of vocab 2041 -> expected
         # missing-bound ~63 vs reject threshold ~21 at t=0.9).
         n_sig = min(4, n_words)
 
@@ -1083,21 +873,16 @@ def containment_join(
         )
         pairs = inner_bm.join(F.broadcast(outer_bm), pair_ok).where(sig_ok)
         if stats_out is not None:
-            stats_out["vocab_size"] = vocab_size
-            stats_out["use_bitmap"] = True
-            # no prefix index on this plan (round-12 ADVICE); the
-            # candidate count is exact arithmetic: every unordered
-            # doc pair has exactly one valid size-order orientation,
-            # so the BNLJ EVALUATES C(n, 2) pair conditions -- the
-            # signature filter then thins what materializes, but the
-            # evaluated-superset count is the diagnostic the plan
-            # chooser needs (and costs no second O(n^2) pass)
+            # no prefix index on this plan, so no k is reported.  Every
+            # unordered doc pair has exactly one valid size-order
+            # orientation, so the BNLJ EVALUATES C(n, 2) pair conditions
+            # -- the signature filter then thins what materializes, but
+            # the evaluated-superset count is the diagnostic (and costs
+            # no second O(n^2) pass)
             stats_out["prefix_ext"] = None
             stats_out["plan"] = "bitmap_allpairs"
-            n_docs_stats = sets.count()
-            n_pairs = n_docs_stats * (n_docs_stats - 1) // 2
-            stats_out["n_candidates_raw"] = n_pairs
-            stats_out["n_candidates_distinct"] = n_pairs
+            stats_out["n_candidates_raw"] = n_docs * (n_docs - 1) // 2
+            stats_out["n_candidates_distinct"] = stats_out["n_candidates_raw"]
         inter = _bitmap_inter("bm_i", "bm_o", n_words)
         return (
             pairs.withColumn("inter_size", inter)
@@ -1112,27 +897,19 @@ def containment_join(
             )
         )
 
-    gdf_b = F.broadcast(gdf)
     # every doc's grams ordered by global df (rarest first), positioned
-    ordered = (
-        tok.join(gdf_b, "g")
-        .groupBy(id_col, "sz")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("ordered"))
-        .select(
+    ordered = _persist_tracked(
+        ordered.select(
             id_col,
             "sz",
             F.posexplode("ordered").alias("pos0", "pg"),
-        )
-        .select(
+        ).select(
             id_col,
             "sz",
             (F.col("pos0") + 1).alias("pos"),
             F.col("pg.g").alias("g"),
         )
     )
-    if materialize:
-        ordered = _persist_tracked(ordered)
-    par = df.sparkSession.sparkContext.defaultParallelism
 
     def _plen(k: int) -> F.Column:
         # inner prefix: plen = sz - α + k with α = ceil(p*sz/q), ceil
@@ -1143,46 +920,32 @@ def containment_join(
             + k
         )
 
-    if prefix_ext == "auto":
-        # vocab-regime gate first (measured, round 10): on DENSE
-        # corpora (small vocab -- the bitmap-verify regime) every gram
-        # is common, the prefix bound is weak at every k, and the
-        # positional cap + bitmap verify make the k=1 plan the cheap
-        # one (sf0.1, vocab ~2k: k=1 7.3 s vs k=3 10.1 s).  The gate
-        # short-circuits BEFORE the estimate aggregate so the dense
-        # path pays zero decision overhead (use_bitmap is already
-        # measured for the verify-representation choice).
-        if use_bitmap:
-            k_ext = 1
-        else:
-            # sparse regime: rare-gram df governs candidate growth and
-            # the k-extension retires the quadratic term (stress
-            # corpus, vocab 595k: candidates 222,841 -> 16,892 for 10x
-            # docs at wall parity).  1-prefix candidate mass: each
-            # prefix posting of gram g can collide with every
-            # full-list posting of g, so Σ pref_n(g) · df(g)
-            # upper-bounds the raw candidates (includes self and
-            # ordering-pruned pairs -- fine for a plan decision).  One
-            # aggregate over the prefix index joined to the broadcast
-            # df table; linear, no pair blow-up.
-            est_row = (
-                ordered.where(F.col("pos") <= _plen(1))
-                .groupBy("g")
-                .agg(F.count(F.lit(1)).alias("_pn"))
-                .join(gdf_b, "g")
-                .agg(F.sum(F.col("_pn") * F.col("df")).alias("m"))
-                .first()
-            )
-            est_collisions = int(est_row["m"] or 0)
-            n_docs = sets.count()
-            k_ext = (
-                3 if est_collisions > max(50_000, 20 * n_docs) else 1
-            )
-            if stats_out is not None:
-                stats_out["est_prefix_collisions"] = est_collisions
-                stats_out["n_docs"] = n_docs
-    else:
+    if prefix_ext != "auto":
         k_ext = int(prefix_ext)
+    elif dense:
+        # dense corpus: every gram is common, the prefix bound is weak at
+        # every k, and the positional cap makes k=1 the cheap plan;
+        # deciding here skips the estimate aggregate
+        k_ext = 1
+    else:
+        # 1-prefix candidate mass: each prefix posting of gram g can
+        # collide with every full-list posting of g, so Σ pref_n(g) ·
+        # df(g) upper-bounds the raw candidates (self and
+        # ordering-pruned pairs included -- fine for a plan decision).
+        # One aggregate over the prefix index joined to the df table;
+        # linear, no pair blow-up
+        est_row = (
+            ordered.where(F.col("pos") <= _plen(1))
+            .groupBy("g")
+            .agg(F.count(F.lit(1)).alias("_pn"))
+            .join(gdf, "g")
+            .agg(F.sum(F.col("_pn") * F.col("df")).alias("m"))
+            .first()
+        )
+        est_collisions = int(est_row["m"] or 0)
+        k_ext = 3 if est_collisions > max(50_000, 20 * n_docs) else 1
+        if stats_out is not None:
+            stats_out["est_prefix_collisions"] = est_collisions
     if stats_out is not None:
         stats_out["prefix_ext"] = k_ext
 
@@ -1208,30 +971,21 @@ def containment_join(
             )
             .select(F.col(lid).alias("inner_id"), F.col(rid).alias("outer_id"))
             .distinct()
-            # the verify below is broadcast-join + per-candidate
-            # intersect, so it executes IN the candidates'
-            # partitioning -- and AQE coalesces the distinct's
-            # exchange to 1-2 tasks because the (inner_id, outer_id)
-            # pairs are byte-small, starving the compute-amplifying
-            # intersect (round-10 stage census: verify ran on 2 of 32
-            # cores).  Explicit COUNT repartition pins it; same
-            # adjudication as the exact-Jaccard verify (SCALE.md r9).
+            # the verify executes IN the candidates' partitioning, and
+            # AQE coalesces the distinct's exchange to 1-2 tasks because
+            # the (inner_id, outer_id) pairs are byte-small, starving
+            # the compute-amplifying intersect (a stage census measured
+            # the verify on 2 of 32 cores): the COUNT repartition pins it
             .repartition(par)
         )
     else:
         # k-extended prefix: count collisions per (inner, outer) pair
         # against the FULL outer list and require >= least(k, α) with
-        # α = ceil(p*szA/q) in integers.  The positional filter is
-        # row-level and must NOT run here.  The groupBy both counts
-        # and dedups; explicit COUNT repartitions pin the amplifying
-        # collision join against AQE's bytes-based coalescing (the
-        # jaccard k-ext adjudication, SCALE.md r9/r10).
-        # prefix persist gated on the caller's no-caching contract
-        # like sets/ordered (round-10 ADVICE); the COUNT repartition
-        # (the parallelism pin) applies either way
-        l = prefixes.repartition(par, "g")
-        if materialize:
-            l = _persist_tracked(l)
+        # α = ceil(p*szA/q) in integers.  The groupBy both counts and
+        # dedups; the persisted COUNT repartition of the prefix index
+        # pins the amplifying collision join against AQE's bytes-based
+        # coalescing, as in the symmetric join
+        l = _persist_tracked(prefixes.repartition(par, "g"))
         l = l.hint("shuffle_hash").alias("l")
         alpha = F.floor(
             (F.lit(p) * F.col("_szi") + F.lit(q - 1)) / F.lit(q)
@@ -1249,60 +1003,16 @@ def containment_join(
             .repartition(par)
         )
 
-    # candidate census (same contract as jaccard_similarity_join's
-    # stats_out): the super-linear risk under containment is candidate
-    # growth governed by rare-gram document frequency -- no length-
-    # ratio prune exists for this predicate -- so the stress harness
-    # records it next to the timing.  Persist+count here is shared
-    # with the verify stage below.
+    # candidate census: with no length-ratio prune, candidate growth is
+    # governed by rare-gram document frequency; the persist is shared
+    # with the verify below
     if stats_out is not None:
-        stats_out["vocab_size"] = vocab_size
-        stats_out["use_bitmap"] = use_bitmap
         cands = _persist_tracked(cands)
         stats_out["n_candidates_distinct"] = cands.count()
 
-    hint = F.broadcast if broadcast_verify else (lambda x: x)
-
-    if use_bitmap:
-        # dense corpus: same fixed-width bitmap representation as the
-        # symmetric join -- exact intersection via AND + popcount, no
-        # gram hashing at all (collision-free)
-        bitmaps = _doc_bitmaps(tok, gdf, id_col, vocab_size)
-        if materialize:
-            bitmaps = _persist_tracked(bitmaps)
-        inner_sets = bitmaps.select(
-            F.col(id_col).alias("inner_id"),
-            F.col("bm").alias("bm_i"),
-            F.col("sz").alias("sz_i"),
-        )
-        outer_sets = bitmaps.select(
-            F.col(id_col).alias("outer_id"), F.col("bm").alias("bm_o")
-        )
-        inter = _bitmap_inter("bm_i", "bm_o", (vocab_size + 63) // 64)
-        return (
-            cands.join(hint(inner_sets), "inner_id")
-            .join(hint(outer_sets), "outer_id")
-            .withColumn("inter_size", inter)
-            .where(F.lit(q) * F.col("inter_size") >= F.lit(p) * F.col("sz_i"))
-            .select(
-                "inner_id",
-                "outer_id",
-                F.col("inter_size").cast("int").alias("inter_size"),
-                F.col("sz_i").cast("int").alias("inner_size"),
-            )
-        )
-
-    inner_sets = sets_hashed.select(
-        F.col(id_col).alias("inner_id"),
-        F.col("hg").alias("g_i"),
-        F.col("sz").alias("sz_i"),
-    )
-    outer_sets = sets_hashed.select(
-        F.col(id_col).alias("outer_id"), F.col("hg").alias("g_o")
-    )
     return (
-        cands.join(hint(inner_sets), "inner_id")
-        .join(hint(outer_sets), "outer_id")
+        cands.join(_hashed_sets(sets, id_col, "inner"), "inner_id")
+        .join(_hashed_sets(sets, id_col, "outer"), "outer_id")
         .withColumn("inter_size", F.size(F.array_intersect("g_i", "g_o")))
         .where(F.lit(q) * F.col("inter_size") >= F.lit(p) * F.col("sz_i"))
         .select(
@@ -1887,25 +1597,22 @@ def _band_keys(
     num_hashes: int,
     bands: int,
     shingle_n: int,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """(banded, shingle_df) banded MinHash keys -- the shared LSH front
     end of the self-join (minhash_lsh_candidates) and the incremental
     store admission (incremental_minhash_dedup).  ``banded`` is
     (id, band, bkey); ``shingle_df`` is (id, sh) for verify-stage reuse.
 
-    ``materialize`` stages the shingle table: Catalyst's CollapseProject
-    would otherwise inline the regex+substring shingle chain into all
+    The shingle table is persisted: Catalyst's CollapseProject would
+    otherwise inline the regex+substring shingle chain into all
     ``num_hashes`` permutation expressions (64x recompute per doc --
     measured 102.7s collapsed vs ~8s staged at sf0.1)."""
     rows_per_band = num_hashes // bands
-    sh_df = (
+    sh_df = _persist_tracked(
         _spread(df)
         .select(F.col(id_col), normalized_text(text_col).alias("norm"))
         .select(F.col(id_col), shingles("norm", shingle_n).alias("sh"))
     )
-    if materialize:
-        sh_df = _persist_tracked(sh_df)
     sig = sh_df.select(
         F.col(id_col),
         minhash_signature(F.col("sh"), num_hashes).alias("sig"),
@@ -2058,7 +1765,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    materialize: bool = True,
     return_shingles: bool = False,
 ):
     """Candidate near-duplicate pairs via banded MinHash-LSH.
@@ -2078,14 +1784,12 @@ def minhash_lsh_candidates(
     # which owns the staged-materialization rationale (CollapseProject
     # 64x-recompute; measured 102.7s collapsed -> ~8s staged at sf0.1)
     banded, sh_df = _band_keys(
-        df, text_col, id_col, num_hashes, bands, shingle_n,
-        materialize=materialize,
+        df, text_col, id_col, num_hashes, bands, shingle_n
     )
-    if materialize:
-        # both sides of the self-join read this tiny table (n_docs x
-        # bands rows of 3 longs); persisting stops the whole signature
-        # pipeline from running twice
-        banded = _persist_tracked(banded)
+    # both sides of the self-join read this tiny table (n_docs x bands
+    # rows of 3 longs); persisting stops the whole signature pipeline
+    # from running twice
+    banded = _persist_tracked(banded)
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -2225,7 +1929,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     prefix_bits: int = 16,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash with prefix bucketing.
 
@@ -2255,9 +1958,8 @@ def simhash_pairs(
             )
         ).alias("bb"),
     ).select(id_col, "sh", "bb.block", "bb.bkey")
-    if materialize:
-        # self-join: persist so the pandas-UDF simhash runs once per doc
-        blocks = _persist_tracked(blocks)
+    # self-join: persist so the pandas-UDF simhash runs once per doc
+    blocks = _persist_tracked(blocks)
 
     l, r = blocks.alias("l"), blocks.alias("r")
     return (

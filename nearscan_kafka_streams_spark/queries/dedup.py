@@ -55,10 +55,11 @@ register(dedup_minhash_lsh)
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT trigram-Jaccard near-dup pairs (J >= 0.8, the production
-    near-dup setting) via the prefix-filtered set-similarity self-join
-    (AllPairs) -- exact, so the naive all-pairs DuckDB oracle
-    hash-matches; candidates come from the rarest-gram prefix inverted
-    index (20% of each doc's grams at t=0.8), never all pairs.
+    near-dup setting) via the exact set-similarity self-join, so the
+    naive all-pairs DuckDB oracle hash-matches.  On a sparse vocabulary
+    candidates come from the rarest-gram prefix inverted index (20% of
+    each doc's grams at t=0.8); a small dense corpus (the testdata
+    documents) takes the bitmap all-pairs plan.
     (The probabilistic LSH-then-verify composition stays available as
     minhash_lsh_candidates + ngram_jaccard_pairs; see dedup_minhash_lsh
     and tests/test_dedup_family.py.)"""
@@ -71,10 +72,11 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard misses (a short doc verbatim inside a long one has J ~
     |A|/|B| -> 0 but containment ~1).  Engine: small-side-only prefix
     filtering against a positioned full-gram index (AllPairs bound
-    adapted to the asymmetric predicate) -- exact, so the naive
-    all-pairs DuckDB oracle hash-matches."""
+    adapted to the asymmetric predicate), or the bitmap all-pairs plan
+    on a small dense corpus -- exact either way, so the naive all-pairs
+    DuckDB oracle hash-matches."""
     d = _t(spark, sf_dir, "documents")
-    return containment_join(d, threshold=0.9, broadcast_verify=True)
+    return containment_join(d, threshold=0.9)
 
 
 NGRAM_CONTAINMENT_SQL = r"""
@@ -131,7 +133,7 @@ def jaccard_edges_frame(
 ) -> DataFrame:
     """The shared Jaccard>=t edge frame the whole cluster family
     composes over -- exposed so pipelines (and bench.py) can stage it
-    ONCE (``.persist()`` + materialize) and hand it to
+    ONCE (``.persist()`` + an action) and hand it to
     ``dedup_clusters`` / ``dedup_clusters_star`` /
     ``dedup_cluster_census`` via their ``edges=`` parameter instead of
     re-running the AllPairs self-join per consumer.  Identical plan to
@@ -139,9 +141,7 @@ def jaccard_edges_frame(
     2-arg default path still computes independently, so the driver's
     per-query verification never sees shared state."""
     d = _t(spark, sf_dir, "documents")
-    return jaccard_similarity_join(
-        d, threshold=threshold, broadcast_verify=True
-    )
+    return jaccard_similarity_join(d, threshold=threshold)
 
 
 def dedup_clusters(

@@ -706,7 +706,6 @@ def corpus_clean_pipeline(
         edges = jaccard_similarity_join(
             survivors.select("doc_id", "text").repartition(tgt),
             threshold=0.8,
-            broadcast_verify=True,
         )
     comps = connected_components(edges)
     non_reps = comps.where(F.col("component") != F.col("node")).select(

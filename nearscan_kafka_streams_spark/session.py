@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """min(16g, half of physical memory), in MB."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "nearscan-spark",
     master: str | None = None,
@@ -63,12 +69,16 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        # local[N] puts executor work in the driver JVM; 16g is sized
-        # for test/tool sessions and respects small CI cgroups.  The
-        # bench (49 queries + 10x stress in one JVM) needs more head --
-        # bench.py raises this via extra_conf; SPARK_DRIVER_MEM
-        # overrides everywhere
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # local[N] puts executor work in the driver JVM.  The heap is
+        # capped at half of physical memory: the JVM's off-heap use
+        # (codegen, Arrow buffers, RocksDB) comes on top, and a heap
+        # sized past the machine lets it grow until the kernel kills it
+        # (a 48g heap did so on a 16 GB box in bench.py's 10x stress
+        # pass).  SPARK_DRIVER_MEM overrides
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
     )
     # scale/deployment-dependent settings stay parameterised (the

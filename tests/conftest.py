@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import random
 import sys
 
 import pytest
@@ -27,6 +28,27 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="module")
+def word_corpus(spark):
+    """200 documents of random words, every tenth a copy of its
+    predecessor plus one word: a vocabulary above the dedup joins'
+    bitmap limit in both gram sizes, like the benchmark corpus, so
+    both joins take their prefix plans."""
+    rng = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    words = [
+        "".join(rng.choice(letters) for _ in range(rng.randint(3, 8)))
+        for _ in range(2000)
+    ]
+    docs: list[tuple[int, str]] = []
+    for i in range(200):
+        if i % 10 == 1:
+            docs.append((i, docs[-1][1] + " tail"))
+        else:
+            docs.append((i, " ".join(rng.choice(words) for _ in range(40))))
+    return spark.createDataFrame(docs, "doc_id long, text string")
 
 
 @pytest.fixture(autouse=True)

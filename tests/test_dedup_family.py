@@ -348,11 +348,12 @@ def test_jaccard_prefix_ext_auto_records_decision(spark):
     assert stats["n_candidates_raw"] >= stats["n_candidates_distinct"]
 
 
-def test_jaccard_auto_dense_gate_short_circuits(spark):
-    """A corpus under the bitmap vocab cap must take the k=1 path via
-    the regime gate (no estimate aggregate), and a sparse corpus
-    (vocab forced tiny-cap off) must still compute the estimate --
-    both matching the explicit k=1 output (round-10 verdict item 2)."""
+def test_jaccard_auto_dense_gate_short_circuits(spark, monkeypatch):
+    """A corpus under the bitmap vocab cap must take the dense plan
+    (no estimate aggregate), and the same corpus in the sparse regime
+    (vocab cap forced to 0) must compute the estimate -- both with the
+    same output."""
+    from nearscan_kafka_streams_spark.functions import dedup as D
     from nearscan_kafka_streams_spark.functions.dedup import (
         jaccard_similarity_join,
         release_cached,
@@ -377,15 +378,12 @@ def test_jaccard_auto_dense_gate_short_circuits(spark):
     assert "est_prefix_collisions" not in dense_stats
     # forcing the bitmap cap to 0 puts the same corpus in the sparse
     # regime: the estimate must run and the output must be identical
+    monkeypatch.setattr(D, "_BITMAP_MAX_VOCAB", 0)
     sparse_stats: dict = {}
     sparse = {
         tuple(r)
         for r in jaccard_similarity_join(
-            df,
-            threshold=0.8,
-            prefix_ext="auto",
-            bitmap_max_vocab=0,
-            stats_out=sparse_stats,
+            df, threshold=0.8, prefix_ext="auto", stats_out=sparse_stats
         ).collect()
     }
     release_cached()
@@ -442,9 +440,11 @@ def test_containment_join_exact_vs_bruteforce(spark):
     assert want and got == want
 
 
-def test_containment_bitmap_and_array_paths_agree(spark):
-    """Both verify representations (dense-vocab bitmap AND+popcount vs
-    hashed-array intersect) must produce identical pairs."""
+def test_containment_bitmap_and_array_paths_agree(spark, monkeypatch):
+    """Both verify representations (the dense plan's bitmap
+    AND+popcount vs the prefix plan's hashed-array intersect) must
+    produce identical pairs on the same data."""
+    from nearscan_kafka_streams_spark.functions import dedup as D
     from nearscan_kafka_streams_spark.functions.dedup import (
         containment_join,
         release_cached,
@@ -464,9 +464,9 @@ def test_containment_bitmap_and_array_paths_agree(spark):
         tuple(r) for r in containment_join(df, threshold=0.9).collect()
     }
     release_cached()
+    monkeypatch.setattr(D, "_BITMAP_MAX_VOCAB", 0)
     via_array = {
-        tuple(r)
-        for r in containment_join(df, threshold=0.9, bitmap_max_vocab=0).collect()
+        tuple(r) for r in containment_join(df, threshold=0.9).collect()
     }
     release_cached()
     assert via_bitmap and via_bitmap == via_array
@@ -560,46 +560,6 @@ def test_containment_prefix_ext_exact_vs_bruteforce(spark):
             }
             release_cached()
             assert got == want, (thr_n, thr_d, k, want - got, got - want)
-
-
-def test_materialize_false_takes_no_cache_ownership(spark):
-    """materialize=False is a no-caching contract: neither the jaccard
-    nor the containment join may take ownership of a cache entry on
-    ANY prefix_ext path when the caller opted out (round-10 ADVICE:
-    the k>=2 prefix persist ignored the flag).  stats_out is the one
-    documented exception (persist+count observability), so it stays
-    None here."""
-    from nearscan_kafka_streams_spark.functions import dedup as D
-
-    base = "the quick brown fox jumps over the lazy dog " * 4
-    docs = [(i, base + f" tail-{i % 5}") for i in range(12)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    for thunk in (
-        lambda: D.jaccard_similarity_join(
-            df, threshold=0.8, materialize=False, prefix_ext=3
-        ),
-        lambda: D.jaccard_similarity_join(
-            df,
-            threshold=0.8,
-            materialize=False,
-            prefix_ext="auto",
-            bitmap_max_vocab=0,
-        ),
-        lambda: D.containment_join(
-            df, threshold=0.9, materialize=False, prefix_ext=3
-        ),
-        lambda: D.containment_join(
-            df,
-            threshold=0.9,
-            materialize=False,
-            prefix_ext="auto",
-            bitmap_max_vocab=0,
-        ),
-    ):
-        before = len(D._CACHED)
-        thunk().collect()
-        assert len(D._CACHED) == before
-        D.release_cached()
 
 
 def test_containment_prefix_ext_auto_records_decision(spark):

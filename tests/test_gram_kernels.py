@@ -13,8 +13,6 @@ Three properties are pinned here:
 
 from __future__ import annotations
 
-import random
-
 import pytest
 
 from nearscan_kafka_streams_spark.functions.dedup import (
@@ -263,26 +261,6 @@ EXPECTED = {
 }
 
 
-@pytest.fixture(scope="module")
-def corpus(spark):
-    """200 documents of random words, every tenth a copy of its
-    predecessor plus one word: a vocabulary above the joins' bitmap
-    limit in both gram sizes, like the benchmark corpus."""
-    rng = random.Random(7)
-    letters = "abcdefghijklmnopqrstuvwxyz"
-    words = [
-        "".join(rng.choice(letters) for _ in range(rng.randint(3, 8)))
-        for _ in range(2000)
-    ]
-    docs: list[tuple[int, str]] = []
-    for i in range(200):
-        if i % 10 == 1:
-            docs.append((i, docs[-1][1] + " tail"))
-        else:
-            docs.append((i, " ".join(rng.choice(words) for _ in range(40))))
-    return spark.createDataFrame(docs, "doc_id long, text string")
-
-
 def test_gram_kernels_match_recorded_arrays(spark):
     df = spark.createDataFrame(list(enumerate(TEXTS)), "i int, text string")
     norm = df.select("i", normalized_text("text").alias("norm"))
@@ -319,9 +297,9 @@ def _lambda_bodies(plan: str) -> list[str]:
     [(jaccard_similarity_join, 0.8), (containment_join, 0.9)],
     ids=["jaccard", "containment"],
 )
-def test_normalization_projected_outside_gram_lambdas(corpus, join, threshold):
+def test_normalization_projected_outside_gram_lambdas(word_corpus, join, threshold):
     plan = (
-        join(corpus, threshold=threshold)
+        join(word_corpus, threshold=threshold)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -332,7 +310,7 @@ def test_normalization_projected_outside_gram_lambdas(corpus, join, threshold):
     assert any("substr(norm" in b for b in bodies)
 
 
-def test_repeated_dedup_joins_compile_nothing(spark, corpus):
+def test_repeated_dedup_joins_compile_nothing(spark, word_corpus):
     """The second of two identical rounds compiles no class: before the
     session sized its codegen cache, each join evicted the other's
     classes and a warm round recompiled ~40 of them.
@@ -345,9 +323,9 @@ def test_repeated_dedup_joins_compile_nothing(spark, corpus):
 
     def one_round() -> list[dict]:
         stats: list[dict] = [{}, {}]
-        jaccard_similarity_join(corpus, threshold=0.8, stats_out=stats[0]).collect()
+        jaccard_similarity_join(word_corpus, threshold=0.8, stats_out=stats[0]).collect()
         release_cached()
-        containment_join(corpus, threshold=0.9, stats_out=stats[1]).collect()
+        containment_join(word_corpus, threshold=0.9, stats_out=stats[1]).collect()
         release_cached()
         return stats
 

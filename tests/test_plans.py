@@ -7,6 +7,8 @@ showing up as a slow bench run.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from nearscan_kafka_streams_spark.plans import (
@@ -59,21 +61,46 @@ def test_no_cartesian_products(spark, sf_dir):
         assert "CartesianProduct" not in plan, q.__name__
 
 
-def test_containment_join_plan_shape(spark, sf_dir):
-    """The asymmetric containment join must stay equi-join shaped: the
-    prefix-vs-full-index candidate join keys on the gram (never a
-    cartesian), and broadcast_verify=True broadcasts both set sides."""
-    from nearscan_kafka_streams_spark.functions.dedup import release_cached
+def test_dedup_join_plan_shape(spark, sf_dir, word_corpus):
+    """Both exact dedup joins stay equi-join shaped: never a cartesian,
+    on the testdata documents (the dense all-pairs plans) or on a
+    sparse random-word corpus (the prefix plans).  On the prefix plans
+    Spark's size-based broadcast alone -- no hint in the code -- plans
+    both verify joins (candidates to each side's hashed gram sets) as
+    broadcast hash joins."""
+    from nearscan_kafka_streams_spark.functions.dedup import (
+        containment_join,
+        jaccard_similarity_join,
+        release_cached,
+    )
     from nearscan_kafka_streams_spark.queries.dedup import (
         dedup_ngram_containment,
+        dedup_ngram_jaccard,
     )
 
-    df = dedup_ngram_containment(spark, sf_dir)
-    plan = formatted_plan(df)
-    broadcasts = has_broadcast_hash_join(df)
-    release_cached()
-    assert "CartesianProduct" not in plan
-    assert broadcasts
+    for query in (dedup_ngram_jaccard, dedup_ngram_containment):
+        plan = formatted_plan(query(spark, sf_dir))
+        release_cached()
+        assert "CartesianProduct" not in plan, query.__name__
+    for join, threshold, keys in (
+        (jaccard_similarity_join, 0.8, ("left_id", "right_id")),
+        (containment_join, 0.9, ("inner_id", "outer_id")),
+    ):
+        stats: dict = {}
+        df = join(word_corpus, threshold=threshold, stats_out=stats)
+        df.collect()
+        # the final adaptive plan, once executed
+        plan = formatted_plan(df)
+        release_cached()
+        assert stats["prefix_ext"] is not None, join.__name__
+        assert "CartesianProduct" not in plan, join.__name__
+        ops: dict[str, set[str]] = {}
+        for op, key in re.findall(
+            r"\(\d+\) (\w+Join)[^\n]*\nLeft keys \[1\]: \[(\w+)#", plan
+        ):
+            ops.setdefault(key, set()).add(op)
+        for key in keys:
+            assert ops.get(key) == {"BroadcastHashJoin"}, (join.__name__, ops)
 
 
 def test_observe_counts(spark, sf_dir):

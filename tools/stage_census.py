@@ -73,7 +73,6 @@ def main() -> None:
     spark = get_spark(
         app_name="stage-census",
         extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g"),
             # the library session disables the UI; this tool IS a UI
             # consumer (extra_conf is applied after the defaults)
             "spark.ui.enabled": "true",
@@ -86,12 +85,8 @@ def main() -> None:
     embs = generate_embeddings(spark, N_VECS)
 
     ops = {
-        "jaccard": lambda: jaccard_similarity_join(
-            docs, threshold=0.9, broadcast_verify=True
-        ),
-        "containment": lambda: containment_join(
-            docs, threshold=0.9, broadcast_verify=True
-        ),
+        "jaccard": lambda: jaccard_similarity_join(docs, threshold=0.9),
+        "containment": lambda: containment_join(docs, threshold=0.9),
         "winnowed": lambda: winnowed_spans(docs),
         "semantic": lambda: semantic_dedup(
             embs,

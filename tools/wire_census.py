@@ -71,7 +71,6 @@ def main() -> int:
     spark = get_spark(
         app_name="wire-census",
         extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g"),
             "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "5000",
         },

@@ -801,7 +801,7 @@ def main() -> None:
                 df.write.mode("overwrite").parquet(f"{wire_root}/pq/{topic}")
             # state-store count per stateful op = shuffle partitions;
             # size to per-partition state volume (measured 2x wall going
-            # 32 -> 8 at bench scale, pipeline._shuffle_override)
+            # 32 -> 8 at bench scale)
             wire_sp = max(4, min(32, n_wire // 2500))
             run_leg(
                 timings, errors, "wire_pipeline",
@@ -851,7 +851,6 @@ def main() -> None:
     # + JSON encode) is untimed producer work.
     try:
         from nearscan_kafka_streams_spark.streaming.pipeline import (
-            _shuffle_override,
             run_fixture_pipeline,
         )
 
@@ -877,15 +876,15 @@ def main() -> None:
         try:
             fx = _stage_fixture(n_stream, f"{stream_root}/fx")
             stream_sp = max(4, min(32, n_stream // 2500))
-            with _shuffle_override(spark, stream_sp):
-                run_leg(
-                    timings, errors, "near_topology_stream",
-                    lambda tag: _drain(
-                        run_fixture_pipeline(
-                            spark, fx, f"{stream_root}/out_{tag}"
-                        )
-                    ),
-                )
+            run_leg(
+                timings, errors, "near_topology_stream",
+                lambda tag: _drain(
+                    run_fixture_pipeline(
+                        spark, fx, f"{stream_root}/out_{tag}",
+                        shuffle_partitions=stream_sp,
+                    )
+                ),
+            )
             # a 1x/10x pair at FIXED sizes (like the dedup battery) so
             # the side file shows the cost is per-micro-batch
             # state-commit overhead amortizing with volume -- expect a
@@ -894,14 +893,14 @@ def main() -> None:
             for leg, n_leg in (("t_1x", 5_000), ("t_10x", 50_000)):
                 fx_leg = _stage_fixture(n_leg, f"{stream_root}/fx_{leg}")
                 sp_leg = max(4, min(32, n_leg // 2500))
-                with _shuffle_override(spark, sp_leg):
-                    t0 = time.perf_counter()
-                    _drain(
-                        run_fixture_pipeline(
-                            spark, fx_leg, f"{stream_root}/out_{leg}"
-                        )
+                t0 = time.perf_counter()
+                _drain(
+                    run_fixture_pipeline(
+                        spark, fx_leg, f"{stream_root}/out_{leg}",
+                        shuffle_partitions=sp_leg,
                     )
-                    st_pair[leg] = round(time.perf_counter() - t0, 3)
+                )
+                st_pair[leg] = round(time.perf_counter() - t0, 3)
             stress["near_topology_stream"] = {
                 **st_pair,
                 "ratio": round(st_pair["t_10x"] / st_pair["t_1x"], 2),

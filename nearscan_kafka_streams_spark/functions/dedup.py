@@ -170,7 +170,7 @@ def incremental_exact_dedup(
     store_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     *,
     batch_id: int,
 ) -> DataFrame:
@@ -853,12 +853,13 @@ def containment_join(
             (F.col("sz_i") == F.col("sz_o"))
             & (F.col("inner_id") < F.col("outer_id"))
         )
-        # the signature reject runs as a POST-JOIN filter, not in the
-        # join condition: BNLJ conditions are evaluated INTERPRETED
-        # per pair, while the filter above the join is whole-stage
-        # codegen -- measured 5.85 s (sig in condition) vs 3.92 s
-        # (post-join filter) one-JVM min-of-3/4 in matched fast
-        # windows
+        # the signature reject is written as a filter after the join,
+        # but the optimizer pushes it (and the exact-overlap filter
+        # below) into the inner join's condition: the executed plan is
+        # one BroadcastNestedLoopJoin whose condition checks the
+        # signature bound, the exact popcount and the size order per
+        # pair.  The signature bound comes first in that conjunction,
+        # so most pairs are rejected before the per-word popcount
         miss_lb = None
         for k in range(n_sig):
             term = F.bit_count(
@@ -1646,7 +1647,7 @@ def incremental_minhash_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     *,
     batch_id: int,
 ) -> DataFrame:

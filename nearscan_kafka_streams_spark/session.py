@@ -61,9 +61,12 @@ def get_spark(
         # wire_tail step ~105 -- so each call evicted the other's classes
         # and Janino recompiled them on every call
         .config("spark.sql.codegen.cache.maxEntries", "1024")
-        # RocksDB state store: the reference's dedup/join/KTable state is
-        # RocksDB-backed (TokenBalance.java:87-89); Spark's provider
-        # keeps large streaming state off-heap and incremental-checkpoints
+        # RocksDB state store for queries whose state has no bound (the
+        # corpus dedup stream, sessionization): it keeps large state
+        # off-heap and checkpoints incrementally.  The token topology's
+        # state is watermark-bounded and small; its query sets the
+        # HDFS-backed provider instead (streaming/pipeline.py::_run_query),
+        # which commits one file per store instance per batch
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."

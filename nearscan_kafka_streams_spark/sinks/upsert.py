@@ -19,6 +19,13 @@ Store design (scale + crash-safety):
   idempotently (last-writer-wins per key).
 * Unreferenced generations are garbage-collected best-effort after the
   swap.
+* A new store starts at 4 buckets and doubles once its median live
+  bucket file passes ``spark.sql.files.maxPartitionBytes`` (the commit
+  that crosses it re-buckets the whole store in one generation, the
+  :func:`compact_store` rewrite).  Small stores then write a few files
+  per batch, and each bucket file stays about one scan split as the
+  keys accumulate.  Doubling splits each old bucket ``b`` into ``b``
+  and ``b + B``, since ``pmod(h, 2B) mod B == pmod(h, B)``.
 
 For transactional table formats or RDBMS targets, pass ``merge_fn``
 (e.g. :func:`duckdb_merge_fn` mirrors the reference's JDBC UPSERT).
@@ -29,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import uuid
 from collections.abc import Callable
 from pathlib import Path
@@ -40,6 +48,7 @@ from pyspark.sql.window import Window
 _MANIFEST = "_MANIFEST.json"
 _BUCKET = "_bucket"
 _VERSIONS = "_versions"
+_START_BUCKETS = 4
 
 
 def dedupe_latest(df: DataFrame, key_col: str, order_cols: list[str]) -> DataFrame:
@@ -168,7 +177,7 @@ def foreach_batch_upsert(
     target_path: str,
     order_cols: list[str] | None = None,
     merge_fn: Callable[[DataFrame, int], None] | None = None,
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     retain_versions: int = 0,
 ) -> Callable[[DataFrame, int], None]:
     """Build a foreachBatch function performing keyed upserts.
@@ -176,11 +185,11 @@ def foreach_batch_upsert(
     Update-mode streaming aggregations already emit one latest row per
     changed key per batch; ``order_cols`` guards the general case.
 
-    ``num_buckets`` sizes the store partitioning: pick ~ total_rows /
-    target_rows_per_file at deployment scale (the first batch pins it;
-    later calls reuse the manifest's value).  The per-batch driver
-    collect is the distinct bucket id list -- bounded by num_buckets,
-    never by data.
+    ``num_buckets`` is a new store's starting bucket count (default 4);
+    later calls reuse the manifest's value, which doubles as the store
+    grows (module docstring).  The per-batch driver collect is the
+    distinct bucket id list -- bounded by the bucket count, never by
+    data.
 
     ``retain_versions`` > 0 keeps the last N committed manifests (and
     the generations they reference) readable via
@@ -198,10 +207,8 @@ def foreach_batch_upsert(
         )
 
         manifest = _load_manifest(target_path)
-        buckets = manifest["num_buckets"] if manifest else num_buckets
-        batch = batch.withColumn(_BUCKET, _bucket_expr(key_col, buckets))
-        affected = sorted(
-            r[0] for r in batch.select(_BUCKET).distinct().collect()
+        batch, buckets, affected = _touched(
+            batch, key_col, manifest, num_buckets
         )
         if not affected:  # empty micro-batch: nothing to do
             return
@@ -234,6 +241,33 @@ def foreach_batch_upsert(
     return _upsert
 
 
+def _touched(
+    batch: DataFrame, key_col: str, manifest: dict | None, num_buckets: int | None
+) -> tuple[DataFrame, int, list[int]]:
+    """The batch with its bucket column, the store's bucket count (the
+    manifest's, or ``num_buckets`` -- default 4 -- for a new store) and
+    the sorted bucket ids the batch touches (shared head of every store
+    writer)."""
+    buckets = manifest["num_buckets"] if manifest else num_buckets or _START_BUCKETS
+    batch = batch.withColumn(_BUCKET, _bucket_expr(key_col, buckets))
+    affected = sorted(r[0] for r in batch.select(_BUCKET).distinct().collect())
+    return batch, buckets, affected
+
+
+def _median_bucket_bytes(path: str, manifest: dict) -> float:
+    """Median on-disk size of the store's live bucket files (a bucket
+    directory holds one file; checksum and marker files excluded)."""
+    sizes = [
+        sum(
+            e.stat().st_size
+            for e in os.scandir(d)
+            if e.is_file() and not e.name.startswith((".", "_"))
+        )
+        for d in bucket_paths(path, manifest)
+    ]
+    return statistics.median(sizes) if sizes else 0
+
+
 def _commit_generation(
     target_path: str,
     merged: DataFrame,
@@ -246,7 +280,10 @@ def _commit_generation(
     extra: dict | None = None,
 ) -> None:
     """Write the merged touched buckets as a new generation and swap
-    the manifest atomically (shared tail of every store writer)."""
+    the manifest atomically (shared tail of every store writer).  A
+    commit that leaves the median live bucket file above
+    ``spark.sql.files.maxPartitionBytes`` then doubles the bucket count
+    in one rewrite of the store, at the same version."""
     gen = f"gen-{batch_id:010d}-{uuid.uuid4().hex[:8]}"
     (
         merged.repartition(len(affected), _BUCKET)
@@ -270,12 +307,19 @@ def _commit_generation(
     _swap_manifest(target_path, new_manifest)
     _gc_generations(target_path, new_manifest, retain_versions)
 
+    spark = merged.sparkSession
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if _median_bucket_bytes(target_path, new_manifest) > split_bytes:
+        _rewrite_store(
+            spark, target_path, new_manifest, 2 * buckets, retain_versions
+        )
+
 
 def foreach_batch_additive(
     key_col: str,
     target_path: str,
     fold: Callable[[DataFrame, list[str]], DataFrame],
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     retain_versions: int = 0,
 ) -> Callable[[DataFrame, int], None]:
     """Incremental aggregate maintenance (additive IVM): fold each
@@ -309,10 +353,8 @@ def foreach_batch_additive(
         ):
             return  # duplicate delivery: already folded in
 
-        buckets = manifest["num_buckets"] if manifest else num_buckets
-        batch = batch_df.withColumn(_BUCKET, _bucket_expr(key_col, buckets))
-        affected = sorted(
-            r[0] for r in batch.select(_BUCKET).distinct().collect()
+        batch, buckets, affected = _touched(
+            batch_df, key_col, manifest, num_buckets
         )
         if not affected:
             return
@@ -352,16 +394,40 @@ def compact_store(
     reason the sink is -- a crash before the swap leaves the old
     manifest (and all files it references) untouched.
 
-    ``num_buckets`` re-buckets the store (grow it as keys accumulate);
-    default keeps the current bucketing.  Returns the bucket count.
+    ``num_buckets`` re-buckets the store; default keeps the current
+    bucketing (the writers double it themselves as the store grows).
+    Returns the bucket count.
     """
     manifest = _load_manifest(path)
     if manifest is None:
         raise FileNotFoundError(f"no upsert store at {path} (missing {_MANIFEST})")
-    key_col = manifest["key_col"]
     buckets = num_buckets or manifest["num_buckets"]
+    # versioned store: compaction commits as the next version and keeps
+    # every retained as-of view readable (their generations stay live)
+    versions = list_store_versions(path)
+    retain = 0
+    if versions or "version" in manifest:
+        manifest = {
+            **manifest,
+            "version": max([manifest.get("version", -1), *versions]) + 1,
+        }
+        retain = len(versions) + 1
+    _rewrite_store(spark, path, manifest, buckets, retain)
+    return buckets
 
-    current = read_store(spark, path).withColumn(
+
+def _rewrite_store(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    buckets: int,
+    retain_versions: int,
+) -> None:
+    """Rewrite the view ``manifest`` names as one generation of
+    ``buckets`` buckets and commit it under ``manifest``'s other keys
+    (version, replay guard), archived when ``retain_versions`` > 0."""
+    key_col = manifest["key_col"]
+    current = spark.read.parquet(*bucket_paths(path, manifest)).withColumn(
         _BUCKET, _bucket_expr(key_col, buckets)
     )
     gen = f"gen-compact-{uuid.uuid4().hex[:8]}"
@@ -379,25 +445,14 @@ def compact_store(
         if child.is_dir() and child.name.startswith(f"{_BUCKET}=")
     }
     new_manifest = {
+        **manifest,
         "num_buckets": buckets,
-        "key_col": key_col,
         "buckets": {b: gen for b in sorted(written, key=int)},
     }
-    if "last_batch_id" in manifest:
-        # additive stores: the replay guard survives compaction
-        new_manifest["last_batch_id"] = manifest["last_batch_id"]
-    # versioned store: compaction commits as the next version and keeps
-    # every retained as-of view readable (their generations stay live)
-    versions = list_store_versions(path)
-    if versions or "version" in manifest:
-        new_manifest["version"] = max(
-            [manifest.get("version", -1), *versions]
-        ) + 1
+    if retain_versions > 0:
         _archive_version(path, new_manifest)
-        versions = list_store_versions(path)
     _swap_manifest(path, new_manifest)
-    _gc_generations(path, new_manifest, retain_versions=len(versions))
-    return buckets
+    _gc_generations(path, new_manifest, retain_versions)
 
 
 def duckdb_merge_fn(

@@ -20,8 +20,10 @@ contract).
 
 State bounds at scale: dedup state expires at the watermark (30 min,
 mirroring the reference's windowed store), join buffers at watermark +
-join tolerance; the balance store holds one row per account (unbounded
-by design -- the KTable equivalent) outside the query's state.
+join tolerance, which is why the query keeps them in Spark's
+HDFS-backed state store (``_run_query``); the balance store holds one
+row per account (unbounded by design -- the KTable equivalent) outside
+the query's state.
 """
 
 from __future__ import annotations
@@ -56,6 +58,10 @@ from nearscan_kafka_streams_spark.sinks.upsert import (
     read_store,
 )
 from nearscan_kafka_streams_spark.sources.files import read_fixture_stream
+
+_STATE_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+)
 
 
 def build_streaming_transfers(
@@ -102,6 +108,7 @@ def run_fixture_pipeline(
     out_dir: str,
     config: PipelineConfig = DEFAULT_CONFIG,
     retain_versions: int = 0,
+    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """End-to-end streaming run over JSON fixture directories
     (``{fixture_dir}/receipts`` etc.), multi-micro-batch via
@@ -127,7 +134,7 @@ def run_fixture_pipeline(
         TOPIC_SCHEMAS["action_receipt_actions"][1],
     )
     transfers = build_streaming_transfers(r, o, a, config)
-    return _run_query(spark, transfers, out_dir, retain_versions)
+    return _run_query(spark, transfers, out_dir, retain_versions, shuffle_partitions)
 
 
 @contextmanager
@@ -145,21 +152,6 @@ def _conf_override(spark: SparkSession, conf: dict[str, str | None]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def _shuffle_override(spark: SparkSession, n: int | None):
-    """Temporarily set spark.sql.shuffle.partitions for the streaming
-    query built inside the block (the value is captured per query at
-    START and pinned into its checkpoint).  Stateful streaming cost has
-    a fixed per-batch term of one state-store load+commit PER SHUFFLE
-    PARTITION per stateful operator, so the partition count must be
-    sized to per-partition state volume: thousands at 100 TB, single
-    digits for a 60k-record replay (measured 2x wall on the wire
-    topology going 32 -> 8 at bench scale).  ``None`` = leave the
-    session setting untouched."""
-    return _conf_override(
-        spark, {"spark.sql.shuffle.partitions": None if n is None else str(n)}
-    )
 
 
 def run_wire_pipeline(
@@ -232,14 +224,7 @@ def _run_topic_pipeline(
     shuffle_partitions: int | None,
 ) -> DataFrame:
     """Shared body of the wire and parquet entry points: ``rd(topic,
-    schema)`` opens one topic stream.
-
-    Without version retention the run is a throughput replay, so
-    no-data micro-batches are off for its duration: after the last data
-    batch the advanced watermark otherwise schedules one more batch
-    purely to EVICT join/dedup state (measured 9 s for an empty batch --
-    a RocksDB load+commit per state store per shuffle partition), which
-    emits nothing for these inner interval joins."""
+    schema)`` opens one topic stream."""
     from nearscan_kafka_streams_spark.schemas import with_event_time
 
     def topic(name: str, schema) -> DataFrame:
@@ -251,16 +236,7 @@ def _run_topic_pipeline(
         topic("action_receipt_actions", ACTION_RECEIPT_ACTIONS_SCHEMA),
         config,
     )
-    conf = {
-        "spark.sql.shuffle.partitions": (
-            None if shuffle_partitions is None else str(shuffle_partitions)
-        ),
-        "spark.sql.streaming.noDataMicroBatches.enabled": (
-            None if retain_versions else "false"
-        ),
-    }
-    with _conf_override(spark, conf):
-        return _run_query(spark, transfers, out_dir, retain_versions)
+    return _run_query(spark, transfers, out_dir, retain_versions, shuffle_partitions)
 
 
 def _last_planned_batch(checkpoint: str) -> int:
@@ -299,10 +275,31 @@ def _run_query(
     transfers: DataFrame,
     out_dir: str,
     retain_versions: int,
+    shuffle_partitions: int | None,
 ) -> DataFrame:
     """Run the one query: per micro-batch, write the transfers and fold
     their balances into ``{out_dir}/token_balance_store``; return the
-    store's balances."""
+    store's balances.
+
+    The query's state (3 dedups and 2 interval joins) is bounded by the
+    dedup watermark and the join watermark plus tolerance, so it runs
+    on Spark's HDFS-backed state store: the state sits in executor
+    memory, and each commit writes one delta file per store instance.
+    The session default (RocksDB) costs several files, a local
+    checkpoint directory and their removal per instance per batch; on
+    Hadoop's local filesystem each created file and directory also
+    forks a ``chmod``, which made the commits most of a warm step.
+    ``shuffle_partitions`` (default: the session's, the core count)
+    sets the store instances per stateful operator.  Both settings are
+    read when a checkpoint is created and pinned in it: a checkpoint
+    resumes on the provider and partition count it was created with.
+
+    Without version retention the run is a throughput replay, so
+    no-data micro-batches are off for its duration: after the last data
+    batch the advanced watermark otherwise schedules one more batch
+    purely to EVICT join/dedup state (a state-store load+commit per
+    store instance), which emits nothing for these inner interval
+    joins."""
     checkpoint = f"{out_dir}/ckpt"
     transfer_path = f"{out_dir}/token_transfer"
     store = f"{out_dir}/token_balance_store"
@@ -335,16 +332,26 @@ def _run_query(
         reader = batch.sparkSession.read.schema(TOKEN_TRANSFER_SCHEMA)
         fold(token_balances(reader.parquet(part)), batch_id)
 
-    q = (
-        transfers.writeStream.foreachBatch(write_and_fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming replay did not finish within 600s")
+    conf = {
+        "spark.sql.streaming.stateStore.providerClass": _STATE_PROVIDER,
+        "spark.sql.shuffle.partitions": (
+            None if shuffle_partitions is None else str(shuffle_partitions)
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            None if retain_versions else "false"
+        ),
+    }
+    with _conf_override(spark, conf):
+        q = (
+            transfers.writeStream.foreachBatch(write_and_fold)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError("streaming replay did not finish within 600s")
     try:
         return read_store(spark, store)
     except FileNotFoundError:

@@ -204,3 +204,39 @@ def test_additive_store_survives_compaction_and_further_merges(spark, tmp_path):
         for r in read_store(spark, store).collect()
     }
     assert got == {1: (4, 40), 2: (3, 21), 3: (1, 5)}
+
+
+def test_store_doubles_buckets_past_split_size(spark, tmp_path):
+    """A new store starts at 4 buckets; the fold that leaves its median
+    bucket file above ``spark.sql.files.maxPartitionBytes`` re-buckets
+    it to 8 at the same version, and a fold that stays below keeps the
+    count.  Sums and the replay guard hold throughout."""
+    from nearscan_kafka_streams_spark.sinks.upsert import _load_manifest
+
+    store = str(tmp_path / "grow")
+    merge = foreach_batch_additive("user_id", store, _sums)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    # one bucket file: ~1.1 KB at 10 keys, ~9 KB at 1,000, ~5 KB at 500
+    spark.conf.set(key, "6k")
+    try:
+        merge(_batch(spark, [(i, 1, i) for i in range(40)]), 0)
+        assert _load_manifest(store)["num_buckets"] == 4
+        merge(_batch(spark, [(i, 1, i) for i in range(4000)]), 1)
+        grown = _load_manifest(store)
+        assert (grown["num_buckets"], grown["last_batch_id"]) == (8, 1)
+        assert len(grown["buckets"]) == 8
+        merge(_batch(spark, [(0, 5, 5)]), 2)
+        merge(_batch(spark, [(0, 5, 5)]), 1)  # replay: skipped
+        assert _load_manifest(store)["num_buckets"] == 8
+    finally:
+        spark.conf.set(key, prev)
+    got = {
+        r["user_id"]: (r["n"], r["amount"])
+        for r in read_store(spark, store).collect()
+    }
+    want = {i: (1, i) for i in range(4000)}
+    for i in range(40):
+        want[i] = (2, 2 * i)
+    want[0] = (7, 5)
+    assert got == want

@@ -245,3 +245,83 @@ def test_streaming_store_without_checkpoint_fails_loudly(spark, fixture_dir, tmp
     with pytest.raises(RuntimeError, match="reset_pipeline"):
         run_fixture_pipeline(spark, str(root), str(out))
     assert not (out / "ckpt").exists()
+
+
+def _pinned_conf(out_dir: str) -> dict:
+    """The session conf the checkpoint's newest offset-log entry pins."""
+    offsets = f"{out_dir}/ckpt/offsets"
+    last = max(int(n) for n in os.listdir(offsets) if n.isdigit())
+    with open(f"{offsets}/{last}") as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def _copy_topics(src, dst, pick) -> None:
+    """Copy the files ``pick(sorted names)`` of each topic dir."""
+    for sub in ("receipts", "outcomes", "actions"):
+        os.makedirs(dst / sub, exist_ok=True)
+        for name in pick(sorted(os.listdir(src / sub))):
+            shutil.copy(src / sub / name, dst / sub / name)
+
+
+def test_checkpoint_keeps_pinned_layout(spark, fixture_dir, tmp_path, monkeypatch):
+    """A checkpoint and store laid out as before the topology moved to
+    the HDFS-backed provider and 4-bucket stores (RocksDB, 4 shuffle
+    partitions, a 64-bucket store) resume under the current code on the
+    layout they pinned, and land on run_batch's balances; a new
+    checkpoint pins the HDFS-backed provider."""
+    from nearscan_kafka_streams_spark.streaming import pipeline
+
+    rocksdb = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+    root, _ = fixture_dir
+    inputs, out = tmp_path / "in", str(tmp_path / "old")
+    _copy_topics(root, inputs, lambda names: names[:1])
+
+    real = pipeline.foreach_batch_additive
+    monkeypatch.setattr(pipeline, "_STATE_PROVIDER", rocksdb)
+    monkeypatch.setattr(
+        pipeline, "foreach_batch_additive",
+        lambda *a, **kw: real(*a, **kw, num_buckets=64),
+    )
+    run_fixture_pipeline(spark, str(inputs), out, shuffle_partitions=4)
+    monkeypatch.undo()
+
+    _copy_topics(root, inputs, lambda names: names[1:])
+    balances = run_fixture_pipeline(spark, str(inputs), out)
+    pinned = _pinned_conf(out)
+    assert pinned["spark.sql.streaming.stateStore.providerClass"] == rocksdb
+    assert pinned["spark.sql.shuffle.partitions"] == "4"
+    with open(f"{out}/token_balance_store/_MANIFEST.json") as fh:
+        assert json.load(fh)["num_buckets"] == 64
+    assert {tuple(r) for r in balances.collect()} == _batch_balances(spark)
+
+    fresh = str(tmp_path / "new")
+    run_fixture_pipeline(spark, str(inputs), fresh)
+    assert (
+        _pinned_conf(fresh)["spark.sql.streaming.stateStore.providerClass"]
+        == pipeline._STATE_PROVIDER
+    )
+    assert pipeline._STATE_PROVIDER.endswith("HDFSBackedStateStoreProvider")
+
+
+def test_balance_store_grows_mid_run(spark, fixture_dir, tmp_path):
+    """With a scan split smaller than one bucket file, each fold that
+    leaves the median bucket file above it doubles the store's bucket
+    count; the store still equals run_batch."""
+    root, _ = fixture_dir
+    out = str(tmp_path / "out")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        balances = run_fixture_pipeline(spark, str(root), out)
+        rows = {tuple(r) for r in balances.collect()}
+    finally:
+        spark.conf.set(key, prev)
+    with open(f"{out}/token_balance_store/_MANIFEST.json") as fh:
+        manifest = json.load(fh)
+    assert manifest["num_buckets"] > 4
+    assert manifest["num_buckets"] & (manifest["num_buckets"] - 1) == 0
+    assert rows == _batch_balances(spark)

@@ -818,9 +818,8 @@ def main() -> None:
             # all-JVM control: the identical topology from
             # parquet-staged decoded frames (file-stream sources, no
             # Python in the data path) -- wire_pipeline minus this is
-            # the Python-decode overhead, and this is the
-            # migration-target number for the real-cluster
-            # kafka+from_avro path (MIGRATION.md)
+            # the Python-decode overhead, which a Kafka deployment
+            # keeps: its reader runs the same decode (MIGRATION.md)
             run_leg(
                 timings, errors, "wire_pipeline_jvm",
                 lambda tag: _drain(

@@ -60,7 +60,7 @@ class PipelineConfig:
     kafka_bootstrap: str = "localhost:9092"
     kafka_options: dict[str, str] = field(default_factory=dict)
     # wire format of Kafka message values: "json" or "avro" (Confluent
-    # wire format: 5-byte magic+schema-id header stripped before decode)
+    # wire format: magic byte + 4-byte schema id + Avro body)
     wire_format: str = "json"
 
 

@@ -9,7 +9,7 @@ Type decisions (SURVEY (S)1.2 / (S)7.4.1):
 - Avro ``bytes``+``decimal(20,0)`` (ns block timestamps, gas)  -> DecimalType(20,0)
 - Avro ``bytes``+``decimal(45,0)`` (yocto amounts)             -> DecimalType(38,0)
   (Spark's precision cap; observed magnitudes <=~1e33, headroom to 1e38;
-  documented engine bound)
+  a wider wire value fails the read, see AMOUNT_TYPE)
 - Debezium enum-as-string / JSON-as-string                      -> StringType
 - ``__deleted`` union["null","string"]                          -> nullable StringType
 
@@ -34,7 +34,11 @@ from pyspark.sql.types import (
 )
 
 # yocto-scale token amounts: reference declares decimal(45,0); Spark caps
-# precision at 38 (SURVEY (S)7.4.1)
+# precision at 38 (SURVEY (S)7.4.1).  A wire value wider than its field
+# here (an amount past 10^38, a gas count or timestamp past 10^20) fails
+# the read, naming the field, the record and the segment or Kafka
+# offset (serde/avro_vec.py::decode_frames): a null would drop the row
+# from the joins or the balances without a trace
 AMOUNT_TYPE = DecimalType(38, 0)
 # ns-epoch block timestamps / gas counters: decimal(20,0)
 TS_NS_TYPE = DecimalType(20, 0)

@@ -3,8 +3,11 @@
 The reference consumes/produces Confluent-framed Avro on every topic
 (util/Schemas.java:88-136).  This package makes that wire path
 executable without connector jars: a pure-Python Avro binary codec
-(Apache Avro spec, binary encoding) driven through Arrow-batched
-pandas UDFs.
+(Apache Avro spec, binary encoding; ``avro.py``) and the one decode
+both wire readers run, a numpy field sweep over Arrow batches of
+Confluent frames with that codec as its row path
+(``avro_vec.py::decode_frames``).  The write leg encodes through an
+Arrow-batched pandas UDF.
 """
 
 from nearscan_kafka_streams_spark.serde.avro import (
@@ -12,7 +15,6 @@ from nearscan_kafka_streams_spark.serde.avro import (
     avro_schema_from_struct,
     confluent_frame,
     confluent_unframe,
-    decode_confluent_udf,
     encode_confluent_udf,
 )
 from nearscan_kafka_streams_spark.serde.registry import (
@@ -25,7 +27,6 @@ __all__ = [
     "avro_schema_from_struct",
     "confluent_frame",
     "confluent_unframe",
-    "decode_confluent_udf",
     "encode_confluent_udf",
     "SchemaRegistryClient",
     "StaticSchemaRegistry",

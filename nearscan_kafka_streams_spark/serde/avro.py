@@ -16,10 +16,11 @@ decimal(45,0) in the .avsc files; Spark's DecimalType caps at 38, see
 schemas.py).  Wire layout does not depend on precision, so frames are
 byte-compatible with the reference's Connect producers.
 
-Spark integration: Arrow-batched pandas UDFs (:func:`decode_confluent_udf`
-/ :func:`encode_confluent_udf`).  Per-record Python at the serde
-boundary is the same cost model as any Kafka deserializer; everything
-downstream stays JVM-side.
+Spark integration: both wire readers decode through
+``serde/avro_vec.py::decode_frames`` (its numpy field sweep, with this
+codec as the row path for schemas and batches the sweep refuses); the
+write leg encodes through the Arrow-batched pandas UDF
+:func:`encode_confluent_udf`.  Everything downstream stays JVM-side.
 """
 
 from __future__ import annotations
@@ -358,57 +359,6 @@ def _avro_type(dtype, precision_override: int | None):
 
 
 # --------------------------------------------------- Spark-side serdes
-
-def decode_confluent_udf(
-    avro_schema: dict | str,
-    spark_schema: StructType,
-    framed: bool = True,
-):
-    """Build a pandas UDF: Confluent-framed (or bare) Avro binary column
-    -> struct column of ``spark_schema``.
-
-    Decimal values wider than the Spark field's precision decode to
-    null -- the same documented bound as the batch path's ``try_cast``
-    (schemas.py:36-40); count them upstream if loss must be observable.
-    """
-    codec = AvroCodec(avro_schema)
-    caps = {
-        f_.name: (f_.dataType.precision, f_.dataType.scale)
-        for f_ in spark_schema.fields
-        if isinstance(f_.dataType, DecimalType)
-    }
-    int_cols = [
-        f_.name
-        for f_ in spark_schema.fields
-        if isinstance(f_.dataType, IntegerType)
-    ]
-    names = [f_.name for f_ in spark_schema.fields]
-
-    def _decode_series(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for blob in s:
-            body = confluent_unframe(bytes(blob))[1] if framed else bytes(blob)
-            rec = codec.decode(body)
-            for col, (prec, scale) in caps.items():
-                v = rec.get(col)
-                if v is None:
-                    continue
-                # precision = digits of the UNSCALED value (int digits
-                # alone would under-reject fractional decimals)
-                unscaled = abs(int(decimal.Decimal(v).scaleb(scale, _DEC_CTX)))
-                if len(str(unscaled)) > prec:
-                    rec[col] = None
-            rows.append([rec.get(n) for n in names])
-        pdf = pd.DataFrame(rows, columns=names)
-        for c in int_cols:
-            # nullable Int32: plain int32 raises on None (null unions)
-            pdf[c] = pdf[c].astype("Int32")
-        return pdf
-
-    # pandas_udf needs a live session to resolve the return type; built
-    # lazily at call time, never at import (see session-recipe notes)
-    return F.pandas_udf(_decode_series, returnType=spark_schema)
-
 
 def encode_confluent_udf(
     avro_schema: dict | str,

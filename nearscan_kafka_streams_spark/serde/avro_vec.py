@@ -1,41 +1,56 @@
-"""Vectorized (numpy) Avro binary decoder for FLAT record schemas.
+"""The one Confluent-Avro decode both wire readers run, and its
+vectorized (numpy) decoder for FLAT record schemas.
 
-The wire source's per-record cost is the pure-Python schema walk in
-``AvroCodec.decode`` plus the list-of-dicts -> Arrow conversion
-(``pa.RecordBatch.from_pylist``): ~20 Python-level operations per
-field per record.  Every topic schema the wire path carries is FLAT
-(strings, ints, bytes-decimals, null unions -- schemas.py), so the
-decode is vectorizable field-by-field across all records of a batch
-(guide §4.2: hand whole batches to vectorized native code): one
-``pos`` int64 vector tracks every record's cursor, each field decodes
-with a handful of numpy gathers (varints iterate bytes, not records),
-and the column lands directly in an ``pyarrow`` buffer -- no Python
-row objects at all.
+:func:`decode_frames` turns Confluent frames (magic 0x00 + 4-byte
+schema id + Avro body) into ``pyarrow.RecordBatch``es.  The segment
+reader (``sources/pyds.py``) feeds it each segment's frames, the Kafka
+reader (``sources/kafka.py``) each Arrow batch of its ``value`` column,
+both in ``mapInArrow``.  A frame under 5 bytes, a bad magic byte, a
+malformed body or a decimal wider than its Spark field raises
+:class:`FrameError` naming the record; the reader adds where it is.
+
+The row codec (``AvroCodec.decode`` + ``pa.RecordBatch.from_pylist``)
+costs ~20 Python-level operations per field per record.  Every topic
+schema the wire path carries is FLAT (strings, ints, bytes-decimals,
+null unions -- schemas.py), so the decode is vectorizable
+field-by-field across all records of a batch (guide §4.2): one ``pos``
+int64 vector tracks every record's cursor, each field decodes with a
+handful of numpy gathers (varints iterate bytes, not records), and
+the column lands directly in a ``pyarrow`` buffer.
 
 Byte-exactness contract: for every schema :meth:`VectorizedDecoder.
 supports` accepts, ``decode_batch`` produces exactly the rows
 ``AvroCodec.decode`` produces (tests/test_avro_vec.py fuzzes both
-paths against each other).  Anything else -- nested records, arrays,
-maps, non-null-first unions, scale-mismatched decimals -- is refused
-at construction time and the caller falls back to the row decoder.
-Data the sweep cannot represent -- a decimal wider than decimal128, a
-string/bytes column of 2 GiB or more in one batch, an unexpected
-union branch -- is refused per batch with ``ValueError``,
-``OverflowError`` or ``IndexError`` (``sources.pyds.DECODER_REFUSALS``)
-and the caller decodes from that batch on with the row codec.
-
-Decoding stays executor-side: the segment decode
-(``sources/pyds.py::read_segments``, inside ``mapInArrow``) builds one
-decoder per segment and feeds it record-body start and end vectors
-per Arrow batch.
+paths against each other).  Other schemas -- nested records, arrays,
+maps, non-null-first unions, scale-mismatched decimals -- run on the
+row codec.  Data the sweep cannot represent or finds malformed -- a
+decimal wider than decimal128, a string/bytes column of 2 GiB or more
+in one batch, an unexpected union branch, a body that does not end at
+its frame's end -- is refused per batch (``DECODER_REFUSALS``), and
+the row codec decodes from that batch on.
 """
 
 from __future__ import annotations
 
+import decimal
 import json
+import struct
 
 import numpy as np
 import pyarrow as pa
+
+# records per yielded pyarrow.RecordBatch; bounds executor memory to
+# ~batch * record-size while amortizing the per-batch Arrow IPC cost
+ARROW_BATCH_SIZE = 4096
+
+# what the decoder raises when it refuses a batch (pa.ArrowInvalid is a
+# ValueError); anything else is a bug and must not hide behind the
+# row path
+DECODER_REFUSALS = (ValueError, OverflowError, IndexError)
+
+# counts the unscaled digits of any decimal the wire carries (the
+# default 28-digit context would round a 45-digit amount)
+_DEC_CTX = decimal.Context(prec=99)
 
 # union branch bytes: zigzag(0) = 0x00, zigzag(1) = 0x02 -- always one
 # byte, so a ["null", T] branch index is a single-byte gather
@@ -336,3 +351,105 @@ def _decimal_col(
     return pa.Array.from_buffers(
         arrow_type, n, [validity, pa.py_buffer(out.tobytes())], null_count
     )
+
+
+class FrameError(ValueError):
+    """A Confluent frame that does not decode into its Spark row;
+    ``record`` is its index among the frames given to decode_frames."""
+
+    def __init__(self, record: int, reason: str):
+        super().__init__(f"record {record}: {reason}")
+        self.record = record
+
+
+def decode_frames(
+    data,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    avro_schema: dict | str,
+    arrow_schema: pa.Schema,
+    batch_size: int = ARROW_BATCH_SIZE,
+):
+    """Yield RecordBatches typed ``arrow_schema`` for the Confluent
+    frames ``data[starts[i]:ends[i]]``: the vector sweep when the
+    schema supports it, and the row codec from the first record of a
+    batch the sweep refuses (yielded batches are never re-emitted).
+    Every batch then passes the range check: a decimal wider than its
+    Spark field fails the read, since a null would drop the row from
+    the joins or balances untraced."""
+    src = np.frombuffer(data, dtype=np.uint8)
+    # one copy into a zero pad that keeps finished-lane gathers in bounds
+    buf = np.zeros(len(src) + 16, dtype=np.uint8)
+    buf[: len(src)] = src
+    short = ends - starts < 5
+    if short.any():
+        i = int(short.argmax())
+        raise FrameError(
+            i, f"{ends[i] - starts[i]}-byte frame is shorter than magic + "
+            "schema id (5 bytes)",
+        )
+    bad_magic = buf[starts] != 0
+    if bad_magic.any():
+        i = int(bad_magic.argmax())
+        raise FrameError(
+            i, f"not Confluent wire format (bad magic byte {buf[starts[i]]:#04x})"
+        )
+    bodies = starts + 5  # skip magic (1) + schema id (4)
+    done = 0
+    if VectorizedDecoder.supports(avro_schema, arrow_schema):
+        decoder = VectorizedDecoder(avro_schema, arrow_schema)
+        for done in range(0, len(starts), batch_size):
+            span = slice(done, done + batch_size)
+            try:
+                batch = decoder.decode_batch(buf, bodies[span], ends[span])
+            except DECODER_REFUSALS:
+                break  # resume below on the row path at record ``done``
+            yield _checked(batch, done)
+        else:
+            return
+    from nearscan_kafka_streams_spark.serde.avro import AvroCodec
+
+    codec, names = AvroCodec(avro_schema), arrow_schema.names
+    for lo in range(done, len(starts), batch_size):
+        rows = []
+        for i in range(lo, min(lo + batch_size, len(starts))):
+            try:
+                rec = codec.decode(buf[bodies[i] : ends[i]].tobytes())
+            except (*DECODER_REFUSALS, struct.error) as exc:
+                raise FrameError(i, f"{type(exc).__name__}: {exc}") from exc
+            rows.append({n: rec.get(n) for n in names})
+        try:
+            batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+        except pa.ArrowInvalid:
+            # a too-wide decimal fails the Arrow conversion: name it
+            for f in arrow_schema:
+                if pa.types.is_decimal(f.type):
+                    _check_fit(f, [r[f.name] for r in rows], lo)
+            raise
+        yield batch
+
+
+def _checked(batch: pa.RecordBatch, first: int) -> pa.RecordBatch:
+    """``batch`` (records ``first`` on), once its decimals fit."""
+    for field, col in zip(batch.schema, batch.columns):
+        if pa.types.is_decimal(field.type):
+            try:
+                col.validate(full=True)
+            except pa.ArrowInvalid:
+                _check_fit(field, col.to_pylist(), first)
+                raise
+    return batch
+
+
+def _check_fit(field: pa.Field, values: list, first: int) -> None:
+    """Raise FrameError at the first of ``values`` (records ``first``
+    on) with more unscaled digits than ``field``'s precision."""
+    p, s = field.type.precision, field.type.scale
+    for j, v in enumerate(values):
+        digits = 0 if v is None else len(str(abs(int(v.scaleb(s, _DEC_CTX)))))
+        if digits > p:
+            raise FrameError(
+                first + j,
+                f"field {field.name}: {digits}-digit value does not fit "
+                f"decimal({p},{s})",
+            )

@@ -403,10 +403,12 @@ def compact_store(
         raise FileNotFoundError(f"no upsert store at {path} (missing {_MANIFEST})")
     buckets = num_buckets or manifest["num_buckets"]
     # versioned store: compaction commits as the next version and keeps
-    # every retained as-of view readable (their generations stay live)
+    # every retained as-of view readable (their generations stay live).
+    # A store that keeps no versions gets none: its next commit's GC
+    # would remove the generation an archived version names
     versions = list_store_versions(path)
     retain = 0
-    if versions or "version" in manifest:
+    if versions:
         manifest = {
             **manifest,
             "version": max([manifest.get("version", -1), *versions]) + 1,

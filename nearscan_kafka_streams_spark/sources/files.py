@@ -1,4 +1,4 @@
-"""File readers: batch parquet tables + file-based streaming fixtures.
+"""File reader: file-based streaming fixtures.
 
 ``read_fixture_stream`` replays a directory of JSON files as a
 Structured Streaming source -- the test-container stand-in for the
@@ -11,14 +11,9 @@ genuinely exercised.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from nearscan_kafka_streams_spark.schemas import with_event_time
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def read_fixture_stream(
@@ -36,59 +31,3 @@ def read_fixture_stream(
     )
     return with_event_time(raw, event_time_source)
 
-
-def read_evolving(
-    spark: SparkSession,
-    path: str,
-    canonical: StructType,
-) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: merge footers across
-    files written under DIFFERENT schema versions, then conform to the
-    declared canonical schema -- add (as typed nulls) columns newer
-    writers have that old files lack, drop retired columns, and cast
-    survivors to the canonical type.
-
-    Why it matters at 100 TB: a long-lived ingest directory spans
-    months of producer versions; a plain read either fails on the
-    union schema or silently binds to one footer's layout.  This pins
-    the contract in ONE place: readers always see exactly
-    ``canonical``, whatever the file vintage.
-
-    Cost: ``mergeSchema`` reads every file footer (metadata-only, no
-    data scan); per-column casts are scan-side projections.  Columns
-    missing from a given file come back as nulls from the parquet
-    reader itself -- no per-file handling.
-
-    Supported evolution is ADDITIVE (columns appear/retire); a TYPE
-    change on an existing column is a breaking producer change that
-    parquet schema merge rejects by design (e.g. INT32 vs INT64
-    footers) -- surfaced here as an actionable error telling the
-    operator to version the table, instead of Spark's raw
-    CANNOT_MERGE_SCHEMAS.
-    """
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception as exc:  # noqa: BLE001
-        if "CANNOT_MERGE_SCHEMAS" in str(exc):
-            raise ValueError(
-                f"{path}: files disagree on the TYPE of an existing "
-                "column (parquet schema merge is additive-only). This "
-                "is a breaking producer change: rewrite the old "
-                "vintage or split it into a separate table version "
-                "and union the casted reads explicitly. Original: "
-                + str(exc).split("\n")[0]
-            ) from exc
-        raise
-    have = {f.name: f for f in df.schema.fields}
-    cols = []
-    for f in canonical.fields:
-        if f.name in have:
-            col = df[f.name]
-            if have[f.name].dataType != f.dataType:
-                col = col.cast(f.dataType)
-            cols.append(col.alias(f.name))
-        else:
-            cols.append(
-                F.lit(None).cast(f.dataType).alias(f.name)
-            )
-    return df.select(*cols)

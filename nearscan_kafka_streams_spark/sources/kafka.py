@@ -8,11 +8,11 @@ util/Schemas.java:88-136).  Spark equivalent: ``readStream.format
 Wire formats:
 - ``json``: plain ``from_json`` (the fixture/replay format);
 - ``avro``: Confluent wire format = 1 magic byte + 4-byte schema id +
-  Avro body.  The header strip (slice 6..; stock ``from_avro`` does not
-  do it, SURVEY (S)7.3) happens JVM-side; the body decodes through the
-  built-in pure-Python codec (serde/avro.py) by default -- executable
-  with no connector jars -- or through ``spark-avro``'s ``from_avro``
-  when ``use_spark_avro_jar=True`` on clusters that ship it.
+  Avro body.  The ``value`` column goes through ``mapInArrow`` into
+  ``serde/avro_vec.py::decode_frames``, the decode the segment reader
+  (``sources/pyds.py``) runs, with the frame bounds taken from the
+  Arrow column's offsets; a frame that does not decode fails the task,
+  naming the topic, partition and offset when ``raw`` has them.
 
 Schemas come from code (schemas.py) or a registry fetched ONCE at
 plan-build time (serde/registry.py; the reference fetches at startup,
@@ -20,18 +20,22 @@ util/Schemas.java:113-136) -- never per record.
 
 No Kafka broker exists in the test container; the broker leg is
 exercised by construction tests, while the decode path itself runs for
-real against framed bytes (tests/test_avro_wire.py) and file-stream
-equivalents in files.py share every downstream operator.
+real against framed bytes (tests/test_avro_wire.py,
+tests/test_wire_readers.py).
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from nearscan_kafka_streams_spark.schemas import with_event_time
-from nearscan_kafka_streams_spark.serde.avro import decode_confluent_udf
+
+# Kafka source columns that locate a record, named in a decode error
+_LOCATION = ("topic", "partition", "offset")
 
 
 def decode_topic_values(
@@ -39,7 +43,6 @@ def decode_topic_values(
     schema: StructType,
     wire_format: str = "json",
     avro_schema_json: str | None = None,
-    use_spark_avro_jar: bool = False,
 ) -> DataFrame:
     """(key, value) Kafka records -> flat decoded columns.
 
@@ -56,23 +59,63 @@ def decode_topic_values(
         decoded = raw.select(
             key, F.from_json(F.col("value").cast("string"), schema).alias("v")
         )
-    elif wire_format == "avro":
-        if avro_schema_json is None:
-            raise ValueError("avro wire format requires avro_schema_json")
-        # Confluent wire format: strip magic byte + 4-byte schema id
-        # JVM-side so the slice shows up in the plan
-        body = F.expr("substring(value, 6, length(value) - 5)")
-        if use_spark_avro_jar:
-            from pyspark.sql.avro.functions import from_avro
-
-            decoded = raw.select(key, from_avro(body, avro_schema_json).alias("v"))
-        else:
-            dec = decode_confluent_udf(avro_schema_json, schema, framed=False)
-            decoded = raw.select(key, dec(body).alias("v"))
-    else:
+        return decoded.select("kafka_key", "v.*")
+    if wire_format != "avro":
         raise ValueError(f"unknown wire format: {wire_format}")
+    if avro_schema_json is None:
+        raise ValueError("avro wire format requires avro_schema_json")
+    # schemas built here, not in each executor worker: the import
+    # pulls pandas in (~1 s cold per worker)
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return decoded.select("kafka_key", "v.*")
+    located = set(_LOCATION) <= set(raw.columns)
+    raw = raw.select(key, "value", *(_LOCATION if located else ()))
+    avro_schema = json.loads(avro_schema_json)
+    out = StructType([StructField("kafka_key", StringType()), *schema.fields])
+    arrow_schema, out_arrow = to_arrow_schema(schema), to_arrow_schema(out)
+
+    def decode(batches):
+        import pyarrow as pa
+
+        from nearscan_kafka_streams_spark.serde.avro_vec import (
+            FrameError,
+            decode_frames,
+        )
+
+        for batch in batches:
+            keys, at = batch.column("kafka_key"), 0
+            try:
+                for rows in decode_frames(
+                    *_value_frames(batch.column("value")),
+                    avro_schema,
+                    arrow_schema,
+                ):
+                    yield pa.RecordBatch.from_arrays(
+                        [keys.slice(at, rows.num_rows), *rows.columns],
+                        schema=out_arrow,
+                    )
+                    at += rows.num_rows
+            except FrameError as exc:
+                if located:
+                    t, p, o = (batch.column(c)[exc.record] for c in _LOCATION)
+                    exc.add_note(f"topic {t} partition {p} offset {o}")
+                raise
+
+    return raw.mapInArrow(decode, out)
+
+
+def _value_frames(values):
+    """``(data, starts, ends)`` of an Arrow binary column's values for
+    ``decode_frames``, from its offsets (a null is an empty frame)."""
+    import numpy as np
+    import pyarrow as pa
+
+    width = np.int64 if pa.types.is_large_binary(values.type) else np.int32
+    _, offsets, data = values.buffers()
+    off = np.frombuffer(offsets, width)[
+        values.offset : values.offset + len(values) + 1
+    ].astype(np.int64)
+    return data or b"", off[:-1], off[1:]
 
 
 def read_topic_stream(
@@ -84,7 +127,6 @@ def read_topic_stream(
     starting_offsets: str = "earliest",
     wire_format: str = "json",
     avro_schema_json: str | None = None,
-    use_spark_avro_jar: bool = False,
     registry=None,
     subject: str | None = None,
     envelope: str = "flat",
@@ -127,9 +169,7 @@ def read_topic_stream(
 
         flat = decode_debezium_values(raw, schema)
     elif envelope == "flat":
-        flat = decode_topic_values(
-            raw, schema, wire_format, avro_schema_json, use_spark_avro_jar
-        )
+        flat = decode_topic_values(raw, schema, wire_format, avro_schema_json)
     else:
         raise ValueError(f"unknown envelope: {envelope}")
     return with_event_time(flat, event_time_source)

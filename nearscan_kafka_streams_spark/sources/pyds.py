@@ -19,18 +19,13 @@ file-level offset loses nothing.  Each file arrives as one row whose
 rules pack files into tasks, so a task holds the segments of its split
 (``spark.sql.files.maxPartitionBytes``).
 
-Decode (``mapInArrow``, executor Python workers): the numpy
-field-sweep decoder (``serde/avro_vec.py``) when the schema supports
-it, else the pure-Python Avro codec (``serde/avro.py``, written from
-the Avro spec); a batch the sweep refuses sends the rest of the
-segment, from that batch's first record, to the codec.  Both yield
-``pyarrow.RecordBatch``es of ARROW_BATCH_SIZE records.  A frame
-shorter than magic + schema id (5 bytes), a bad magic byte, a
-truncated record, or an Avro body the schema does not consume to
-exactly its frame's end raises, naming the segment.  On a real
-cluster the Kafka source replaces only the reader: its ``value``
-column holds the same Confluent frames, one per row -- see
-MIGRATION.md.
+Decode (``mapInArrow``, executor Python workers): each segment's
+frames go through ``serde/avro_vec.py::decode_frames``, the one
+Confluent-Avro decode the Kafka reader (``sources/kafka.py``) runs too,
+so a broker deployment swaps only the reader -- see MIGRATION.md.  A
+truncated length header or record fails here; a frame or value that
+does not fit fails in ``decode_frames``; either error names the
+segment.
 
 ``format("confluentavro")`` (register ``ConfluentAvroDataSource``) is
 the write leg only: ``df.write.format("confluentavro")`` encodes rows
@@ -58,10 +53,6 @@ from pyspark.sql.types import (
 
 RECORD_LEN = _struct.Struct(">I")
 
-# records per yielded pyarrow.RecordBatch; bounds executor memory to
-# ~batch * record-size while amortizing the per-batch Arrow IPC cost
-ARROW_BATCH_SIZE = 4096
-
 # the binaryFile source's fixed row shape (a stream needs it declared)
 BINARY_FILE_SCHEMA = StructType(
     [
@@ -77,47 +68,14 @@ BINARY_FILE_SCHEMA = StructType(
 # with `cp -p` keeps its old mtime, so the cut would drop it silently
 MAX_FILE_AGE = "36500d"
 
-# what the decoder raises when it refuses a batch (pa.ArrowInvalid is a
-# ValueError); anything else is a bug and must not hide behind the
-# row path
-DECODER_REFUSALS = (ValueError, OverflowError, IndexError)
 
-
-def _row_batches(bodies, avro_schema, names, arrow_schema, batch_size):
-    """Decode Avro bodies with the row codec into
-    `pyarrow.RecordBatch`es of ``batch_size`` rows, typed by the Spark
-    schema's Arrow image (so decimals land as decimal128 and nothing
-    re-infers per batch)."""
-    import pyarrow as pa
-
-    from nearscan_kafka_streams_spark.serde.avro import AvroCodec
-
-    codec = AvroCodec(avro_schema)
-    rows: list[dict] = []
-    for body in bodies:
-        rec = codec.decode(body)
-        rows.append({n: rec.get(n) for n in names})
-        if len(rows) >= batch_size:
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-            rows = []
-    if rows:
-        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-
-
-def _scan_frame_bodies(data):
-    """Copy one segment's bytes into a padded uint8 buffer and return
-    ``(buf, body_starts, body_ends)``: the input of both the vectorized
-    decoder and the row codec.  The header walk is Python but
-    touches 4 bytes per record; bodies are never copied out (the
-    decoder gathers from ``buf`` in place).  The 16-byte zero pad keeps
-    finished-lane gathers in bounds at the final record."""
+def _scan_segment(data):
+    """``(data, frame_starts, frame_ends)`` of one segment's bytes for
+    ``decode_frames``: a Python walk of the 4-byte length headers."""
     import numpy as np
 
-    src = np.frombuffer(data, dtype=np.uint8)
-    size = len(src)
-    buf = np.zeros(size + 16, dtype=np.uint8)
-    buf[:size] = src
-    mem = memoryview(buf)  # header walk: 4 bytes/record, zero-copy
+    mem = memoryview(data)
+    size = len(mem)
     starts: list[int] = []
     ends: list[int] = []
     pos = 0
@@ -127,48 +85,10 @@ def _scan_frame_bodies(data):
         (n,) = RECORD_LEN.unpack_from(mem, pos)
         if pos + 4 + n > size:
             raise EOFError(f"truncated record (wanted {n} bytes at {pos + 4})")
-        if n < 5:
-            raise ValueError(
-                f"{n}-byte frame at {pos + 4} is shorter than "
-                "magic + schema id (5 bytes)"
-            )
         starts.append(pos + 4)
         pos += 4 + n
         ends.append(pos)
-    frame_starts = np.asarray(starts, dtype=np.int64)
-    if len(frame_starts) and (buf[frame_starts] != 0).any():
-        raise ValueError("not Confluent wire format (bad magic byte)")
-    # skip magic (1) + schema id (4): Avro body start
-    return buf, frame_starts + 5, np.asarray(ends, dtype=np.int64)
-
-
-def _batches_auto(data, avro_schema, names, arrow_schema, batch_size):
-    """Yield RecordBatches for every record of one segment's bytes: the
-    vectorized numpy decoder when the schema supports it, the
-    row-at-a-time codec otherwise.  A batch the decoder refuses sends
-    the rest of the segment to the row path AT THE FIRST RECORD OF THAT
-    BATCH (already-yielded batches are never re-emitted), so exotic
-    data degrades to the row path's cost instead of erroring
-    differently."""
-    from nearscan_kafka_streams_spark.serde.avro_vec import (
-        VectorizedDecoder,
-    )
-
-    buf, starts, ends = _scan_frame_bodies(data)
-    done = 0
-    if VectorizedDecoder.supports(avro_schema, arrow_schema):
-        decoder = VectorizedDecoder(avro_schema, arrow_schema)
-        try:
-            for done in range(0, len(starts), batch_size):
-                span = slice(done, done + batch_size)
-                yield decoder.decode_batch(buf, starts[span], ends[span])
-            return
-        except DECODER_REFUSALS:
-            pass  # resume below on the row path at record ``done``
-    bodies = (
-        buf[s:e].tobytes() for s, e in zip(starts[done:], ends[done:])
-    )
-    yield from _row_batches(bodies, avro_schema, names, arrow_schema, batch_size)
+    return data, np.asarray(starts, np.int64), np.asarray(ends, np.int64)
 
 
 def read_segments(reader, path: str, schema: StructType, avro_schema):
@@ -178,18 +98,20 @@ def read_segments(reader, path: str, schema: StructType, avro_schema):
     ``avro_schema`` (dict or JSON)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    names = [f.name for f in schema.fields]
     # computed once here, not in each executor worker: the import pulls
     # pandas in (~1 s cold per worker); the pa.Schema pickles for free
     arrow_schema = to_arrow_schema(schema)
 
     def decode(batches):
+        from nearscan_kafka_streams_spark.serde.avro_vec import decode_frames
+
         for files in batches:
             for seg, content in zip(files["path"], files["content"]):
                 try:
-                    yield from _batches_auto(
-                        content.as_buffer(), avro_schema, names,
-                        arrow_schema, ARROW_BATCH_SIZE,
+                    yield from decode_frames(
+                        *_scan_segment(content.as_buffer()),
+                        avro_schema,
+                        arrow_schema,
                     )
                 except Exception as exc:
                     exc.add_note(f"segment {seg}")  # name the bad file

@@ -200,9 +200,9 @@ def run_parquet_pipeline(
     parquet-staged (already-decoded) topic frames -- the all-JVM
     variant: file-stream sources, zero Python in the data path.  Bench
     runs it next to the wire variant so the headline separates "Avro
-    decode in Python workers" from "topology cost"; it is
-    also the shape a real cluster runs after the Kafka+`from_avro`
-    swap (MIGRATION.md), so its number is the migration target.
+    decode in Python workers" from "topology cost" (a Kafka
+    deployment keeps the decode: its reader runs the same one,
+    MIGRATION.md).
 
     Expects ``{parquet_dir}/receipts`` etc. written as parquet with the
     topic StructTypes."""

@@ -43,7 +43,7 @@ def _arrow_schema(struct):
 
 def _pack(bodies):
     """Concatenate Avro bodies into one padded buffer + starts and ends
-    vectors (the shape _scan_frame_bodies hands the decoder)."""
+    vectors (the shape decode_frames hands the decoder)."""
     starts = []
     pos = 0
     chunks = []
@@ -251,24 +251,21 @@ def test_empty_batch():
     assert batch.num_rows == 0
 
 
-def _segment(tmp_path, bodies) -> bytes:
-    """The bytes of one framed segment file holding ``bodies``."""
+def _frames(bodies):
+    """``_pack`` of the Confluent frames of ``bodies``: the input of
+    ``decode_frames``."""
     from nearscan_kafka_streams_spark.serde.avro import confluent_frame
-    from nearscan_kafka_streams_spark.sources.pyds import write_framed_log
 
-    path = str(tmp_path / "log" / "part-00000.bin")
-    write_framed_log([confluent_frame(1, b) for b in bodies], path)
-    with open(path, "rb") as fh:
-        return fh.read()
+    return _pack([confluent_frame(1, b) for b in bodies])
 
 
-def test_mid_file_vector_failure_resumes_on_row_path(tmp_path):
+def test_mid_file_vector_failure_resumes_on_row_path():
     # record 2's decimal is sign-extended to 17 bytes: valid Avro that
     # the row codec reads, but wider than decimal128 storage, so the
     # vector decoder refuses it.  With batch_size=2 the first batch
     # comes from the vector path and the rest from the row path,
     # starting at the batch that failed.
-    from nearscan_kafka_streams_spark.sources.pyds import _batches_auto
+    from nearscan_kafka_streams_spark.serde.avro_vec import decode_frames
 
     struct = StructType(
         [
@@ -292,10 +289,7 @@ def test_mid_file_vector_failure_resumes_on_row_path(tmp_path):
     with pytest.raises(OverflowError):
         dec.decode_batch(*_pack(bodies[2:3]))
 
-    data = _segment(tmp_path, bodies)
-    batches = list(
-        _batches_auto(data, avro, ["id", "amount"], arrow_schema, 2)
-    )
+    batches = list(decode_frames(*_frames(bodies), avro, arrow_schema, 2))
     assert [b.num_rows for b in batches] == [2, 2, 1]
     got = [row for b in batches for row in b.to_pylist()]
     want = [codec.decode(b) for b in bodies]
@@ -315,21 +309,19 @@ def test_int32_offset_overflow_refused():
         _int32_offsets(np.array([2**30, 2**30], dtype=np.int64))
 
 
-def test_decoder_bug_propagates_instead_of_falling_back(
-    tmp_path, monkeypatch
-):
+def test_decoder_bug_propagates_instead_of_falling_back(monkeypatch):
     # only the decoder's refusal types send a batch to the row path; any
     # other error is a bug and must surface
-    from nearscan_kafka_streams_spark.sources.pyds import _batches_auto
+    from nearscan_kafka_streams_spark.serde.avro_vec import decode_frames
 
     struct = StructType([StructField("id", LongType(), False)])
     avro = avro_schema_from_struct(struct, name="R")
     codec = AvroCodec(avro)
-    data = _segment(tmp_path, [codec.encode({"id": i}) for i in range(3)])
+    frames = _frames([codec.encode({"id": i}) for i in range(3)])
 
     def broken(self, buf, body_starts, body_ends):
         raise RuntimeError("decoder bug")
 
     monkeypatch.setattr(VectorizedDecoder, "decode_batch", broken)
     with pytest.raises(RuntimeError, match="decoder bug"):
-        list(_batches_auto(data, avro, ["id"], _arrow_schema(struct), 2))
+        list(decode_frames(*frames, avro, _arrow_schema(struct), 2))

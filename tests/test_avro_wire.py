@@ -4,8 +4,8 @@ The reference's topics all carry Confluent wire format (magic byte +
 4-byte schema id + Avro binary; util/Schemas.java:88-136).  No broker
 or connector jar exists in this container, so the codec itself
 (serde/avro.py) carries the wire path: spec-vector pins, per-topic
-round trips through real Spark plans (encode UDF -> JVM header strip ->
-decode UDF), a streaming serialization leg, and a registry startup
+round trips through real Spark plans (encode UDF -> Kafka reader's
+Arrow decode), a streaming serialization leg, and a registry startup
 fetch against a local HTTP server.
 """
 
@@ -179,8 +179,8 @@ def test_nested_union_of_records_roundtrip():
 
 
 def _spark_roundtrip(spark, topic, rows):
-    """rows -> Spark encode UDF -> framed bytes -> JVM strip + decode
-    UDF -> rows.  Both serde UDFs execute inside real Spark plans."""
+    """rows -> Spark encode UDF -> framed bytes -> the Kafka reader's
+    decode -> rows.  Both legs execute inside real Spark plans."""
     schema = TOPIC_SCHEMAS[topic][0]
     df = spark.createDataFrame(
         [tuple(r[f.name] for f in schema.fields) for r in rows], schema
@@ -233,9 +233,10 @@ def test_spark_wire_frame_header(spark):
     ] == "r1"
 
 
-def test_over_precision_decimal_decodes_null(spark):
-    """45-digit wire amounts exceed Spark's decimal(38,0): decode to
-    null (same documented bound as the batch try_cast path)."""
+def test_over_precision_decimal_fails_the_read(spark):
+    """A 45-digit wire amount exceeds Spark's decimal(38,0): the read
+    fails naming the field and the record, instead of a null that would
+    drop the balance row without a trace."""
     codec = AvroCodec(avro_value_schema("token_balance"))
     row = dict(
         account="a", balance=D(10**44), block_timestamp=D(1),
@@ -247,8 +248,13 @@ def test_over_precision_decimal_decodes_null(spark):
     out = decode_topic_values(
         wire, TOKEN_BALANCE_SCHEMA, "avro",
         avro_schema_json=json.dumps(avro_value_schema("token_balance")),
-    ).first()
-    assert out["balance"] is None and out["account"] == "a"
+    )
+    with pytest.raises(
+        Exception,
+        match=r"record 0: field balance: 45-digit value does not fit "
+        r"decimal\(38,0\)",
+    ):
+        out.collect()
 
 
 def test_streaming_avro_serialization_leg(spark, tmp_path):

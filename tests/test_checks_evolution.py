@@ -1,16 +1,14 @@
-"""Data-quality constraint checking + schema-evolution-tolerant reads."""
+"""Data-quality constraint checking."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nearscan_kafka_streams_spark.functions.checks import (
     TableChecks,
     check_foreign_key,
     check_table,
 )
-from nearscan_kafka_streams_spark.sources.files import read_evolving
 
 
 def _report(df):
@@ -131,68 +129,3 @@ def test_check_table_single_scan(spark):
     assert plan.count("Range (0, 100") == 1
     assert "Union" not in plan
 
-
-def test_read_evolving_conforms_mixed_vintages(spark, tmp_path):
-    """Files written under additive schema versions read back under the
-    one canonical schema: missing columns are typed nulls, retired
-    columns are dropped, a narrower canonical type is cast."""
-    p = str(tmp_path / "evolving")
-    # v1: no `lang`, has retired column `legacy`
-    spark.createDataFrame(
-        [(1, "one", 7, "x")], ["doc_id", "text", "legacy", "src"]
-    ).write.mode("append").parquet(p)
-    # v2: adds lang, drops legacy
-    spark.createDataFrame(
-        [(2, "two", "en", "y")], ["doc_id", "text", "lang", "src"]
-    ).write.mode("append").parquet(p)
-
-    canonical = T.StructType(
-        [
-            T.StructField("doc_id", T.IntegerType()),  # cast down 8->4
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("quality", T.DoubleType()),  # nowhere yet
-        ]
-    )
-    out = read_evolving(spark, p, canonical)
-    assert [f.name for f in out.schema.fields] == [
-        "doc_id", "text", "lang", "quality",
-    ]
-    assert dict(out.dtypes) == {
-        "doc_id": "int", "text": "string",
-        "lang": "string", "quality": "double",
-    }
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[1]["lang"] is None and rows[1]["quality"] is None
-    assert rows[2]["lang"] == "en"
-    assert "legacy" not in out.columns
-
-
-def test_read_evolving_type_drift_is_actionable_error(spark, tmp_path):
-    """A TYPE change on an existing column across file vintages is a
-    breaking producer change: parquet merge rejects it, and the reader
-    surfaces an actionable error instead of raw CANNOT_MERGE_SCHEMAS."""
-    import pytest
-
-    p = str(tmp_path / "drift")
-    spark.createDataFrame(
-        [(1, "one")], ["doc_id", "text"]
-    ).write.mode("append").parquet(p)
-    spark.createDataFrame(
-        [(2, "two")],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.IntegerType()),
-                T.StructField("text", T.StringType()),
-            ]
-        ),
-    ).write.mode("append").parquet(p)
-
-    canonical = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    with pytest.raises(ValueError, match="additive-only"):
-        read_evolving(spark, p, canonical)

@@ -5,6 +5,8 @@ for the reference's wire format without a broker or connector jar."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -17,9 +19,13 @@ from nearscan_kafka_streams_spark.serde.avro import (
     confluent_frame,
     confluent_unframe,
 )
+from nearscan_kafka_streams_spark.serde.avro_vec import (
+    FrameError,
+    decode_frames,
+)
 from nearscan_kafka_streams_spark.sources.pyds import (
     ConfluentAvroDataSource,
-    _scan_frame_bodies,
+    _scan_segment,
     read_segments,
     write_framed_log,
 )
@@ -241,15 +247,35 @@ def _corrupt_segment(tmp_path, case, lane):
 
 
 def test_short_frame_rejected(tmp_path):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     data = _corrupt_segment(tmp_path, "short_frame", "vector").read_bytes()
     with pytest.raises(ValueError, match="shorter than magic"):
         confluent_unframe(b"\x00\x00\x00")
-    with pytest.raises(ValueError, match="shorter than magic"):
-        _scan_frame_bodies(data)
-    # the record before the short frame scans on its own
-    first = int.from_bytes(data[:4], "big")
-    _buf, starts, ends = _scan_frame_bodies(data[: 4 + first])
-    assert list(starts) == [4 + 5] and list(ends) == [4 + first]
+    buf, starts, ends = _scan_segment(data)
+    arrow = to_arrow_schema(N_S_SCHEMA)
+    with pytest.raises(FrameError, match="record 1: 3-byte frame") as err:
+        list(decode_frames(buf, starts, ends, N_S_AVRO["vector"], arrow))
+    assert err.value.record == 1
+    # the record before the short frame decodes on its own
+    (batch,) = decode_frames(buf, starts[:1], ends[:1], N_S_AVRO["vector"], arrow)
+    assert batch.to_pylist() == [{"n": 0, "s": "hello"}]
+
+
+def test_segment_over_binary_file_max_length_fails_naming_it(spark, tmp_path):
+    """A segment larger than ``spark.sql.sources.binaryFile.maxLength``
+    cannot arrive as one row: the read fails and names the file."""
+    path, _ = _stage_logs(spark, tmp_path, n_files=1)
+    seg = f"{path}/part-00000.bin"
+    size = os.path.getsize(seg)
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, str(size - 1))
+    try:
+        with pytest.raises(Exception, match=str(size)) as err:
+            _read_receipts(spark, path).collect()
+    finally:
+        spark.conf.unset(key)
+    assert "part-00000.bin" in str(err.value)
 
 
 @pytest.mark.parametrize("lane", ["vector", "row"])

@@ -400,6 +400,27 @@ def test_unversioned_store_behavior_unchanged(spark, tmp_path):
     assert _final(spark, target) == {"a": 2}
 
 
+def test_compacting_unversioned_store_archives_no_version(spark, tmp_path):
+    """Compaction of a store that keeps no versions must not start a
+    version log: the next commit's GC would drop the compacted
+    generation that an archived version still names."""
+    from nearscan_kafka_streams_spark.sinks.upsert import (
+        compact_store,
+        list_store_versions,
+        read_store_as_of,
+    )
+
+    target = str(tmp_path / "plain_compacted")
+    upsert = foreach_batch_upsert("account", target)
+    upsert(_mkbatch(spark, [("a", 1, 1), ("b", 10, 1)]), 0)
+    compact_store(spark, target)
+    upsert(_mkbatch(spark, [("a", 2, 2)]), 1)
+    for v in list_store_versions(target):
+        read_store_as_of(spark, target, v).collect()
+    assert not (Path(target) / "_versions").exists()
+    assert _final(spark, target) == {"a": 2, "b": 10}
+
+
 def test_store_changelog_between_versions(spark, tmp_path):
     from nearscan_kafka_streams_spark.sinks.upsert import store_changelog
 
